@@ -1,8 +1,11 @@
 # mirrors the reference's Makefile targets (reference Makefile:12-13)
 .PHONY: test bench pipeline clean
 
+# the tier-1 command of ROADMAP.md: all host CPUs, Spark scratch in /tmp
 test:
-	python -m pytest tests/ -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" \
+	  SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	python -m pytest tests/ -q -p no:cacheprovider
 
 bench:
 	python bench.py

@@ -43,9 +43,7 @@ HEADLINE = [
     "cosine_topk_embeddings", "transcripts_pipeline",
     "transcripts_conversation_stats",
     # production xxhash64 path (bench-only twin; the md5 twin above is the
-    # oracle-checked version). dedup_clusters_sf is NOT a headline: its
-    # cost is iteration-count × driver-round-trips (connected components),
-    # not per-row work, so it would measure the loop, not the operators.
+    # oracle-checked version).
     "minhash_neardup_xxhash_sf",
     # round-3 additions: corpus-wide line dedup and SemDeDup semantic
     # dedup — the two new dedup families get tracked timings.  The

@@ -60,11 +60,14 @@ LM_BROADCAST_MAX_ROWS = 2_000_000
 def _lm_join_side(df: DataFrame, broadcast: Union[bool, str],
                   n_rows: int) -> DataFrame:
     """Apply the model-side join policy: ``True`` forces the broadcast
-    hint, ``False`` never broadcasts, ``'auto'`` broadcasts iff the
-    materialized model has at most :data:`LM_BROADCAST_MAX_ROWS` rows
-    (the ``quality_classifier_frame`` auto-select precedent) — the
-    row count comes from the scorer's already-materialized checkpoint,
-    so the decision costs one metadata-cheap job, not a recount."""
+    hint, ``False`` only omits it, ``'auto'`` hints iff the materialized
+    model has at most :data:`LM_BROADCAST_MAX_ROWS` rows (the
+    ``quality_classifier_frame`` auto-select precedent) — the row count
+    comes from the scorer's already-materialized checkpoint, so the
+    decision costs one metadata-cheap job, not a recount.  Without the
+    hint the planner still chooses the join itself: a model whose size
+    estimate is under ``spark.sql.autoBroadcastJoinThreshold`` is
+    broadcast anyway."""
     if broadcast is True or (broadcast == "auto"
                              and n_rows <= LM_BROADCAST_MAX_ROWS):
         return F.broadcast(df)

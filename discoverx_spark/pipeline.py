@@ -297,55 +297,12 @@ def decide(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> DataFrame:
     )
 
 
-def decide_pandas(turns: pd.DataFrame,
-                  cfg: PipelineConfig = PipelineConfig()) -> pd.DataFrame:
-    """Driver-local reference implementation of :func:`decide` used by the
-    correctness oracle and tests.  Features come from the same
-    :func:`make_row_scorer` closure the UDF runs (so the check verifies the
-    Spark/Arrow plumbing end to end); the keep/drop gate logic is an
-    INDEPENDENT Python re-implementation of the JVM when-chains in
-    :func:`_drop_reasons` — divergence between the two is exactly what the
-    gate would catch.  ``drop_reasons`` is returned joined with ',' and
-    ``pii_counts`` as canonical sorted-key JSON so the output is hashable
-    by the driver's canonicalizer."""
-    import json
-
-    one = make_row_scorer(cfg.scrub_profile, cfg.toxicity_keywords)
-    out = []
-    for conv_id, turn_idx, role, text in zip(
-            turns["conv_id"], turns["turn_idx"], turns["role"], turns["text"]):
-        (scrubbed, counts, ppl, lang, lang_score, tox_hits, tox_score,
-         n_tokens, n_chars, is_blank) = one(text)
-        reasons = []
-        if is_blank:
-            reasons.append("empty")
-        if not is_blank and n_tokens < cfg.min_tokens:
-            reasons.append("too_short")
-        if n_chars > cfg.max_chars:
-            reasons.append("too_long")
-        substantive = (not is_blank) and n_tokens >= cfg.min_tokens
-        lang_ok = lang in cfg.allowed_langs
-        if substantive and not lang_ok:
-            reasons.append("non_target_lang")
-        if substantive and lang_ok and ppl > cfg.max_perplexity:
-            reasons.append("high_perplexity")
-        if tox_hits >= cfg.max_toxicity_hits:
-            reasons.append("toxicity")
-        out.append((
-            conv_id, int(turn_idx), role, lang, lang_score, ppl,
-            json.dumps(dict(sorted((counts or {}).items())),
-                       separators=(",", ":")),
-            tox_score, not reasons, ",".join(reasons),
-            scrubbed if scrubbed is not None else text,
-        ))
-    return pd.DataFrame(out, columns=DECISION_COLUMNS)
-
-
 def write_decisions(decisions: DataFrame, path: str,
                     partition_col: Optional[str] = None,
                     mode: str = "overwrite") -> None:
     """Write under the stable ordering invariant: rows sorted within each
-    file by (conv_id, turn_idx) (SURVEY §2.6)."""
+    file by (conv_id, turn_idx) (SURVEY §2.6).  The one decisions writer:
+    the bulk path and ``lineage.ResumableRunner`` both go through it."""
     out = decisions.sortWithinPartitions("conv_id", "turn_idx")
     writer = out.write.mode(mode)
     if partition_col:

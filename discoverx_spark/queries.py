@@ -71,10 +71,15 @@ def _t_par(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
         if os.path.isdir(path):
-            # Spark-written dataset directory: sum the data files (the
-            # inode size of the directory itself is meaningless)
-            size = sum(e.stat().st_size for e in os.scandir(path)
-                       if e.is_file() and not e.name.startswith(("_", ".")))
+            # Spark-written dataset directory: sum the data files, down
+            # through ``key=value/`` partition directories (the inode size
+            # of a directory is meaningless); like Spark's file index, skip
+            # hidden and metadata names (``_SUCCESS``, ``.crc``, ``_temporary``)
+            size = 0
+            for root, dirs, files in os.walk(path):
+                dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+                size += sum(os.path.getsize(os.path.join(root, f))
+                            for f in files if not f.startswith(("_", ".")))
         else:
             size = os.path.getsize(path)
     except OSError:
@@ -2896,17 +2901,6 @@ def q_minhash_neardup_xxhash_sf(spark, sf_dir):
         docs.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text"))
     return minhash_near_duplicates(both, "text", "doc_id", k=16, bands=8,
                                    threshold=0.7, hash_mode="xxhash64")
-
-
-def q_dedup_clusters_sf(spark, sf_dir):
-    """Bench-only: end-to-end xxhash near-dup clustering (LSH candidates →
-    verify → connected components) over documents ∪ clones."""
-    from .operators.dedup import dedup_clusters
-    docs = _t_par(spark, sf_dir, "documents").select("doc_id", "text")
-    both = docs.unionByName(
-        docs.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text"))
-    return dedup_clusters(both, "text", "doc_id", k=16, bands=8,
-                          threshold=0.7)
 
 
 def q_union_distinct_event_types(spark, sf_dir):

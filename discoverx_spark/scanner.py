@@ -284,7 +284,8 @@ class Scanner:
 
     Unlike the reference there is no driver thread pool: each table is one
     single-stage aggregate job and Spark's own task parallelism covers the
-    cluster; results are unioned as DataFrames, never collected to pandas.
+    cluster; the per-table results are unioned and collected once (C×R
+    score rows, never the data) into a local ScanResult frame.
     """
 
     def __init__(self, registry: TableRegistry,
@@ -317,4 +318,8 @@ class Scanner:
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        return ScanResult(df=out)
+        # materialized once: a lazy result would re-run the scan on every
+        # get_classes/save/action, re-sampling (``limit``) and re-reading
+        # tables that an action such as delete_by_class may have rewritten
+        return ScanResult(df=out.sparkSession.createDataFrame(
+            out.collect(), SCAN_RESULT_SCHEMA))

@@ -81,3 +81,36 @@ def test_timestamps_only_in_lineage(spark, bucketed_input, tmp_path):
     dec_cols = spark.read.parquet(os.path.join(out, "part_id=0")).columns
     assert "effective_timestamp" not in dec_cols
     assert "effective_timestamp" in runner.lineage().columns
+
+
+def test_partition_is_one_observed_write(spark, bucketed_input, tmp_path):
+    """A partition costs the input-schema read, the decisions write and the
+    metrics and lineage appends: no checkpoint, count or collect job — the
+    lineage counts and metric scores come from an Observation on the write."""
+    sc = spark.sparkContext
+    group = "lineage-one-partition"
+    runner = ResumableRunner(spark, str(tmp_path / "state"))
+    sc.setJobGroup(group, "one partition")
+    try:
+        runner.run(bucketed_input, str(tmp_path / "out"), CFG,
+                   partitions=["1"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 4, jobs
+    stages = [tracker.getStageInfo(s) for j in jobs
+              for s in tracker.getJobInfo(j).stageIds]
+    assert all(s.name.startswith("parquet at") for s in stages), \
+        [s.name for s in stages]
+
+    lin = runner.lineage().collect()
+    assert len(lin) == 1 and lin[0]["status"] == "done"
+    dec = spark.read.parquet(str(tmp_path / "out" / "part_id=1"))
+    assert lin[0]["rows_in"] == dec.count()
+    assert lin[0]["rows_kept"] == dec.filter(F.col("keep")).count()
+    scores = {r["class_name"]: r["score"] for r in runner.metrics().collect()}
+    assert scores["keep_rate"] == pytest.approx(
+        lin[0]["rows_kept"] / lin[0]["rows_in"])
+    assert scores["email"] == pytest.approx(
+        dec.filter(F.col("pii_counts")["email"] > 0).count() / dec.count())

@@ -1,14 +1,14 @@
 """The independent reference implementation (oracle_ref.reference_decide)
-must agree byte-for-byte with the production feature closure
-(pipeline.decide_pandas, which wraps make_row_scorer) — over the full
-flagship input AND adversarial edge strings.  A disagreement here means a
-real divergence the flagship oracle would then adjudicate."""
+must agree byte-for-byte with the production Spark ``decide()`` (the fused
+Arrow UDF plus the JVM keep/drop gates) — over the full flagship input AND
+adversarial edge strings.  A disagreement here means a real divergence the
+flagship oracle would then adjudicate."""
 
 import pandas as pd
-import pytest
+from pyspark.sql import functions as F
 
 from discoverx_spark.oracle_ref import reference_decide
-from discoverx_spark.pipeline import decide_pandas
+from discoverx_spark.pipeline import DECISION_COLUMNS, decide
 from discoverx_spark.transcripts import generate_transcripts_pandas
 
 EDGE_TEXTS = [
@@ -34,21 +34,40 @@ EDGE_TEXTS = [
 ]
 
 
-def test_reference_decide_matches_production_on_flagship_input():
+def spark_decide(spark, turns: pd.DataFrame) -> pd.DataFrame:
+    """Spark ``decide()`` in the flagship query's canonical form
+    (q_transcripts_pipeline): pii_counts as sorted-key JSON, drop_reasons
+    joined with ','; rows in input order."""
+    src = spark.createDataFrame(
+        turns[["conv_id", "turn_idx", "role", "text"]],
+        "conv_id string, turn_idx long, role string, text string")
+    d = decide(src).select(
+        "conv_id", "turn_idx", "role", "lang", "lang_score", "perplexity",
+        F.to_json(F.map_from_entries(F.array_sort(F.map_entries("pii_counts"))))
+        .alias("pii_counts"),
+        "toxicity_score", "keep",
+        F.array_join("drop_reasons", ",").alias("drop_reasons"),
+        "scrubbed_text")
+    out = d.toPandas().set_index(["conv_id", "turn_idx"])
+    return out.loc[list(zip(turns["conv_id"], turns["turn_idx"]))] \
+        .reset_index()[DECISION_COLUMNS]
+
+
+def test_reference_decide_matches_production_on_flagship_input(spark):
     pdf = generate_transcripts_pandas(300, seed=42)
-    a = reference_decide(pdf)
-    b = decide_pandas(pdf)
-    pd.testing.assert_frame_equal(a, b)
+    pd.testing.assert_frame_equal(reference_decide(pdf),
+                                  spark_decide(spark, pdf))
 
 
-def test_reference_decide_matches_production_on_edges():
+def test_reference_decide_matches_production_on_edges(spark):
     pdf = pd.DataFrame({
         "conv_id": [f"c{i}" for i in range(len(EDGE_TEXTS))],
         "turn_idx": list(range(len(EDGE_TEXTS))),
         "role": ["user"] * len(EDGE_TEXTS),
         "text": EDGE_TEXTS,
     })
-    pd.testing.assert_frame_equal(reference_decide(pdf), decide_pandas(pdf))
+    pd.testing.assert_frame_equal(reference_decide(pdf),
+                                  spark_decide(spark, pdf))
 
 
 def test_reference_decide_is_feature_independent():

@@ -449,3 +449,23 @@ def test_lm_broadcast_auto_policy(spark, monkeypatch):
     assert kn_big.count("BroadcastExchange") == 1
     assert ("SortMergeJoin" in sb_big) or ("ShuffledHashJoin" in sb_big)
     assert ("SortMergeJoin" in kn_big) or ("ShuffledHashJoin" in kn_big)
+
+
+def test_t_par_sizes_partitioned_datasets_recursively(spark, tmp_path,
+                                                      monkeypatch):
+    """A ``key=value/`` partitioned dataset keeps its data files one level
+    down: _t_par must size them there, so an input above the per-slot
+    threshold is read as is, with no round-robin repartition."""
+    from discoverx_spark import queries
+
+    spark.range(200).select("id", (F.col("id") % 4).alias("key")) \
+        .write.partitionBy("key").parquet(str(tmp_path / "parts.parquet"))
+
+    def plan():
+        return queries._t_par(spark, str(tmp_path), "parts") \
+            ._jdf.queryExecution().executedPlan().toString()
+
+    monkeypatch.setattr(queries, "_PAR_MIN_BYTES_PER_SLOT", 1 << 30)
+    assert "RoundRobinPartitioning" in plan()  # small input: spread it
+    monkeypatch.setattr(queries, "_PAR_MIN_BYTES_PER_SLOT", 1)
+    assert "RoundRobinPartitioning" not in plan()

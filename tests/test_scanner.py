@@ -130,3 +130,20 @@ def test_scan_handles_special_char_column_names(spark):
     assert ("ip.v2", "ip_v4") in classes
     rows = dx.search("1.2.3.4", by_class="ip_v4").collect()
     assert len(rows) == 1 and rows[0]["classified"] == {"ip_v4": "1.2.3.4"}
+
+
+def test_scan_result_is_materialized_once(spark, tb_1, tmp_path):
+    """The scan result is computed at scan time: rewriting a scanned table
+    afterwards (as a confirmed delete_by_class does) leaves the classes
+    resolved from it unchanged."""
+    path = str(tmp_path / "tb_1")
+    tb_1.write.parquet(path)
+    reg = TableRegistry()
+    reg.register("main.default.tb_1", lambda: spark.read.parquet(path))
+    res = Scanner(reg, locale="us").scan("*.*.*")
+    before = res.get_classes()
+    assert ("main", "default", "tb_1", "ip", "ip_v4") in before
+
+    tb_1.withColumn("ip", F.lit("not an address")).write.mode(
+        "overwrite").parquet(path)
+    assert res.get_classes() == before
