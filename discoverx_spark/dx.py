@@ -47,8 +47,23 @@ class DX:
         return self
 
     def register_parquet(self, full_name: str, path: str) -> "DX":
-        self.registry.register(
-            full_name, lambda p=path: self.spark.read.parquet(p))
+        """Register a parquet dataset by path.  The first read of the table
+        infers its schema from a file footer (one Spark job) and records
+        it; every later read passes that schema, so no action pays the
+        footer job again.  Registration itself reads nothing.  As with a
+        metastore entry, a change to the files' schema needs a
+        re-register."""
+        schema = None
+
+        def read() -> DataFrame:
+            nonlocal schema
+            reader = (self.spark.read if schema is None
+                      else self.spark.read.schema(schema))
+            df = reader.parquet(path)
+            schema = df.schema
+            return df
+
+        self.registry.register(full_name, read)
         return self
 
     # -- rules (reference dx.py:70-98) ---------------------------------------

@@ -166,10 +166,11 @@ class DataExplorer:
             cat, sch, tbl = name.split(".")
             view = f"dxs_exp_{cat}_{sch}_{tbl}".replace("-", "_")
             try:
-                # fetch ONCE per table (register_parquet suppliers re-read
-                # schema per get); rewrite only FROM/JOIN positions — a
-                # whole-statement replace would corrupt provenance
-                # literals like '{full_table_name}' in the select list
+                # fetch ONCE per table (a supplier may build a new frame
+                # and list its files again per get); rewrite only
+                # FROM/JOIN positions — a whole-statement replace would
+                # corrupt provenance literals like '{full_table_name}' in
+                # the select list
                 src = self.registry.get(name)
                 src.createOrReplaceTempView(view)
                 sql = _re.sub(r"(?i)\b(FROM|JOIN)\s+" + _re.escape(name)

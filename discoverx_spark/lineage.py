@@ -16,7 +16,8 @@ continues).  Re-targeted at partitions of one huge table per SURVEY §7 M4:
   because every partition job is a pure function of its input split and
   the config, a resumed run produces byte-identical decisions.
 
-A partition is one observed write plus two tiny appends: the decisions go
+A partition is one observed write plus two tiny appends (the run infers the
+input schema once, from the first partition it reads): the decisions go
 out through :func:`pipeline.write_decisions` (the bulk path's writer) with a
 ``pyspark.sql.Observation`` attached, so that single job also yields the
 row counts and per-class rates; the lineage and metrics rows are built on
@@ -109,15 +110,13 @@ class ResumableRunner:
         # ONLY a missing path means "fresh start" — swallowing every
         # exception here would turn a transient read failure into a
         # silent full reprocess (with duplicate lineage/metrics appends).
-        # mergeSchema: a state_dir written before snapshot-id tracking has
-        # 6-column files alongside new 7-column appends; without schema
-        # merge an arbitrary footer wins and the snapshot_id column
-        # nondeterministically disappears, silently reprocessing every
-        # partition on pinned resume
+        # The declared schema skips footer inference, and a state_dir
+        # written before snapshot-id tracking (6-column files) reads its
+        # snapshot_id as NULL next to the 7-column appends.
         from .scanner import _read_parquet_if_exists
 
         return _read_parquet_if_exists(self.spark, self.lineage_path,
-                                       mergeSchema="true")
+                                       schema=LINEAGE_SCHEMA)
 
     def metrics(self, latest_only: bool = True) -> Optional[DataFrame]:
         """Per-(partition, class) metrics.  ``latest_only`` (default)
@@ -128,7 +127,8 @@ class ResumableRunner:
         being deterministic, identical)."""
         from .scanner import _read_parquet_if_exists
 
-        m = _read_parquet_if_exists(self.spark, self.metrics_path)
+        m = _read_parquet_if_exists(self.spark, self.metrics_path,
+                                    schema=METRICS_SCHEMA)
         if m is None:
             return None
         if latest_only:
@@ -145,18 +145,15 @@ class ResumableRunner:
         (time-travel-shaped resume: when the source Iceberg/parquet table
         advances to a new snapshot, work done against older snapshots is
         stale and gets reprocessed; legacy NULL-snapshot rows likewise
-        don't count)."""
+        don't count).  One job: the 'done' rows are collected and reduced
+        on the driver."""
         lin = self.lineage()
         if lin is None:
             return set()
+        done = lin.filter(F.col("status") == "done")
         if snapshot_id is not None:
-            if "snapshot_id" not in lin.columns:
-                return set()
-            lin = lin.filter(F.col("snapshot_id") == int(snapshot_id))
-        rows = (lin.groupBy("partition_id")
-                .agg(F.max(F.when(F.col("status") == "done", 1).otherwise(0)).alias("ok"))
-                .filter(F.col("ok") == 1).collect())
-        return {r["partition_id"] for r in rows}
+            done = done.filter(F.col("snapshot_id") == int(snapshot_id))
+        return {r["partition_id"] for r in done.select("partition_id").collect()}
 
     def _append(self, path: str, rows: list, schema: str) -> None:
         """Append driver-side rows as one parquet file.  The rows travel as
@@ -197,6 +194,7 @@ class ResumableRunner:
         todo = partitions if partitions is not None else list_partitions(input_path)
         done = self.completed_partitions(snapshot_id)
         report = RunReport(processed=[], skipped=[], failed={})
+        schema = None  # inferred by the first read, then given to the rest
         for part in todo:
             if part in done:
                 report.skipped.append(part)
@@ -204,8 +202,11 @@ class ResumableRunner:
             try:
                 if fail_on is not None and fail_on(part):
                     raise RuntimeError(f"injected failure for partition {part}")
-                src = self.spark.read.parquet(
+                reader = (self.spark.read if schema is None
+                          else self.spark.read.schema(schema))
+                src = reader.parquet(
                     os.path.join(input_path, f"part_id={part}"))
+                schema = src.schema
                 obs = Observation()
                 write_decisions(decide(src, cfg).observe(
                     obs, *_partition_aggregates()),

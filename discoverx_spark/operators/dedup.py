@@ -27,6 +27,7 @@ from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 # --------------------------------------------------------------------------
@@ -1132,13 +1133,18 @@ def dedup_keep_best(df: DataFrame, text_col: str, id_col: str,
     whichever was crawled first, not whichever is most complete.
 
     One shuffle on the fingerprint; the election is a
-    ``min(struct(score_null_flag, -score, id))`` inside the aggregate
-    (map-side partial) — max score wins, NULL scores lose to scored
-    rows, ties keep the smallest id — then a left-semi join back on
-    (fingerprint, id), no window over text-carrying rows.  The id rides
-    the election struct UNTRANSFORMED, so any orderable id type works
-    (a string id under the previous ``-id`` negation cast to NULL and
-    silently emptied the result — ADVICE r5).  ``score`` must be
+    ``min(struct(rank, desc_score, id))`` inside the aggregate (map-side
+    partial), then a left-semi join back on (fingerprint, id), no window
+    over text-carrying rows.  ``rank`` orders numbers before NaN before
+    NULL: max score wins, a NaN score loses to every number and beats
+    only NULL, ties keep the smallest id.  The order is reversed without
+    integer negation: an integral score goes through bitwise NOT
+    (``~x = -x - 1`` maps the type's range onto itself, so
+    ``Long.MIN_VALUE`` cannot overflow under ANSI mode); a fractional or
+    decimal score takes a sign flip, which is exact for those types.
+    The id rides the election struct UNTRANSFORMED, so any orderable id
+    type works (a string id under the previous ``-id`` negation cast to
+    NULL and silently emptied the result — ADVICE r5).  ``score`` must be
     numeric.  Returns the surviving rows plus ``dup_count``.
     """
     from ..functions.text import fingerprint_expr
@@ -1148,11 +1154,15 @@ def dedup_keep_best(df: DataFrame, text_col: str, id_col: str,
         F.col(text_col).alias("_text"),
         score.alias("_score"),
         fingerprint_expr(text_col).alias("_fp"))
+    s = F.col("_score")
+    kind = keyed.schema["_score"].dataType
+    desc = F.bitwise_not(s) if isinstance(kind, T.IntegralType) else -s
+    nan = (F.isnan(s) if isinstance(kind, (T.FloatType, T.DoubleType))
+           else F.lit(False))
+    rank = F.when(s.isNull(), 2).when(nan, 1).otherwise(0)
     best = (keyed.groupBy("_fp")
-            .agg(F.min(F.struct(
-                F.col("_score").isNull().cast("int").alias("nf"),
-                F.coalesce(-F.col("_score"), F.lit(0)).alias("ns"),
-                F.col("id").alias("id"))).alias("_b"),
+            .agg(F.min(F.struct(rank.alias("rank"), desc.alias("ds"),
+                                F.col("id").alias("id"))).alias("_b"),
                  F.count(F.lit(1)).alias("dup_count"))
             .select("_fp", F.col("_b.id").alias("id"), "dup_count"))
     return (keyed.join(best, ["_fp", "id"])

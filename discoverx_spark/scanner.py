@@ -21,16 +21,24 @@ disappears entirely.
 Output schema matches the reference ScanResult
 (``scanner.py:92``): ``table_catalog, table_schema, table_name,
 column_name, class_name, score``.
+
+Scan state is driver-local, as the reference keeps it in a small metadata
+table: a scan collects its score rows once, and :class:`ScanResult` holds
+them as a ``LocalRelation`` (an Arrow table shipped with the plan), so
+class lookups run no Spark job and ``save`` merges on the driver and
+writes once.  The bound is the row count, tables × string columns × rules
+(2 tables × 10 columns × 18 rules = 360 rows), never the data.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from datetime import datetime, timezone
 from fnmatch import fnmatch
 from typing import Callable, Dict, List, Optional, Sequence, Union
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .rules import RegexRule, Rules
@@ -39,18 +47,25 @@ def qcol(df: DataFrame, name: str):
     """Column of ``df`` by EXACT name — backtick-quoted so special-char
     names (the reference scans a column literally called ``ip.v2``,
     conftest.py:140-146) are not parsed as struct-field paths."""
-    return df["`" + name.replace("`", "``") + "`"]
+    return df[_sql_ident(name)]
 
 
-def _read_parquet_if_exists(spark: SparkSession, path: str, **options):
+def _read_parquet_if_exists(spark: SparkSession, path: str,
+                            schema: Union[T.StructType, str, None] = None,
+                            **options):
     """Read parquet, or None ONLY when the path does not exist.  Any other
     read failure (corrupt footer, permission, transient FS error) propagates
     — treating it as "first write" would silently overwrite and discard all
-    previously persisted state (MERGE-upsert must never be lossy)."""
+    previously persisted state (MERGE-upsert must never be lossy).  A
+    declared ``schema`` skips the footer-inference job; columns it names
+    that a file lacks read as NULL."""
     from pyspark.errors import AnalysisException
 
     try:
-        df = spark.read.options(**options).parquet(path)
+        reader = spark.read.options(**options)
+        if schema is not None:
+            reader = reader.schema(schema)
+        df = reader.parquet(path)
         df.schema  # force analysis so a missing path surfaces here
         return df
     except AnalysisException as e:
@@ -68,6 +83,39 @@ SCAN_RESULT_SCHEMA = T.StructType([
     T.StructField("class_name", T.StringType()),
     T.StructField("score", T.DoubleType()),
 ])
+# the persisted state: a scan result plus the time each row was saved
+SCAN_STATE_SCHEMA = T.StructType(SCAN_RESULT_SCHEMA.fields + [
+    T.StructField("effective_timestamp", T.TimestampType())])
+_KEY = SCAN_RESULT_SCHEMA.names[:5]
+_ARROW_RESULT = pa.schema([(k, pa.string()) for k in _KEY]
+                          + [("score", pa.float64())])
+_ARROW_STATE = _ARROW_RESULT.append(
+    pa.field("effective_timestamp", pa.timestamp("us", tz="UTC")))
+
+
+def _local_frame(spark: SparkSession, rows: Sequence[Sequence],
+                 schema: pa.Schema = _ARROW_RESULT) -> DataFrame:
+    """Driver-side rows as a ``LocalRelation``: built from an Arrow table,
+    the frame carries its rows in the plan, so collecting or filtering it
+    runs no Spark job (a Python list through ``createDataFrame`` becomes
+    an RDD scan that costs a job per action)."""
+    cols = list(zip(*rows)) or [()] * len(schema)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+        schema=schema))
+
+
+def _sql_string(value: str) -> str:
+    """``value`` as a Spark SQL string literal under the default parser
+    (``spark.sql.parser.escapedStringLiterals=false``): every backslash
+    and quote is escaped, so the parser returns ``value`` unchanged."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted identifier: a dotted name such as
+    ``ip.v2`` stays one column, not a struct-field path."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def string_columns(df: DataFrame, column_filter: str = "*") -> List[str]:
@@ -106,80 +154,85 @@ def classify_scores(
     if not rules:
         raise ValueError("no rules to scan for")
 
-    # df[c] (not F.col) so special-char column names like `ip.v2` resolve
-    # (reference fixture conftest.py:140-146 scans exactly such a column)
-    scan = df.select(*[qcol(df, c).alias(c) for c in cols])
+    # compiled to SQL strings: one selectExpr each for the projection, the
+    # C×R aggregates and the unpivot, instead of a dozen Py4J Column calls
+    # per (column, rule) cell; names are backtick-quoted so special-char
+    # columns like `ip.v2` (reference conftest.py:140-146) resolve
+    scan = df.selectExpr(*[f"{_sql_ident(c)} AS {_sql_ident(c)}"
+                           for c in cols])
     if sample_fraction is not None:
         scan = scan.sample(fraction=float(sample_fraction), seed=seed)
     elif sample_size is not None:
         scan = scan.limit(int(sample_size))  # TABLESAMPLE (N ROWS) analog, scanner.py:338
 
-    aggs, meta = [], []
+    aggs, cells = [], []
     for ci, c in enumerate(cols):
         for ri, r in enumerate(rules):
             alias = f"m_{ci}_{ri}"
-            aggs.append(
-                F.avg(F.regexp_like(qcol(scan, c), F.lit(r.pattern)).cast("int")).alias(alias)
-            )
-            meta.append((alias, c, r.name))
-    one_row = scan.agg(*aggs)
-
-    cells = F.array(*[
-        F.struct(
-            F.lit(c).alias("column_name"),
-            F.lit(rule_name).alias("class_name"),
-            F.col(alias).cast("double").alias("score"),
-        )
-        for alias, c, rule_name in meta
-    ])
-    return (
-        one_row.select(F.explode(cells).alias("cell"))
-        .select(
-            F.lit(table_catalog).alias("table_catalog"),
-            F.lit(table_schema).alias("table_schema"),
-            F.lit(table_name).alias("table_name"),
-            "cell.column_name", "cell.class_name", "cell.score",
-        )
-    )
+            aggs.append(f"avg(CAST(regexp_like({_sql_ident(c)}, "
+                        f"{_sql_string(r.pattern)}) AS INT)) AS {alias}")
+            cells.append(f"struct({_sql_string(c)} AS column_name, "
+                         f"{_sql_string(r.name)} AS class_name, "
+                         f"CAST({alias} AS DOUBLE) AS score)")
+    return scan.selectExpr(*aggs).selectExpr(
+        f"{_sql_string(table_catalog)} AS table_catalog",
+        f"{_sql_string(table_schema)} AS table_schema",
+        f"{_sql_string(table_name)} AS table_name",
+        f"inline(array({', '.join(cells)}))")
 
 
 @dataclass
 class ScanResult:
-    """Scan output + class resolution (reference scanner.py:37-126)."""
+    """Scan output + class resolution (reference scanner.py:37-126).
+
+    ``df`` is driver-local when it comes from :meth:`Scanner.scan` or
+    :meth:`load`: a ``LocalRelation`` of tables × string columns × rules
+    rows, so :meth:`get_classes` runs no Spark job.  Any frame with
+    ``SCAN_RESULT_SCHEMA`` works (a lazy one is computed per call)."""
 
     df: DataFrame
 
     def get_classes(self, min_score: float = 0.95):
         """[(table_catalog, table_schema, table_name, column, class)] with
-        score ≥ min_score (reference scanner.py:57-68)."""
-        rows = (
-            self.df.filter(F.col("score").isNotNull() & (F.col("score") >= min_score))
-            .select("table_catalog", "table_schema", "table_name",
-                    "column_name", "class_name")
-            .collect()
-        )
-        return [tuple(r) for r in rows]
+        score ≥ min_score (reference scanner.py:57-68), filtered on the
+        driver."""
+        return [tuple(r[k] for k in _KEY) for r in self.df.collect()
+                if r["score"] is not None and r["score"] >= min_score]
 
     def save(self, path: str) -> None:
         """Idempotent upsert keyed on (catalog, schema, table, column, class)
         — Delta-MERGE semantics (reference scanner.py:103-119) emulated over
-        parquet: new rows replace matching keys, others are preserved."""
+        parquet: new rows replace matching keys, others are preserved with
+        their ``effective_timestamp``; new rows get the save time.
+
+        Both sides are small, so the merge runs on the driver: one job
+        reads the old state with the declared schema (none when ``path``
+        does not exist yet), one writes new ∪ kept.  The old rows are
+        collected before the overwrite starts, so rewriting the path that
+        was read is safe without a checkpoint."""
         spark = self.df.sparkSession
-        new = self.df.withColumn("effective_timestamp", F.current_timestamp())
-        key = ["table_catalog", "table_schema", "table_name",
-               "column_name", "class_name"]
-        old = _read_parquet_if_exists(spark, path)
-        if old is None:
-            merged = new
-        else:
-            merged = old.join(new.select(*key), on=key,
-                              how="left_anti").unionByName(new)
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
+        now = datetime.now(timezone.utc)
+        # collect, not toArrow: toArrow runs a job even on a LocalRelation
+        new = [tuple(r[k] for k in SCAN_RESULT_SCHEMA.names) + (now,)
+               for r in self.df.collect()]
+        replaced = {r[:5] for r in new}
+        old = _read_parquet_if_exists(spark, path, schema=SCAN_STATE_SCHEMA)
+        # toArrow here: its timestamps stay UTC instants, where collect
+        # would return naive local times to convert back
+        kept = [] if old is None else [
+            row for row in (tuple(d.values())
+                            for d in old.toArrow().to_pylist())
+            if row[:5] not in replaced]
+        (_local_frame(spark, kept + new, _ARROW_STATE)
+         .write.mode("overwrite").parquet(path))
 
     @staticmethod
     def load(spark: SparkSession, path: str) -> "ScanResult":
-        df = spark.read.parquet(path).drop("effective_timestamp")
-        return ScanResult(df=df)
+        """The saved state as a driver-local result: one read with the
+        declared schema, no footer inference."""
+        table = (spark.read.schema(SCAN_STATE_SCHEMA).parquet(path)
+                 .drop("effective_timestamp").toArrow())
+        return ScanResult(df=spark.createDataFrame(table.cast(_ARROW_RESULT)))
 
 
 class TableRegistry:
@@ -321,5 +374,4 @@ class Scanner:
         # materialized once: a lazy result would re-run the scan on every
         # get_classes/save/action, re-sampling (``limit``) and re-reading
         # tables that an action such as delete_by_class may have rewritten
-        return ScanResult(df=out.sparkSession.createDataFrame(
-            out.collect(), SCAN_RESULT_SCHEMA))
+        return ScanResult(df=_local_frame(out.sparkSession, out.collect()))

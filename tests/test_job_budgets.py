@@ -1,0 +1,115 @@
+"""Spark job budgets of the DX control plane and the resumable runner.
+
+A Spark job costs a few hundred milliseconds on a local session whatever
+its size, and the job count repeats exactly from run to run, so each
+budget below is asserted exactly (``completed_partitions`` as a ceiling).
+Jobs are counted through a job tag read back from the status tracker.
+"""
+
+import uuid
+
+import pytest
+
+from discoverx_spark.dx import DX
+from discoverx_spark.lineage import ResumableRunner, write_bucketed
+from discoverx_spark.pipeline import PipelineConfig
+from discoverx_spark.transcripts import generate_transcripts
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` -> (number of Spark jobs ``fn()`` started, its
+    result)."""
+    sc = spark.sparkContext
+    jvm_sc = sc._jsc.sc()
+
+    def count(fn):
+        tag = f"budget-{uuid.uuid4().hex}"
+        sc.addJobTag(tag)
+        try:
+            out = fn()
+        finally:
+            sc.removeJobTag(tag)
+        jvm_sc.listenerBus().waitUntilEmpty()
+        return len(jvm_sc.statusTracker().getJobIdsForTag(tag)), out
+
+    return count
+
+
+@pytest.fixture(scope="module")
+def tables(spark, tmp_path_factory):
+    base = tmp_path_factory.mktemp("budget_tables")
+    users = spark.createDataFrame(
+        [(i, f"10.0.{i % 7}.{i % 250}", f"user{i}@example.org", "a note")
+         for i in range(120)],
+        "id int, ip string, email string, note string")
+    logins = spark.createDataFrame(
+        [(i, f"user{i}@example.org") for i in range(40)],
+        "id int, email string")
+    paths = {"main.crm.users": str(base / "users"),
+             "main.web.logins": str(base / "logins")}
+    users.write.parquet(paths["main.crm.users"])
+    logins.write.parquet(paths["main.web.logins"])
+    return paths
+
+
+def _dx(spark, tables):
+    dx = DX(spark, locale="us")
+    for name, path in tables.items():
+        dx.register_parquet(name, path)
+    return dx
+
+
+def test_register_parquet_reads_one_footer_per_table(spark, tables,
+                                                     count_jobs):
+    dx = DX(spark, locale="us")
+    n, _ = count_jobs(lambda: [dx.register_parquet(name, path)
+                               for name, path in tables.items()])
+    assert n == 0                    # registration reads nothing
+    n, first = count_jobs(lambda: dx.registry.get("main.crm.users"))
+    assert n == 1                    # the footer, on the first read
+    n, again = count_jobs(lambda: [dx.registry.get("main.crm.users")
+                                   for _ in range(3)])
+    assert n == 0                    # later reads pass the recorded schema
+    assert all(df.schema == first.schema for df in again)
+
+
+def test_scan_and_class_lookups(spark, tables, count_jobs):
+    dx = _dx(spark, tables)
+    for name in tables:
+        dx.registry.get(name)        # footers paid up front
+    # one partial-aggregate shuffle job per table, one collect
+    n, res = count_jobs(dx.scan)
+    assert n == 3
+    n, classes = count_jobs(res.get_classes)
+    assert n == 0
+    assert ("main", "crm", "users", "email", "email") in classes
+    n, rows = count_jobs(res.df.collect)
+    assert n == 0 and len(rows) == (3 + 1) * len(dx.rules.get_rules("*"))
+
+
+def test_save_writes_once_and_merges_in_two_jobs(spark, tables, tmp_path,
+                                                 count_jobs):
+    dx = _dx(spark, tables)
+    dx.scan()
+    path = str(tmp_path / "state")
+    n, _ = count_jobs(lambda: dx.save(path))
+    assert n == 1                    # the write; a missing path is no read
+    n, _ = count_jobs(lambda: dx.save(path))
+    assert n == 2                    # one declared-schema read, one write
+    n, loaded = count_jobs(lambda: dx.load(path))
+    assert n == 1
+    n, _ = count_jobs(loaded.get_classes)
+    assert n == 0
+
+
+def test_completed_partitions_is_one_job(spark, tmp_path, count_jobs):
+    src = str(tmp_path / "src")
+    write_bucketed(generate_transcripts(spark, 8, seed=3), src, n_buckets=2)
+    runner = ResumableRunner(spark, str(tmp_path / "state"))
+    n, done = count_jobs(runner.completed_partitions)
+    assert n == 0 and done == set()  # no lineage yet: nothing to read
+    runner.run(src, str(tmp_path / "out"), PipelineConfig())
+    for snapshot_id in (None, 4):
+        n, _ = count_jobs(lambda: runner.completed_partitions(snapshot_id))
+        assert n <= 1

@@ -84,33 +84,65 @@ def test_timestamps_only_in_lineage(spark, bucketed_input, tmp_path):
 
 
 def test_partition_is_one_observed_write(spark, bucketed_input, tmp_path):
-    """A partition costs the input-schema read, the decisions write and the
-    metrics and lineage appends: no checkpoint, count or collect job — the
-    lineage counts and metric scores come from an Observation on the write."""
+    """A fresh partition costs the decisions write and the metrics and
+    lineage appends: no checkpoint, count or collect job — the lineage
+    counts and metric scores come from an Observation on the write.  The
+    run infers the input schema once: three partitions spend one footer
+    job in total."""
     sc = spark.sparkContext
-    group = "lineage-one-partition"
+    group = "lineage-three-partitions"
     runner = ResumableRunner(spark, str(tmp_path / "state"))
-    sc.setJobGroup(group, "one partition")
+    sc.setJobGroup(group, "three partitions")
     try:
-        runner.run(bucketed_input, str(tmp_path / "out"), CFG,
-                   partitions=["1"])
+        rep = runner.run(bucketed_input, str(tmp_path / "out"), CFG,
+                         partitions=["0", "1", "2"])
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rep.processed == ["0", "1", "2"]
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker = sc.statusTracker()
     jobs = tracker.getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 4, jobs
+    assert len(jobs) == 1 + 3 * 3, jobs
     stages = [tracker.getStageInfo(s) for j in jobs
               for s in tracker.getJobInfo(j).stageIds]
     assert all(s.name.startswith("parquet at") for s in stages), \
         [s.name for s in stages]
 
-    lin = runner.lineage().collect()
-    assert len(lin) == 1 and lin[0]["status"] == "done"
+    lin = {r["partition_id"]: r for r in runner.lineage().collect()}
+    assert sorted(lin) == ["0", "1", "2"]
+    assert all(r["status"] == "done" for r in lin.values())
     dec = spark.read.parquet(str(tmp_path / "out" / "part_id=1"))
-    assert lin[0]["rows_in"] == dec.count()
-    assert lin[0]["rows_kept"] == dec.filter(F.col("keep")).count()
-    scores = {r["class_name"]: r["score"] for r in runner.metrics().collect()}
+    assert lin["1"]["rows_in"] == dec.count()
+    assert lin["1"]["rows_kept"] == dec.filter(F.col("keep")).count()
+    scores = {r["class_name"]: r["score"] for r in runner.metrics()
+              .filter(F.col("partition_id") == "1").collect()}
     assert scores["keep_rate"] == pytest.approx(
-        lin[0]["rows_kept"] / lin[0]["rows_in"])
+        lin["1"]["rows_kept"] / lin["1"]["rows_in"])
     assert scores["email"] == pytest.approx(
         dec.filter(F.col("pii_counts")["email"] > 0).count() / dec.count())
+
+
+@pytest.mark.parametrize("snapshot_id", [None, 9])
+def test_legacy_lineage_file_resumes_as_before(spark, bucketed_input,
+                                               tmp_path, snapshot_id):
+    """A state dir holding only a 6-column lineage file (written before
+    snapshot-id tracking) reads its snapshot_id as NULL: an unpinned run
+    skips the partition it marks done, a pinned run reprocesses it."""
+    runner = ResumableRunner(spark, str(tmp_path / "state"))
+    spark.createDataFrame(
+        [("0", "done", 10, 10, 0, None), ("1", "failed", 0, 0, 0, "boom")],
+        "partition_id string, status string, rows_in long, rows_kept long, "
+        "rows_dropped long, error string").withColumn(
+            "effective_timestamp", F.current_timestamp()).coalesce(1) \
+        .write.parquet(runner.lineage_path)
+    lin = runner.lineage()
+    assert lin.columns[-2:] == ["snapshot_id", "effective_timestamp"]
+    assert lin.filter(F.col("snapshot_id").isNotNull()).count() == 0
+
+    rep = runner.run(bucketed_input, str(tmp_path / "out"), CFG,
+                     partitions=["0", "1"], snapshot_id=snapshot_id)
+    if snapshot_id is None:
+        assert rep.skipped == ["0"] and rep.processed == ["1"]
+    else:
+        assert rep.skipped == [] and rep.processed == ["0", "1"]
+    assert runner.completed_partitions(snapshot_id) == {"0", "1"}

@@ -147,3 +147,72 @@ def test_scan_result_is_materialized_once(spark, tb_1, tmp_path):
     tb_1.withColumn("ip", F.lit("not an address")).write.mode(
         "overwrite").parquet(path)
     assert res.get_classes() == before
+
+
+def test_classify_scores_quotes_hostile_patterns_and_names(spark):
+    """Patterns and column names reach Spark exactly: a rule pattern with
+    a quote and backslashes, a column name with a backtick and a dotted
+    one.  Each score is the non-null match fraction, recomputed with
+    Python ``re`` (``regexp_like`` is a search, as ``re.search``)."""
+    import re
+
+    from discoverx_spark.rules import RegexRule
+
+    rules = [RegexRule("quote_word", "a quote inside a word",
+                       r"^[a-z]+'[a-z\\]+$"),
+             RegexRule("back'slash", "a literal backslash", "\\\\"),
+             RegexRule("digits", "a digit class", r"\d{2}")]
+    values = {
+        "we`ird": ["it's", "o'k\\", "plain", None, "12"],
+        "ip.v2": ["a\\b", "'q'", None, None, "x'y"],
+        "plain": ["no", "99 red", "don't", "c:\\dir", None],
+    }
+    names = list(values)
+    rows = list(zip(*values.values()))
+    df = spark.createDataFrame(rows, names)
+    got = scores_dict(classify_scores(df, rules, sample_size=None,
+                                      table_name="t"))
+    assert len(got) == len(names) * len(rules)
+    for c in names:
+        seen = [v for v in values[c] if v is not None]
+        for r in rules:
+            expect = sum(bool(re.search(r.pattern, v)) for v in seen) / len(seen)
+            assert got[(c, r.name)] == expect, (c, r.name)
+    assert got[("we`ird", "quote_word")] == 2 / 4
+    assert got[("ip.v2", "back'slash")] == 1 / 3
+
+
+def test_save_merge_keeps_old_keys_and_their_timestamps(spark, tb_1,
+                                                         tmp_path):
+    """A second save replaces the keys it carries (new score, new
+    effective_timestamp) and keeps every other key as it was."""
+    from discoverx_spark.scanner import SCAN_STATE_SCHEMA
+
+    path = str(tmp_path / "state")
+    reg = TableRegistry()
+    reg.register("main.default.tb_1", tb_1)
+    reg.register("main.other.tb_2", tb_1.select("id", "mac"))
+    Scanner(reg, locale="us").scan("*.*.*").save(path)
+
+    def state():
+        return {tuple(r[:5]): (r["score"], r["effective_timestamp"])
+                for r in spark.read.schema(SCAN_STATE_SCHEMA)
+                .parquet(path).collect()}
+
+    first = state()
+    rescan = Scanner(reg, locale="us").scan("main.default.*")
+    rescan.save(path)
+    second = state()
+    assert set(second) == set(first)
+    new_keys = {tuple(r[:5]) for r in rescan.df.collect()}
+    assert new_keys and new_keys < set(first)
+    for key, (score, ts) in second.items():
+        assert score == first[key][0]
+        if key in new_keys:
+            assert ts > first[key][1]
+        else:
+            assert ts == first[key][1]
+    loaded = ScanResult.load(spark, path)
+    assert sorted(loaded.get_classes()) == sorted(
+        (k[0], k[1], k[2], k[3], k[4]) for k, (s, _) in first.items()
+        if s is not None and s >= 0.95)

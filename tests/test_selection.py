@@ -132,3 +132,32 @@ def test_dedup_keep_best_string_ids(spark):
     out = dedup_keep_best(df, "text", "cid", F.col("q")).collect()
     got = {r["id"]: (r["score"], r["dup_count"]) for r in out}
     assert got == {"conv-c": (9, 3), "conv-e": (1, 2)}
+
+
+def test_dedup_keep_best_hostile_scores(spark):
+    """The election never negates an integral score: Long.MIN_VALUE is a
+    valid (lowest) score under ANSI mode, not an ARITHMETIC_OVERFLOW.
+    Pinned ranks: numbers beat NaN, NaN beats NULL, ties keep the
+    smallest id."""
+    from pyspark.sql import functions as F
+
+    from discoverx_spark.operators.dedup import dedup_keep_best
+
+    lo, hi = -(1 << 63), (1 << 63) - 1
+    longs = spark.createDataFrame(
+        [(1, "a", None), (2, "a", lo), (3, "b", None), (4, "b", None),
+         (5, "c", hi), (6, "c", lo), (7, "c", hi), (8, "d", lo)],
+        "doc_id long, text string, q long")
+    got = {r["id"]: (r["score"], r["dup_count"]) for r in
+           dedup_keep_best(longs, "text", "doc_id", F.col("q")).collect()}
+    assert got == {2: (lo, 2), 3: (None, 2), 5: (hi, 3), 8: (lo, 1)}
+
+    nan = float("nan")
+    doubles = spark.createDataFrame(
+        [(1, "a", nan), (2, "a", -1e308), (3, "b", None), (4, "b", nan),
+         (5, "b", nan), (6, "c", nan), (7, "c", float("-inf")),
+         (8, "d", None), (9, "d", None)],
+        "doc_id long, text string, q double")
+    got = {r["id"]: r["dup_count"] for r in
+           dedup_keep_best(doubles, "text", "doc_id", F.col("q")).collect()}
+    assert got == {2: 2, 4: 3, 7: 2, 8: 2}
