@@ -379,21 +379,35 @@ def _reference_rule_fixtures(path: str = REFERENCE_RULES_PATH) -> list:
     return out
 
 
-def keep_drop_f1() -> float:
+def reference_fixtures() -> list:
+    """The reference rule fixtures, or an error that names the setting:
+    ``main`` calls this before measuring anything, so a missing reference
+    checkout ends the run at once instead of after both phases."""
+    try:
+        fixtures = _reference_rule_fixtures(REFERENCE_RULES_PATH)
+    except FileNotFoundError as e:
+        raise FileNotFoundError(
+            f"reference rules file {REFERENCE_RULES_PATH!r} not found: set "
+            "SPARK_GRAFT_REFERENCE_RULES to the reference rules.py "
+            "(keep_drop_f1 needs it)") from e
+    if not fixtures:
+        raise RuntimeError(f"no rules parsed from {REFERENCE_RULES_PATH}")
+    return fixtures
+
+
+def keep_drop_f1(fixtures: list) -> float:
     """Classification F1 of THIS repo's rule registry vs the REFERENCE's
     labels: every match/nomatch example from the reference corpus
-    (reference rules.py:114-510, parsed from the module source) is labeled
-    by the reference's own pattern (re.match) and predicted by our
-    same-named rule.  A transcription error or drift in our registry —
-    including a missing rule — lowers the score."""
+    (reference rules.py:114-510, parsed from the module source by
+    :func:`reference_fixtures`) is labeled by the reference's own pattern
+    (re.match) and predicted by our same-named rule.  A transcription
+    error or drift in our registry — including a missing rule — lowers
+    the score."""
     import re
 
     from discoverx_spark.rules import GLOBAL_RULES, LOCALIZED_RULES
 
     ours = {r.name: r for r in list(GLOBAL_RULES) + list(LOCALIZED_RULES["us"])}
-    fixtures = _reference_rule_fixtures()
-    if not fixtures:
-        raise RuntimeError(f"no rules parsed from {REFERENCE_RULES_PATH}")
     tp = fp = fn = 0
     for name, pattern, match_ex, nomatch_ex in fixtures:
         ref = re.compile(pattern)
@@ -411,6 +425,7 @@ BUDGET_SEC = int(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC", "660"))
 
 
 def main() -> None:
+    fixtures = reference_fixtures()
     t_start = time.perf_counter()
     os.makedirs(SCRATCH, exist_ok=True)
     tpath = os.path.join(SCRATCH, "transcripts_bench")
@@ -530,7 +545,7 @@ def main() -> None:
         "metric": "headline_queries_total_sec",
         "value": total,
         "unit": "sec",
-        "keep_drop_f1": round(keep_drop_f1(), 6),
+        "keep_drop_f1": round(keep_drop_f1(fixtures), 6),
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "sf_dir": SF_DIR,

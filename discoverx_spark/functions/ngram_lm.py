@@ -18,17 +18,20 @@ special cases).
 
 Spark shape — this is the part KenLM cannot do and Spark does naturally:
 
-* **Training** is one vocabulary-shaped aggregation per order:
-  explode n-grams → ``groupBy(gram)`` with map-side combine, shuffle
+* **Training** is ONE vocabulary-shaped aggregation for every order:
+  each token position explodes into its ``(gram, n)`` keys for
+  n = 1..order → one ``groupBy(gram, n)`` with map-side combine, shuffle
   bounded by distinct-n-gram count.  The counts DataFrame **is** the
   model: persist with plain parquet, prune with a ``min_count`` filter,
   re-load anywhere (the same save/load seam as functions/models.py).
 * **Scoring** is join-based and 100% JVM-side: the position frame
-  (id, pos, w₋₂, w₋₁, w) left-joins the (pruned, broadcastable) count
-  tables; one ``coalesce`` chain implements backoff; a sorted-position
+  (id, pos, w₋₂, w₋₁, w) left-joins ONE (pruned, broadcastable) model
+  relation ``(gram, cnt)`` five times — the gram string alone fixes its
+  order, so every lookup reads the same table and one broadcast serves
+  them all; one ``coalesce`` chain implements backoff; a sorted-position
   fold gives a deterministic float sum.  No Python worker ever sees the
-  model — at 10⁵-10⁶ retained n-grams the count tables broadcast in a
-  few MB, and the corpus text itself never shuffles.
+  model — at 10⁵-10⁶ retained n-grams the table broadcasts in a few MB,
+  and the corpus text itself never shuffles.
 
 The trigram key joins guarantee referential soundness: a seen trigram
 implies its context bigram is seen (the prefix of every counted n-gram
@@ -40,7 +43,7 @@ from __future__ import annotations
 
 from typing import Union
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .text import tokens_sql_expr as _tokens
@@ -63,11 +66,12 @@ def _lm_join_side(df: DataFrame, broadcast: Union[bool, str],
     hint, ``False`` only omits it, ``'auto'`` hints iff the materialized
     model has at most :data:`LM_BROADCAST_MAX_ROWS` rows (the
     ``quality_classifier_frame`` auto-select precedent) — the row count
-    comes from the scorer's already-materialized checkpoint, so the
-    decision costs one metadata-cheap job, not a recount.  Without the
-    hint the planner still chooses the join itself: a model whose size
-    estimate is under ``spark.sql.autoBroadcastJoinThreshold`` is
-    broadcast anyway."""
+    comes from the scorer's probe of its checkpointed model (Stupid
+    Backoff reads it from the same observed job that materializes the
+    checkpoint and sums the unigram total, so the decision costs no job
+    of its own).  Without the hint the planner still chooses the join
+    itself: a model whose size estimate is under
+    ``spark.sql.autoBroadcastJoinThreshold`` is broadcast anyway."""
     if broadcast is True or (broadcast == "auto"
                              and n_rows <= LM_BROADCAST_MAX_ROWS):
         return F.broadcast(df)
@@ -79,16 +83,18 @@ def word_ngram_counts(df: DataFrame, text_col: str, order: int = 3,
     """(gram, n, cnt) counts for all orders 1..``order`` — the trained
     model, as a DataFrame.
 
-    ONE corpus pass for every order (guide §1.2 — was one explode +
-    groupBy per order, i.e. ``order`` full passes): each token position
+    ONE corpus pass and ONE aggregation for every order (Brants et al.
+    2007 count all orders in a single pass): each token position
     explodes once with its ``order-1`` left-context words (NULL-padded
-    at the document start), one map-side-combined groupBy over the
-    padded context key counts every position, and each order's counts
-    are an exact type-bounded rollup of that table — the count of gram
-    (w₁..wₙ) is the sum of position counts whose last n slots match it,
-    which the sub-groupBy computes without touching the corpus again.
-    Shuffle is bounded by distinct padded-context counts, never corpus
-    size.  ``min_count`` prunes the long tail (entropy pruning's cheap
+    at the document start), then once more into its ``(gram, n)`` keys —
+    the gram of order n ends at the position's word and exists iff the
+    word n-1 slots back is not NULL padding — and one map-side-combined
+    ``groupBy(gram, n)`` counts them all.  Shuffle is bounded by the
+    distinct-n-gram count, never corpus size.  An n-gram is its tokens
+    joined by single spaces; tokens are ``\\S+`` matches and hold no
+    ASCII space, so a gram has exactly n-1 spaces and the string alone
+    fixes its order (the scorer keys its single model lookup on that).
+    ``min_count`` prunes the long tail (entropy pruning's cheap
     cousin): pruning only REMOVES grams, so backoff soundness
     (prefix-of-counted-gram-is-counted) is preserved as long as the
     same threshold applies to every order."""
@@ -102,34 +108,16 @@ def word_ngram_counts(df: DataFrame, text_col: str, order: int = 3,
     slots = [F.slice(padded, j + 1, F.greatest(n_toks, F.lit(1)))
              .alias(f"c{order - 1 - j}") for j in range(order)]
     zipped = F.arrays_zip(*slots)
-    rows = (df.select(F.explode(F.when(n_toks >= 1, zipped)).alias("s"))
-            .select(*[F.col(f"s.c{i}").alias(f"_c{i}")
-                      for i in range(order - 1, -1, -1)]))
-    keys = [f"_c{i}" for i in range(order - 1, -1, -1)]  # oldest first
-    ctx = (rows.groupBy(*keys).agg(F.count(F.lit(1)).alias("_cnt"))
-           .localCheckpoint(eager=False))
-    parts = []
-    for n in range(1, order + 1):
-        sub = ctx
-        if n < order:
-            sub = sub.groupBy(*keys[order - n:]) \
-                .agg(F.sum("_cnt").alias("_cnt"))
-        else:
-            # highest order: rows whose full context exists
-            sub = sub.filter(F.col(keys[0]).isNotNull())
-        if n > 1:
-            # any NULL in the last n slots marks a shorter-than-n
-            # position (document head) — not an order-n gram
-            sub = sub.filter(F.col(keys[order - n]).isNotNull())
-        gram = F.concat_ws(" ", *keys[order - n:]) if n > 1 \
-            else F.col(keys[-1])
-        parts.append(sub.select(gram.alias("gram"),
-                                F.lit(n).alias("n"),
-                                F.col("_cnt").cast("long").alias("cnt")))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.filter(F.col("cnt") >= min_count)
+    rows = df.select(F.explode(F.when(n_toks >= 1, zipped)).alias("s"))
+    ctx = [F.col(f"s.c{k}") for k in range(order)]  # c0 = the word itself
+    keys = F.array(*[F.struct(
+        F.when(ctx[n - 1].isNotNull(),
+               F.concat_ws(" ", *reversed(ctx[:n]))).alias("gram"),
+        F.lit(n).alias("n")) for n in range(1, order + 1)])
+    return (rows.select(F.inline(keys))
+            .filter(F.col("gram").isNotNull())
+            .groupBy("gram", "n").agg(F.count(F.lit(1)).alias("cnt"))
+            .filter(F.col("cnt") >= min_count))
 
 
 def stupid_backoff_score(df: DataFrame, text_col: str, id_col: str,
@@ -146,38 +134,51 @@ def stupid_backoff_score(df: DataFrame, text_col: str, id_col: str,
     re-tokenize per position), so each exploded row carries only
     (id, pos, w₋₂, w₋₁, w); ``posexplode_outer`` keeps empty documents
     as one null-position row, so no second scan + join-back is needed to
-    restore them (guide §2.4).  ``broadcast`` picks the model-side join
-    strategy: ``'auto'`` (default) broadcasts the count tables only while
-    the model is at most :data:`LM_BROADCAST_MAX_ROWS` rows and falls
-    back to plain gram-key joins beyond — an unpruned web-scale count
-    table must never ride a forced broadcast hint.  The per-doc mean
-    folds ln S in position order (deterministic float association, the
+    restore them (guide §2.4).  All five count lookups (trigram, its
+    context bigram, bigram, its context unigram, unigram) join the SAME
+    model relation ``(gram, cnt)`` on ``gram``: tokens are ``\\S+``
+    matches with no ASCII space, so a gram joined by single spaces has
+    exactly n-1 spaces and its string alone fixes its order — the
+    lookups need no per-order slice, and adaptive execution builds one
+    broadcast and reuses it for the other four.  The unigram total N
+    enters the plan as a literal.  ``broadcast`` picks the model-side
+    join strategy: ``'auto'`` (default) broadcasts the model only while
+    it is at most :data:`LM_BROADCAST_MAX_ROWS` rows and falls back to
+    plain gram-key joins beyond — an unpruned web-scale count table
+    must never ride a forced broadcast hint.  The per-doc mean folds
+    ln S in position order (deterministic float association, the
     BM25/classifier policy).  Empty docs yield ``sb_ppl = NULL`` with
     ``n_tokens = 0``."""
-    # the model feeds SIX branches below (c1×2, c2×2, c3, total): without
-    # a lineage cut, a caller passing the raw word_ngram_counts plan would
-    # re-run the training aggregation once per branch.  A lazy
-    # localCheckpoint makes the operator self-sufficient — the counts RDD
-    # materializes once at first use and every branch scans it (the
-    # scoring plan shows ExistingRDD scans, no training aggregates;
-    # plan-tested).  Already-checkpointed input costs one cheap re-cache
-    # of a pruned, broadcast-sized table.
-    # coalesce the union's per-order shuffle partitions (narrow, no
-    # shuffle) so the checkpoint scan, the auto probe and the six
-    # broadcast builds each run cluster-parallelism tasks, not
-    # 6 × shuffle.partitions micro-tasks
+    # the model feeds the probe and five lookups below: without a lineage
+    # cut, a caller passing the raw word_ngram_counts plan would re-run
+    # the training aggregation once per branch.  A lazy localCheckpoint
+    # makes the operator self-sufficient — the counts RDD materializes
+    # once, in the probe, and every lookup scans it (the scoring plan
+    # shows ExistingRDD scans, no training aggregates; plan-tested).
+    # Already-checkpointed input costs one cheap re-cache of a pruned,
+    # broadcast-sized table.  Coalescing the aggregation's shuffle
+    # partitions (narrow, no shuffle) keeps the checkpoint scan, the
+    # probe and the broadcast build at cluster-parallelism tasks.
     counts = counts.coalesce(
         df.sparkSession.sparkContext.defaultParallelism) \
         .localCheckpoint(eager=False)
-    n_model = counts.count() if broadcast == "auto" else 0
-    side = lambda sdf: _lm_join_side(sdf, broadcast, n_model)  # noqa: E731
-    c1 = counts.filter(F.col("n") == 1).select(
-        F.col("gram").alias("_g1"), F.col("cnt").alias("_c1"))
-    c2 = counts.filter(F.col("n") == 2).select(
-        F.col("gram").alias("_g2"), F.col("cnt").alias("_c2"))
-    c3 = counts.filter(F.col("n") == 3).select(
-        F.col("gram").alias("_g3"), F.col("cnt").alias("_c3"))
-    total = c1.agg(F.sum("_c1").alias("_n_total"))
+    # ONE job materializes the checkpoint and brings back, observed, the
+    # model size for the 'auto' policy and the unigram total N (NULL for
+    # a model without unigrams, as an empty sum was); a global agg +
+    # collect would add a shuffle stage, a second job
+    probe = Observation()
+    counts.observe(probe, F.count(F.lit(1)).alias("rows"),
+                   F.sum(F.when(F.col("n") == 1, F.col("cnt")))
+                   .alias("total")) \
+        .write.format("noop").mode("overwrite").save()
+    seen = probe.get
+    n_model, n_total = seen["rows"], seen["total"]
+    model = counts.select("gram", "cnt")
+
+    def lookup(gram: str, cnt: str) -> DataFrame:
+        return _lm_join_side(model.select(F.col("gram").alias(gram),
+                                          F.col("cnt").alias(cnt)),
+                             broadcast, n_model)
 
     toks = _tokens(text_col)
     padded = F.concat(F.array(F.lit(None).cast("string"),
@@ -202,24 +203,22 @@ def stupid_backoff_score(df: DataFrame, text_col: str, id_col: str,
         rows
         .withColumn("_tri", tri).withColumn("_ctx2", ctx2)
         .withColumn("_big", big)
-        .join(side(c3), F.col("_tri") == F.col("_g3"), "left")
-        .join(side(c2.select(F.col("_g2").alias("_g2a"),
-                             F.col("_c2").alias("_c2a"))),
-              F.col("_ctx2") == F.col("_g2a"), "left")
-        .join(side(c2), F.col("_big") == F.col("_g2"), "left")
-        .join(side(c1.select(F.col("_g1").alias("_g1a"),
-                             F.col("_c1").alias("_c1a"))),
-              F.col("_w1") == F.col("_g1a"), "left")
-        .join(side(c1), F.col("_w") == F.col("_g1"), "left")
-        .crossJoin(F.broadcast(total)))
+        .join(lookup("_g3", "_c3"), F.col("_tri") == F.col("_g3"), "left")
+        .join(lookup("_g2a", "_c2a"), F.col("_ctx2") == F.col("_g2a"),
+              "left")
+        .join(lookup("_g2", "_c2"), F.col("_big") == F.col("_g2"), "left")
+        .join(lookup("_g1a", "_c1a"), F.col("_w1") == F.col("_g1a"),
+              "left")
+        .join(lookup("_g1", "_c1"), F.col("_w") == F.col("_g1"), "left"))
     lam2 = float(lam) * float(lam)
+    total = F.lit(n_total).cast("long")
     s = F.when(F.col("_c3").isNotNull(),
                F.col("_c3") / F.col("_c2a")) \
         .when(F.col("_c2").isNotNull(),
               F.lit(float(lam)) * F.col("_c2") / F.col("_c1a")) \
         .when(F.col("_c1").isNotNull(),
-              F.lit(lam2) * F.col("_c1") / F.col("_n_total")) \
-        .otherwise(F.lit(lam2 * SB_OOV_NUMERATOR) / F.col("_n_total"))
+              F.lit(lam2) * F.col("_c1") / total) \
+        .otherwise(F.lit(lam2 * SB_OOV_NUMERATOR) / total)
     # a null-position row (empty doc) contributes neither to the count
     # nor to the fold — count("_ls") skips its NULL, the when() keeps it
     # out of the list — and 0-token docs come out as 0.0/0 = NULL ppl,

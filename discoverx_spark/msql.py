@@ -25,10 +25,14 @@ from dataclasses import dataclass
 from fnmatch import fnmatch
 from typing import Dict, List, Optional, Tuple
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .scanner import ScanResult, TableRegistry, qcol
+from .scanner import ScanResult, TableRegistry, _local_frame, qcol
+
+_DELETE_SUMMARY = pa.schema([("table", pa.string()), ("column", pa.string()),
+                             ("num_deleted", pa.int64())])
 
 _CLASS_RX = re.compile(r"\[([\w_-]+)\]")
 _FROM_RX = re.compile(
@@ -228,8 +232,10 @@ def delete_by_class(spark: SparkSession, registry: TableRegistry,
                     yes_i_am_sure: bool = False):
     """Compile per-table delete plans: rows whose ``by_class`` column is in
     ``values`` are removed.  Returns a summary DataFrame
-    ``(table, num_deleted)`` and, when confirmed, a dict of surviving
-    DataFrames to rewrite — the what-if guard mirrors ``dx.py:376-388``."""
+    ``(table, column, num_deleted)``, one row per classified candidate
+    column and counted in one Spark job when the call is made, and, when
+    confirmed, a dict of surviving DataFrames to rewrite — the what-if
+    guard mirrors ``dx.py:376-388``."""
     pat_parts = from_tables.split(".")
     if len(pat_parts) != 3:
         # zip() would silently truncate a malformed pattern and BROADEN
@@ -240,7 +246,7 @@ def delete_by_class(spark: SparkSession, registry: TableRegistry,
             f"allowed), got {from_tables!r}")
     classes = [c for c in scan.get_classes(min_score) if c[4] == by_class]
     plans = {}
-    counts = []
+    hits = []
     cand_rows = []
     cols_by_name: Dict[str, List[str]] = {}
     for cat, sch, tbl, col, _k in classes:
@@ -250,12 +256,9 @@ def delete_by_class(spark: SparkSession, registry: TableRegistry,
             continue
         df = registry.get(name)
         cond = qcol(df, col).isin(values)
-        # one unioned agg instead of a count() action per table: the
-        # matched-row counts come back from a single Spark job however many
-        # tables are classified
+        hits.append(df.filter(cond).select(
+            F.lit(len(cand_rows)).alias("_cand")))
         cand_rows.append((name, col))
-        counts.append(df.filter(cond).select(
-            F.lit(name).alias("table"), F.lit(col).alias("column")))
         cols_by_name.setdefault(name, []).append(col)
     if yes_i_am_sure:
         # ONE plan per table over ALL its classified columns: a per-column
@@ -269,25 +272,29 @@ def delete_by_class(spark: SparkSession, registry: TableRegistry,
                 k = ~c.isin(values) | c.isNull()
                 keep = k if keep is None else (keep & k)
             plans[name] = df.filter(keep)
-    if not counts:
-        summary = spark.createDataFrame(
-            [], "table string, column string, num_deleted long")
-    else:
-        unioned = counts[0]
-        for c in counts[1:]:
-            unioned = unioned.unionByName(c)
-        agg = unioned.groupBy("table", "column").agg(
-            F.count("*").cast("long").alias("num_deleted"))
-        cand = spark.createDataFrame(cand_rows, "table string, column string")
-        summary = (cand.join(agg, on=["table", "column"], how="left")
-                   .withColumn("num_deleted",
-                               F.coalesce("num_deleted", F.lit(0).cast("long"))))
+    num_deleted: List[int] = []
+    if hits:
+        # every candidate's matched-row count in ONE Spark job, however
+        # many tables are classified: a union of the filtered scans,
+        # observed with one count_if per candidate, into a noop sink
+        unioned = hits[0]
+        for h in hits[1:]:
+            unioned = unioned.unionByName(h)
+        obs = Observation()
+        unioned.observe(obs, *[
+            F.count_if(F.col("_cand") == i).alias(f"n{i}")
+            for i in range(len(hits))
+        ]).write.format("noop").mode("overwrite").save()
+        seen = obs.get
+        num_deleted = [seen[f"n{i}"] for i in range(len(hits))]
+    # driver-local, so the summary is PRE-delete by construction: the
+    # caller may materialize the surviving plans back over the source
+    # paths without changing it
+    summary = _local_frame(
+        spark, [(name, col, n) for (name, col), n
+                in zip(cand_rows, num_deleted)], _DELETE_SUMMARY)
     if not yes_i_am_sure:
         return summary, None  # what-if mode: nothing is rewritten
-    # pin the summary to PRE-delete state: the caller will materialize the
-    # surviving plans back over the source paths, and a lazy summary
-    # evaluated afterwards would count post-delete data (num_deleted = 0)
-    summary = summary.localCheckpoint(eager=True)
     return summary, plans
 
 

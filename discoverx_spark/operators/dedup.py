@@ -46,9 +46,17 @@ def shingles_expr(col, n: int = 3) -> Column:
     per-element ``element_at`` lambdas: Catalyst inlines outer array
     expressions into lambda bodies, so an element-indexed formulation
     re-tokenizes the text once per shingle per reference (measured 60×
-    slowdown).  Here the token array is referenced a constant number of
-    times per row."""
-    toks = tokens_expr(col)
+    slowdown).  The token array still appears in the built expression
+    about 3n times (every shifted slice, size and zip step holds a copy),
+    and Catalyst inlines each copy, so a caller that cannot afford
+    re-tokenizing puts the tokens behind a Generate barrier and calls
+    :func:`_shingles_of` on the generated attribute (``span_dedup``)."""
+    return _shingles_of(tokens_expr(col), n)
+
+
+def _shingles_of(toks: Column, n: int) -> Column:
+    """Shingles of the token array ``toks`` (see :func:`shingles_expr`):
+    documents with fewer than ``n`` tokens yield one whole-text gram."""
     joined = toks
     for j in range(1, n):
         shifted = F.slice(toks, j + 1, F.size(toks))
@@ -1022,15 +1030,19 @@ def span_dedup(df: DataFrame, text_col: str, id_col: str,
         raise ValueError(
             f"min_span_tokens ({min_span_tokens}) must be >= window "
             f"({window}) — a duplicated window already spans that many")
-    # gram matching tokenizes LOWERCASED text (tokens_expr via
-    # shingles_expr); the rebuild tokenizes the ORIGINAL text with the
-    # same \S+ boundaries — lowercasing never changes token boundaries,
-    # so positions align between the two sides by construction
-    toks_lower = tokens_expr(text_col)
+    # gram matching tokenizes LOWERCASED text (tokens_expr); the rebuild
+    # tokenizes the ORIGINAL text with the same \S+ boundaries —
+    # lowercasing never changes token boundaries, so positions align
+    # between the two sides by construction
     toks_orig = F.regexp_extract_all(F.col(text_col), F.lit(r"(\S+)"), 1)
     base = df.select(F.col(id_col).alias("id"), toks_orig.alias("_toks"))
 
-    grams = shingles_expr(F.col(text_col), n=window)
+    # Generate barrier (the chunk_documents pattern): _tl is the explode's
+    # OUTPUT attribute, so the shingle expression's ~3×window references
+    # to the token array read it instead of each re-running the regex
+    tokd = df.select(F.col(id_col).alias("id"),
+                     F.explode(F.array(tokens_expr(text_col))).alias("_tl"))
+    grams = _shingles_of(F.col("_tl"), window)
     if hash_mode == "gram":
         key = lambda g: g  # noqa: E731 - oracle-replayable identity key
     elif hash_mode == "xxhash64":
@@ -1045,11 +1057,11 @@ def span_dedup(df: DataFrame, text_col: str, id_col: str,
         raise ValueError(
             f"span_dedup hash_mode must be 'gram' or 'xxhash64', "
             f"got {hash_mode!r}")
-    occs = (df.select(F.col(id_col).alias("id"),
-                      F.posexplode(F.when(F.size(toks_lower) >= window,
-                                          grams)
-                                   .otherwise(F.slice(grams, 1, 0)))
-                      .alias("pos", "gram"))
+    occs = (tokd.select("id",
+                        F.posexplode(F.when(F.size("_tl") >= window,
+                                            grams)
+                                     .otherwise(F.slice(grams, 1, 0)))
+                        .alias("pos", "gram"))
             .select("id", "pos", key(F.col("gram")).alias("_k")))
     # NOTE (r6, measured): pre-partitioning occs on _k so the election
     # and the duplicate join share one exchange (the bm25 pattern) was

@@ -1855,7 +1855,8 @@ _SB_MIN_COUNT = 2
 def q_ngram_lm_counts_documents(spark, sf_dir):
     """Distributed word-trigram LM training (the KenLM 'train on your
     corpus' role at scale): (gram, n, cnt) for orders 1-3 with the
-    min_count=2 prune — one vocabulary-bounded groupBy per order."""
+    min_count=2 prune — one vocabulary-bounded groupBy(gram, n) for all
+    three orders."""
     from .functions.ngram_lm import word_ngram_counts
     docs = _t(spark, sf_dir, "documents")
     return word_ngram_counts(docs, "text", order=3,
@@ -1895,9 +1896,10 @@ def q_stupid_backoff_documents(spark, sf_dir):
     from .functions.ngram_lm import stupid_backoff_score, word_ngram_counts
     docs = _t_par(spark, sf_dir, "documents").select("doc_id", "text")
     # the scorer localCheckpoints the model internally (self-sufficient:
-    # its six join branches scan one materialized RDD instead of each
-    # re-running the training aggregation); production would persist the
-    # counts as parquet and scan them back
+    # its probe and five lookups scan one materialized RDD instead of each
+    # re-running the training aggregation, and the lookups share one
+    # broadcast); production would persist the counts as parquet and scan
+    # them back
     counts = word_ngram_counts(docs, "text", order=3,
                                min_count=_SB_MIN_COUNT)
     out = stupid_backoff_score(docs, "text", "doc_id", counts)

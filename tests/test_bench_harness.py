@@ -42,3 +42,20 @@ def test_scaling_plan_sets_pin_on_this_host():
     for cpu_list in (plan["high_set"], plan["low_set"]):
         subprocess.run(["taskset", "-c", cpu_list, sys.executable, "-c", ""],
                        check=True)
+
+
+def test_missing_reference_rules_fail_before_measuring(tmp_path, monkeypatch):
+    """The F1 fixtures are parsed first: a missing reference rules file
+    stops ``main`` with an error naming the setting, before any phase."""
+    missing = str(tmp_path / "no_such_rules.py")
+    monkeypatch.setattr(bench, "REFERENCE_RULES_PATH", missing)
+
+    def measured(*_a, **_kw):
+        raise AssertionError("a phase started before the fixture check")
+
+    monkeypatch.setattr(bench, "prepare_transcripts", measured)
+    monkeypatch.setattr(bench, "run_headline", measured)
+    with pytest.raises(FileNotFoundError,
+                       match="SPARK_GRAFT_REFERENCE_RULES") as err:
+        bench.main()
+    assert missing in str(err.value)

@@ -11,6 +11,8 @@ import uuid
 import pytest
 
 from discoverx_spark.dx import DX
+from discoverx_spark.functions.ngram_lm import (stupid_backoff_score,
+                                                word_ngram_counts)
 from discoverx_spark.lineage import ResumableRunner, write_bucketed
 from discoverx_spark.pipeline import PipelineConfig
 from discoverx_spark.transcripts import generate_transcripts
@@ -113,3 +115,37 @@ def test_completed_partitions_is_one_job(spark, tmp_path, count_jobs):
     for snapshot_id in (None, 4):
         n, _ = count_jobs(lambda: runner.completed_partitions(snapshot_id))
         assert n <= 1
+
+
+def test_delete_what_if_counts_in_one_job(spark, tables, count_jobs):
+    dx = _dx(spark, tables)
+    res = dx.scan()
+    candidates = [(f"{c}.{s}.{t}", col)
+                  for c, s, t, col, k in res.get_classes() if k == "email"]
+    assert len(candidates) == 2
+    # user100 exists only in users (logins holds ids 0-39)
+    n, (summary, plans) = count_jobs(lambda: dx.delete_by_class(
+        "*.*.*", "email", ["user100@example.org", "nobody@example.org"]))
+    assert n == 1 and plans is None
+    n, rows = count_jobs(summary.collect)
+    assert n == 0
+    want = {"main.crm.users": 1, "main.web.logins": 0}
+    assert [tuple(r) for r in rows] == [(t, c, want[t])
+                                        for t, c in candidates]
+    assert summary.columns == ["table", "column", "num_deleted"]
+
+
+def test_stupid_backoff_trains_and_scores_in_budget(spark, count_jobs):
+    docs = spark.createDataFrame(
+        [(1, "the cat sat on the mat"), (2, "the cat ran"), (3, ""),
+         (4, "a mat")], "doc_id long, text string")
+    # building the scorer trains the model (its map-side shuffle) and
+    # probes the checkpoint once for the model size and unigram total
+    n, scored = count_jobs(lambda: stupid_backoff_score(
+        docs, "text", "doc_id", word_ngram_counts(docs, "text")))
+    assert n == 2
+    # scoring: one broadcast of the model for all five lookups, the
+    # per-document fold's shuffle, the result
+    n, rows = count_jobs(scored.collect)
+    assert n == 3
+    assert len(rows) == 4

@@ -138,10 +138,10 @@ def test_pack_sequences_single_window_exchange(spark):
 
 
 def test_stupid_backoff_trains_once(spark):
-    """The scorer's six model branches (c1×2, c2×2, c3, total) must scan
-    ONE materialized counts RDD, not re-run the training aggregation per
-    branch — the operator localCheckpoints internally, so even a caller
-    passing the raw word_ngram_counts plan trains once."""
+    """The scorer's five model lookups (and its size/total probe) must
+    scan ONE materialized counts RDD, not re-run the training aggregation
+    per branch — the operator localCheckpoints internally, so even a
+    caller passing the raw word_ngram_counts plan trains once."""
     from discoverx_spark.functions.ngram_lm import (stupid_backoff_score,
                                                     word_ngram_counts)
 
@@ -152,10 +152,10 @@ def test_stupid_backoff_trains_once(spark):
         ._jdf.queryExecution().executedPlan().toString()
     # the model branches read the checkpointed RDD ...
     assert "ExistingRDD" in plan
-    # ... and the training explode+groupBy-per-order pipeline appears
+    # ... and the training explode + groupBy(gram, n) pipeline appears
     # nowhere: the only aggregates left are the per-doc fold's
-    # partial+final pair (un-checkpointed, six branches × three orders
-    # would put dozens of HashAggregates here)
+    # partial+final pair (un-checkpointed, every lookup would carry its
+    # own training aggregation)
     assert plan.count("HashAggregate") <= 4
 
 
@@ -208,8 +208,9 @@ def test_registry_wide_plan_budgets(spark):
         # (id,bucket) groupBy + fold groupBy + empty-doc restore join —
         # every shuffle bounded by B buckets or one row per doc
         "dsir_weights_documents": 13, "dsir_resample_documents": 13,
-        # five broadcast count-table joins + total agg + per-doc fold
-        # groupBy + empty-doc restore join (model checkpointed once)
+        # five lookups of one broadcast model relation (the unigram
+        # total is a literal) + per-doc fold groupBy (model checkpointed
+        # once; empty docs survive the posexplode_outer, no restore join)
         "stupid_backoff_documents": 9,
         # six broadcast stat-slice joins off the checkpointed model +
         # per-doc fold groupBy + empty-doc restore join
@@ -401,14 +402,29 @@ def test_chunk_documents_tokenizes_once(spark):
     assert opt.count("regexp_extract_all") == 1
 
 
+def test_span_dedup_tokenizes_once(spark):
+    """The lowercase token array sits behind a Generate barrier, so the
+    shingle expression's references to it read an attribute: one regex
+    per scan of the occurrence stream (the gram election and the
+    duplicate join each scan it) plus the rebuild's original-case one.
+    Inlined, the window=8 plan held 75 calls."""
+    from discoverx_spark.operators.dedup import span_dedup
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    opt = span_dedup(docs, "text", "doc_id", window=8) \
+        ._jdf.queryExecution().optimizedPlan().toString()
+    assert opt.count("regexp_extract_all") == 3
+
+
 def test_lm_broadcast_auto_policy(spark, monkeypatch):
     """broadcast='auto' keys the model-side JOIN STRATEGY off the
     materialized model row count (VERDICT r5 #1): under the threshold
-    the six stat slices ride broadcast hash joins; over it (threshold
-    patched to 0 to simulate a web-scale trigram table) NO model slice
-    is broadcast — the only BroadcastExchange left is the 1-row totals
-    frame — so a 10⁹-row model can never OOM the driver through a
-    forced hint."""
+    the model lookups ride broadcast hash joins; over it (threshold
+    patched to 0 to simulate a web-scale trigram table) NO model relation
+    is broadcast, so a 10⁹-row model can never OOM the driver through a
+    forced hint.  Stupid Backoff's unigram total is a plan literal (no
+    totals broadcast); Kneser-Ney still broadcasts its 1-row totals
+    frame."""
     from discoverx_spark.functions import ngram_lm
     from discoverx_spark.functions.kneser_ney import (kneser_ney_model,
                                                       kneser_ney_score)
@@ -428,16 +444,17 @@ def test_lm_broadcast_auto_policy(spark, monkeypatch):
         return sb, kn
 
     sb_small, kn_small = plans()
-    # small model: all five count-table joins + totals broadcast
-    assert sb_small.count("BroadcastExchange") == 6
+    # small model: the five lookups of the one model relation (one
+    # broadcast at run time, reused) and no totals broadcast
+    assert sb_small.count("BroadcastExchange") == 5
     assert kn_small.count("BroadcastExchange") == 6
     assert "SortMergeJoin" not in sb_small
 
     # "huge" model: patch the policy threshold to 0 AND disable the
     # planner's own estimate-based auto-broadcast (a real 10⁹-row model
     # would blow the estimate; the tiny fixture would not) — with the
-    # hint gone, no model slice may be broadcast: the only
-    # BroadcastExchange left is the hinted 1-row totals frame
+    # hint gone, no model relation may be broadcast; KN keeps only its
+    # hinted 1-row totals frame
     monkeypatch.setattr(ngram_lm, "LM_BROADCAST_MAX_ROWS", 0)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
@@ -445,7 +462,7 @@ def test_lm_broadcast_auto_policy(spark, monkeypatch):
         sb_big, kn_big = plans()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert sb_big.count("BroadcastExchange") == 1
+    assert sb_big.count("BroadcastExchange") == 0
     assert kn_big.count("BroadcastExchange") == 1
     assert ("SortMergeJoin" in sb_big) or ("ShuffledHashJoin" in sb_big)
     assert ("SortMergeJoin" in kn_big) or ("ShuffledHashJoin" in kn_big)

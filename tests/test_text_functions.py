@@ -1,5 +1,8 @@
 """Direct tests of functions/text.py expressions and the langid UDF."""
 
+import math
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -385,6 +388,78 @@ def test_stupid_backoff_hand_computed(spark):
     assert got[13] == (None, 0)
     # in-domain text scores better (lower ppl) than OOV salad
     assert got[10][0] < got[12][0]
+
+
+# Java's \s, which Spark's \S+ tokenizer negates, is ASCII-only: NBSP
+# and other Unicode spaces stay inside a token
+_JAVA_TOKEN = re.compile(r"[^ \t\n\x0b\f\r]+")
+
+
+def _sb_reference(train, score, order=3, min_count=1, lam=0.4):
+    """Stupid Backoff by the per-order definition, in Python: every
+    position counts one n-gram per order its left context reaches."""
+    counts = {}
+    for text in train:
+        toks = _JAVA_TOKEN.findall(text.lower()) if text is not None else []
+        for i in range(len(toks)):
+            for n in range(1, min(order, i + 1) + 1):
+                key = (" ".join(toks[i - n + 1:i + 1]), n)
+                counts[key] = counts.get(key, 0) + 1
+    counts = {k: v for k, v in counts.items() if v >= min_count}
+    total = sum(v for (_g, n), v in counts.items() if n == 1)
+    scores = {}
+    for doc_id, text in score:
+        toks = _JAVA_TOKEN.findall(text.lower()) if text is not None else []
+        acc = 0.0
+        for i, w in enumerate(toks):
+            ctx = toks[max(0, i - 2):i]
+            c3 = counts.get((" ".join(ctx + [w]), 3)) if len(ctx) == 2 \
+                else None
+            c2 = counts.get((f"{ctx[-1]} {w}", 2)) if ctx else None
+            c1 = counts.get((w, 1))
+            if c3 is not None:
+                s = c3 / counts[(" ".join(ctx), 2)]
+            elif c2 is not None:
+                s = lam * c2 / counts[(ctx[-1], 1)]
+            elif c1 is not None:
+                s = lam * lam * c1 / total
+            else:
+                s = lam * lam * 0.5 / total
+            acc += math.log(s)
+        scores[doc_id] = ((math.exp(-acc / len(toks)) if toks else None),
+                          len(toks))
+    return counts, scores
+
+
+def test_stupid_backoff_hostile_whitespace_matches_reference(spark):
+    """Tabs, NBSP, runs of spaces, blank and NULL text: per-order counts
+    and per-document scores equal the per-order definition.  NBSP is no
+    token boundary, so 'x\\u00a0y' is one unigram — and, with no ASCII
+    space in it, a gram the model keys as order 1."""
+    from discoverx_spark.functions.ngram_lm import (stupid_backoff_score,
+                                                    word_ngram_counts)
+
+    rows = [(1, "a\tb  c\n\nd"), (2, "a b\u00a0c  d a b"),
+            (3, "   "), (4, ""), (5, None), (6, "x\u00a0y a\u00a0b a"),
+            (7, "A b C\r\nd\x0be a\fb"), (8, "a b c d a b c")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    texts = [t for _i, t in rows]
+    for min_count in (1, 2):
+        want, _ = _sb_reference(texts, rows, min_count=min_count)
+        got = {(r["gram"], r["n"]): r["cnt"] for r in word_ngram_counts(
+            docs, "text", order=3, min_count=min_count).collect()}
+        assert got == want
+    _, want = _sb_reference(texts, rows)
+    got = {r["id"]: (r["sb_ppl"], r["n_tokens"]) for r in
+           stupid_backoff_score(docs, "text", "doc_id",
+                                word_ngram_counts(docs, "text")).collect()}
+    assert got.keys() == want.keys()
+    for doc_id, (ppl, n_tok) in want.items():
+        assert got[doc_id][1] == n_tok, doc_id
+        if ppl is None:
+            assert got[doc_id][0] is None, doc_id
+        else:
+            assert got[doc_id][0] == pytest.approx(ppl, rel=1e-12), doc_id
 
 
 def test_ngram_lm_model_roundtrips_as_parquet(spark, tmp_path):
