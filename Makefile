@@ -10,8 +10,10 @@ test:
 bench:
 	python bench.py
 
+# the demo pipeline on all host CPUs
 pipeline:
-	python scripts/run_pipeline.py --master 'local[8]' \
+	python scripts/run_pipeline.py \
+	  --master "local[$$(env -u OMP_NUM_THREADS nproc)]" \
 	  --generate-convs 1000 --input .bench/demo/in \
 	  --output .bench/demo/out --state .bench/demo/state
 

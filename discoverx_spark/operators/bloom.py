@@ -35,6 +35,7 @@ from typing import Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -119,6 +120,11 @@ def bloom_membership_frame(df: DataFrame, key_col: str, words: np.ndarray,
     conjunction of k bit probes — ``shiftright``/``bitwiseAND`` on the
     broadcast array cell.
 
+    The word row is built from an Arrow ``list<int64>`` table, so it is a
+    ``LocalRelation``: the array rides the plan itself, 8 bytes per 64
+    filter bits (``num_bits / 8`` bytes: about 1.3 MB for 2^20 items at 1%
+    fpp), and is broadcast from there.
+
     NULL keys: ``xxhash64`` hashes a NULL input to its seed, giving a
     fixed (valid) position set; whichever branch such a row lands in,
     the downstream exact verification treats it as novel (NULL never
@@ -127,8 +133,10 @@ def bloom_membership_frame(df: DataFrame, key_col: str, words: np.ndarray,
         raise ValueError(f"num_bits must be a multiple of 64, got {num_bits}")
     spark = df.sparkSession
     # signed view: same 64 bits, Spark longs are signed
-    wlist = [int(x) for x in words.view(np.int64)]
-    wdf = spark.createDataFrame([(wlist,)], "_bloom_words: array<bigint>")
+    signed = pa.array(words.view(np.int64), type=pa.int64())
+    wdf = spark.createDataFrame(pa.table({
+        "_bloom_words": pa.ListArray.from_arrays(
+            pa.array([0, len(signed)], type=pa.int32()), signed)}))
     key = F.col(key_col).cast("string")
     masks = F.array(*[F.lit((1 << b) - (1 << 64 if b == 63 else 0))
                       for b in range(64)])

@@ -28,6 +28,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 
 # --------------------------------------------------------------------------
@@ -243,8 +244,6 @@ def _bucket_pairs(exploded: DataFrame, key_cols: Sequence[str],
     # reference — measured 3× duplicate computation in the optimized plan.
     # With the window, everything hangs off ONE exchange on the bucket key,
     # which the self-join's requirement then reuses.
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy(*keys)
     tagged = exploded.select(
         *keys, "id", *extra_cols,
@@ -607,7 +606,6 @@ def cluster_representatives(df: DataFrame, id_col: str,
     candidate generation (as `lsh_candidate_pairs` does) long before.
 
     Returns (id, component, cluster_size, rep_id, keep)."""
-    from pyspark.sql.window import Window
     if quality is None:
         q = F.lit(0.0)
     elif isinstance(quality, str):
@@ -1000,17 +998,27 @@ def span_dedup(df: DataFrame, text_col: str, id_col: str,
       grams expects thousands of birthday collisions (the line_dedup
       argument, verbatim).  ``hash_mode="gram"`` shuffles the gram
       string itself, which the ANSI-SQL oracle replays exactly.
-    * first-occurrence election is one ``groupBy(key)`` with a
-      ``min(struct(doc_id, pos))`` — map-side combined, no window
-      function over the corpus.
-    * duplicate spans explode into covered token positions (ints, ≤
-      ``window`` per duplicate) that return to their documents as ONE
-      collect_set join; the rebuild looks each token index up in a
-      per-row hash map materialized as a COLUMN (an exists/contains
-      over the removal list inside the filter lambda would be
-      O(tokens × removals) per boilerplate-heavy doc, and an inline map
-      expression would be re-built per element by Catalyst's lambda
-      inlining — the line_dedup lessons, verbatim).
+    * first-occurrence election is ONE window pass: ``min(struct(doc_id,
+      pos))`` and ``count`` over ``Window.partitionBy(key)``, keeping the
+      occurrences of keys seen more than once that are not the first.
+      The occurrence stream (tokenize, shingle, posexplode) is derived
+      once and shuffled once, with no aggregate joined back onto it.
+      Hot grams make their window partitions uneven.
+    * the rebuild is ONE ``groupBy(doc_id)`` over the union of each
+      document's token-array row and its duplicate positions; duplicate
+      spans expand into covered token positions (ints, ≤ ``window`` per
+      duplicate) inside that aggregate's projection.  Ids must be
+      unique.  The rebuild looks each token index up in a per-row hash
+      map materialized as a COLUMN (an exists/contains over the removal
+      list inside the filter lambda would be O(tokens × removals) per
+      boilerplate-heavy doc, and an inline map expression would be
+      re-built per element by Catalyst's lambda inlining — the
+      line_dedup lessons, verbatim).
+    * the trade, measured warm at 50k generated documents on 4 cores:
+      shuffle write rose from 97 to 132 MB (the whole occurrence stream,
+      plus 24 MB of token rows grouped by id) while task CPU fell from
+      about 34 to about 21 s, against a groupBy election joined back
+      onto a second derivation of the stream.
 
     ``min_span_tokens`` (default: off) is the Lee-et-al. maximal-span
     guard: fixed windows alone remove every duplicated ``window``-gram,
@@ -1063,15 +1071,21 @@ def span_dedup(df: DataFrame, text_col: str, id_col: str,
                                      .otherwise(F.slice(grams, 1, 0)))
                         .alias("pos", "gram"))
             .select("id", "pos", key(F.col("gram")).alias("_k")))
-    # NOTE (r6, measured): pre-partitioning occs on _k so the election
-    # and the duplicate join share one exchange (the bm25 pattern) was
-    # tried and reverted — it forfeits the election's map-side combine
-    # (the full occurrence stream crosses the wire instead of one row
-    # per distinct gram per task) and lost to the double-derived narrow
-    # explode at both tested sizes.
-    first = occs.groupBy("_k").agg(
-        F.min(F.struct("id", "pos")).alias("_first"),
-        F.count(F.lit(1)).alias("_n"))
+    # NOTE (measured at 50k generated documents): window-grams are mostly
+    # distinct, so a map-side-combined groupBy(_k) shrank the occurrence
+    # stream by only 12% (100 -> 88 MB of shuffle) and paid for it with a
+    # second derivation of the stream for the join back.  One window pass
+    # over the stream shuffles it once and derives it once.
+    by_key = Window.partitionBy("_k")
+    dups = (occs.select(
+                "id", "pos",
+                F.min(F.struct("id", "pos")).over(by_key).alias("_first"),
+                F.count(F.lit(1)).over(by_key).alias("_n"))
+            .filter((F.col("_n") > 1)
+                    & ((F.col("id") != F.col("_first.id"))
+                       | (F.col("pos") != F.col("_first.pos"))))
+            .select("id", F.lit(None).cast("array<string>").alias("_toks"),
+                    "pos"))
     w = F.lit(window)
     # expand duplicate spans into covered positions INSIDE the aggregate
     # projection: the shuffle carries only span starts (not window ×
@@ -1112,16 +1126,17 @@ def span_dedup(df: DataFrame, text_col: str, id_col: str,
         rm_expr = F.array_distinct(F.flatten(F.transform(
             F.filter(runs, lambda r: r["m"] >= F.lit(min_run)),
             lambda r: F.sequence(r["s"], r["s"] + r["m"] + w - 2))))
-    dups = (occs.join(first.filter(F.col("_n") > 1), "_k")
-            .filter((F.col("id") != F.col("_first.id"))
-                    | (F.col("pos") != F.col("_first.pos")))
-            .groupBy("id")
-            .agg(rm_expr.alias("_rm_pos")))
-
-    rm = F.coalesce(F.col("_rm_pos"), F.array().cast("array<int>"))
-    out = (base.join(dups, "id", "left")
+    # one grouped pass rebuilds every document: its base row carries the
+    # token array, its duplicate rows carry the positions (collect_list
+    # skips the base row's NULL pos, so a clean document folds to [])
+    out = (base.withColumn("pos", F.lit(None).cast("int"))
+           .unionByName(dups)
+           .groupBy("id")
+           .agg(F.first("_toks", ignorenulls=True).alias("_toks"),
+                rm_expr.alias("_rm_pos"))
            .withColumn("_rm_map", F.map_from_arrays(
-               rm, F.transform(rm, lambda _: F.lit(True)))))
+               F.col("_rm_pos"),
+               F.transform("_rm_pos", lambda _: F.lit(True)))))
     n = F.size("_toks")
     kept = F.filter(
         F.col("_toks"),
@@ -1144,13 +1159,17 @@ def dedup_keep_best(df: DataFrame, text_col: str, id_col: str,
     crawls differ in truncation and boilerplate, and min-id keeps
     whichever was crawled first, not whichever is most complete.
 
-    One shuffle on the fingerprint; the election is a
-    ``min(struct(rank, desc_score, id))`` inside the aggregate (map-side
-    partial), then a left-semi join back on (fingerprint, id), no window
-    over text-carrying rows.  ``rank`` orders numbers before NaN before
-    NULL: max score wins, a NaN score loses to every number and beats
-    only NULL, ties keep the smallest id.  The order is reversed without
-    integer negation: an integral score goes through bitwise NOT
+    One shuffle on the fingerprint and no join back: the election is a
+    ``min(struct(rank, desc_score, id, text, score))`` inside the
+    aggregate (map-side partial), so the winning row rides the struct
+    out of the group.  The text therefore crosses the fingerprint
+    shuffle; a join back moves the same text rows anyway once the
+    elected keys outgrow a broadcast, because it becomes a sort-merge
+    join.  A duplicated ``(fingerprint, id)`` pair yields ONE row.
+    ``rank`` orders numbers before NaN before NULL: max score wins, a
+    NaN score loses to every number and beats only NULL, ties keep the
+    smallest id.  The order is reversed without integer negation: an
+    integral score goes through bitwise NOT
     (``~x = -x - 1`` maps the type's range onto itself, so
     ``Long.MIN_VALUE`` cannot overflow under ANSI mode); a fractional or
     decimal score takes a sign flip, which is exact for those types.
@@ -1172,11 +1191,10 @@ def dedup_keep_best(df: DataFrame, text_col: str, id_col: str,
     nan = (F.isnan(s) if isinstance(kind, (T.FloatType, T.DoubleType))
            else F.lit(False))
     rank = F.when(s.isNull(), 2).when(nan, 1).otherwise(0)
-    best = (keyed.groupBy("_fp")
+    return (keyed.groupBy("_fp")
             .agg(F.min(F.struct(rank.alias("rank"), desc.alias("ds"),
-                                F.col("id").alias("id"))).alias("_b"),
+                                F.col("id").alias("id"),
+                                F.col("_text").alias("text"),
+                                F.col("_score").alias("score"))).alias("_b"),
                  F.count(F.lit(1)).alias("dup_count"))
-            .select("_fp", F.col("_b.id").alias("id"), "dup_count"))
-    return (keyed.join(best, ["_fp", "id"])
-            .select("id", F.col("_text").alias("text"),
-                    F.col("_score").alias("score"), "dup_count"))
+            .select("_b.id", "_b.text", "_b.score", "dup_count"))

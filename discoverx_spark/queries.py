@@ -5391,7 +5391,12 @@ def q_dedup_stack_documents(spark, sf_dir):
     chunking for the embedding index.  Four operators, one SQL oracle —
     the whole-pipeline shape a curation run actually executes, so
     operator handoffs (column renames, null/empty propagation, case
-    preservation through span rebuild) are certified, not assumed."""
+    preservation through span rebuild) are certified, not assumed.
+
+    No stage joins back to its input: written out, the query runs 6
+    Spark jobs (the footer read, the input repartition, the fingerprint
+    aggregate, the gram window exchange, the id-keyed rebuild aggregate,
+    the write), and the write's file count follows the plan."""
     from .operators.dedup import dedup_keep_best, span_dedup
     from .operators.packing import chunk_documents
     docs = _t_par(spark, sf_dir, "documents").filter(

@@ -58,21 +58,22 @@ def _read_parquet_if_exists(spark: SparkSession, path: str,
     — treating it as "first write" would silently overwrite and discard all
     previously persisted state (MERGE-upsert must never be lossy).  A
     declared ``schema`` skips the footer-inference job; columns it names
-    that a file lacks read as NULL."""
-    from pyspark.errors import AnalysisException
+    that a file lacks read as NULL.
 
-    try:
-        reader = spark.read.options(**options)
-        if schema is not None:
-            reader = reader.schema(schema)
-        df = reader.parquet(path)
-        df.schema  # force analysis so a missing path surfaces here
-        return df
-    except AnalysisException as e:
-        msg = str(e)
-        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            return None
-        raise
+    Existence is asked of the path's Hadoop FileSystem before any read, a
+    driver-side call that runs no job: a read of a missing path fails in
+    analysis, and once an ``Observation`` has run in the session that
+    failure also reaches its query listener, which logs an ERROR with a
+    full stack trace."""
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    if not hpath.getFileSystem(conf).exists(hpath):
+        return None
+    reader = spark.read.options(**options)
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(path)
 
 
 SCAN_RESULT_SCHEMA = T.StructType([

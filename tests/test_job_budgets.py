@@ -8,6 +8,8 @@ Jobs are counted through a job tag read back from the status tracker.
 
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from discoverx_spark.dx import DX
@@ -15,6 +17,7 @@ from discoverx_spark.functions.ngram_lm import (stupid_backoff_score,
                                                 word_ngram_counts)
 from discoverx_spark.lineage import ResumableRunner, write_bucketed
 from discoverx_spark.pipeline import PipelineConfig
+from discoverx_spark.queries import q_dedup_stack_documents
 from discoverx_spark.transcripts import generate_transcripts
 
 
@@ -149,3 +152,25 @@ def test_stupid_backoff_trains_and_scores_in_budget(spark, count_jobs):
     n, rows = count_jobs(scored.collect)
     assert n == 3
     assert len(rows) == 4
+
+
+def test_dedup_stack_documents_in_budget(spark, tmp_path, count_jobs):
+    base = " ".join(f"w{i}" for i in range(40))
+    texts = [base, base, base.upper(), base + " tail words here",
+             "short", "unique " + " ".join(f"u{i}" for i in range(30))]
+    pq.write_table(pa.table({
+        "doc_id": pa.array(range(len(texts)), pa.int64()),
+        "text": texts,
+        "n_chars": pa.array([len(t) for t in texts], pa.int64())}),
+        str(tmp_path / "documents.parquet"))
+    out = str(tmp_path / "out")
+    # the footer read, the input repartition, the fingerprint aggregate
+    # (reused by both span-dedup branches), the gram window exchange, the
+    # id-keyed rebuild aggregate, the write
+    n, _ = count_jobs(lambda: q_dedup_stack_documents(spark, str(tmp_path))
+                      .write.parquet(out))
+    assert n == 6
+    rows = spark.read.parquet(out).collect()
+    # the three copies of base elect one survivor; the tail copy loses
+    # its duplicated spans; "short" fails the length gate
+    assert {r["doc_id"] for r in rows} == {0, 3, 5}

@@ -259,18 +259,16 @@ def test_registry_wide_plan_budgets(spark):
         # probe join + pair groupBy — the probe itself adds only the
         # last two
         "incremental_fingerprint_overlap": 8,
-        # four-operator composition: keep-best (fp groupBy + semi join)
-        # + span dedup (gram groupBy + removal join) + zero-shuffle
-        # chunking, with each stage's documented exchanges chained; r6:
-        # the adaptive input repartition subtree is TEXT-counted once
-        # per docs-scan reference (4 branches, ReusedExchange at
-        # runtime) even though chunking's own exchange is gone
-        "dedup_stack_documents": 16,
-        # r6: the adaptive input repartition (_t_par) appears once per
-        # scan reference — span_dedup references the docs scan in both
-        # the occurrence and the rebuild branch (ReusedExchange at
-        # runtime); the operator's own shuffles are unchanged
-        "span_dedup_documents": 7, "span_dedup_minlen_documents": 7,
+        # four-operator composition: keep-best (one fp groupBy) + span
+        # dedup (gram window + id-keyed rebuild groupBy) + zero-shuffle
+        # chunking; the plan text holds the input repartition (_t_par)
+        # and the fp exchange once per span-dedup branch (occurrences,
+        # rebuild), ReusedExchange at runtime
+        "dedup_stack_documents": 6,
+        # input repartition (once per scan reference: the occurrence and
+        # the rebuild branch, ReusedExchange at runtime) + the gram
+        # window exchange + the id-keyed rebuild groupBy
+        "span_dedup_documents": 4, "span_dedup_minlen_documents": 4,
     }
     default_budget = 5
     for name, (fn, _sql) in QUERIES.items():
@@ -404,16 +402,37 @@ def test_chunk_documents_tokenizes_once(spark):
 
 def test_span_dedup_tokenizes_once(spark):
     """The lowercase token array sits behind a Generate barrier, so the
-    shingle expression's references to it read an attribute: one regex
-    per scan of the occurrence stream (the gram election and the
-    duplicate join each scan it) plus the rebuild's original-case one.
-    Inlined, the window=8 plan held 75 calls."""
+    shingle expression's references to it read an attribute, and the
+    gram election is one window pass over one occurrence stream: one
+    lowercase regex plus the rebuild's original-case one.  Inlined, the
+    window=8 plan held 75 calls."""
     from discoverx_spark.operators.dedup import span_dedup
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     opt = span_dedup(docs, "text", "doc_id", window=8) \
         ._jdf.queryExecution().optimizedPlan().toString()
-    assert opt.count("regexp_extract_all") == 3
+    assert opt.count("regexp_extract_all") == 2
+
+
+@pytest.mark.parametrize("name", ["dedup_keep_best_documents",
+                                  "span_dedup_documents",
+                                  "dedup_stack_documents"])
+def test_dedup_plans_join_nothing_back(spark, name):
+    """Keep-best carries the winning row out of its one aggregation and
+    span dedup elects in a window and rebuilds in one grouped pass, so
+    no stage joins back to its own input."""
+    assert "Join" not in plan_of(spark, name)
+
+
+def test_dedup_stack_file_count_is_stable(spark, tmp_path):
+    """The write's parallelism follows the plan, not which query stage
+    finishes first: three writes give the same number of files."""
+    counts = set()
+    for i in range(3):
+        out = tmp_path / f"run{i}"
+        QUERIES["dedup_stack_documents"][0](spark, SF).write.parquet(str(out))
+        counts.add(len(list(out.glob("*.parquet"))))
+    assert len(counts) == 1
 
 
 def test_lm_broadcast_auto_policy(spark, monkeypatch):

@@ -2,6 +2,11 @@
 (tb_1 fixture: the ip column scores ip_v4 = 1.0, mac column scores
 mac_address = 1.0, description scores 0.0)."""
 
+import os
+import subprocess
+import sys
+import textwrap
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -216,3 +221,39 @@ def test_save_merge_keeps_old_keys_and_their_timestamps(spark, tb_1,
     assert sorted(loaded.get_classes()) == sorted(
         (k[0], k[1], k[2], k[3], k[4]) for k, (s, _) in first.items()
         if s is not None and s >= 0.95)
+
+
+_MISSING_PATH_SESSION = textwrap.dedent("""
+    import sys
+    from pyspark.sql import Observation, SparkSession
+    from pyspark.sql import functions as F
+    from discoverx_spark.scanner import _read_parquet_if_exists
+
+    spark = (SparkSession.builder.master("local[1]")
+             .config("spark.ui.enabled", "false")
+             .config("spark.ui.showConsoleProgress", "false").getOrCreate())
+    obs = Observation("rows")
+    (spark.range(3).observe(obs, F.count(F.lit(1)).alias("n"))
+     .write.format("noop").mode("overwrite").save())
+    print(obs.get["n"],
+          _read_parquet_if_exists(spark, sys.argv[1] + "/a"),
+          _read_parquet_if_exists(spark, sys.argv[1] + "/b"))
+    spark.stop()
+""")
+
+
+def test_missing_path_after_observation_logs_nothing(tmp_path):
+    """Once an ``Observation`` has run in a session, a read of a missing
+    path also fails inside its query listener, which logs an ERROR trace.
+    A missing state path is asked of the file system first, so it reads
+    as None without one (a fresh runner state dir, a first save)."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ,
+               PYTHONPATH=os.pathsep.join(
+                   filter(None, [root, os.environ.get("PYTHONPATH")])))
+    proc = subprocess.run(
+        [sys.executable, "-c", _MISSING_PATH_SESSION, str(tmp_path)],
+        capture_output=True, text=True, timeout=600, env=env)
+    assert proc.returncode == 0, proc.stderr
+    assert proc.stdout.split() == ["3", "None", "None"]
+    assert "Listener threw" not in proc.stderr

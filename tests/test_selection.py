@@ -102,6 +102,18 @@ def test_dedup_keep_best_elects_max_score_min_id(spark):
     assert got[4] == (7, 1)
 
 
+def test_dedup_keep_best_duplicated_row_elected_once(spark):
+    """A row repeated verbatim (same id, same text) is one candidate: the
+    election returns one row per fingerprint group, as the oracle's
+    ``row_number() = 1`` does."""
+    rows = [(1, "same text", 10), (1, "same text", 10), (2, "same text", 5),
+            (3, "other", 7), (3, "other", 7)]
+    df = spark.createDataFrame(rows, "doc_id long, text string, q long")
+    out = dedup_keep_best(df, "text", "doc_id", F.col("q")).collect()
+    assert sorted(tuple(r) for r in out) == [(1, "same text", 10, 3),
+                                             (3, "other", 7, 2)]
+
+
 def test_doremi_absent_domain_keeps_prior_mass(spark):
     df = spark.createDataFrame([("a", 8.0), ("b", 5.0)],
                                "dom string, loss double")
