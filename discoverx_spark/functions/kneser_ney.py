@@ -37,8 +37,9 @@ Goodman's modified KN, the KenLM default: per order, three discounts
 D₁, D₂, D₃₊ estimated from the count-of-counts
 (Y = n₁/(n₁+2n₂); D_k = k − (k+1)·Y·n_{k+1}/n_k) and applied by
 count value, with the back-off weight carrying the exact removed mass
-(D₁·N₁ + D₂·N₂ + D₃₊·N₃₊)/c'.  The estimation scalars are collected
-on the driver (≤ 12 longs — metadata-sized); everything else stays
+(D₁·N₁ + D₂·N₂ + D₃₊·N₃₊)/c'.  The count-of-counts come back with the
+scorer's one model probe (13 longs — metadata-sized) and the discounts
+are computed from them on the driver; everything else stays
 distributed.
 
 Spark shape (same contract as ngram_lm.py):
@@ -48,12 +49,15 @@ Spark shape (same contract as ngram_lm.py):
   combined, shuffle bounded by distinct-type counts, never corpus
   size.  The result is ONE unified stats DataFrame (kind, k1, k2, k3,
   v1, v2): persist as parquet, reload anywhere.
-* **Scoring** is join-based and 100% JVM-side: the position frame
-  (id, pos, w₋₂, w₋₁, w) left-joins the six stat slices (broadcast at
-  pruned-model scale; hash-join on gram keys when the model itself is
-  huge), one nested-CASE expression evaluates the interpolation
-  ladder, and a sorted-position fold gives a deterministic float sum.
-  The corpus text never shuffles and no Python worker sees the model.
+* **Scoring** is the Stupid Backoff scorer's skeleton: one observed
+  probe job checkpoints the model and reads its size, the totals
+  N₁₊(··) and V (plan literals, no totals join) and the count-of-counts;
+  the position frame (id, pos, w₋₂, w₋₁, w) left-joins ONE model
+  relation five times on the string key ``kind k1 k2 k3`` (broadcast at
+  pruned-model scale; hash-join on the key when the model itself is
+  huge), one nested-CASE expression evaluates the interpolation ladder,
+  and a sorted-position fold gives a deterministic float sum.  The
+  corpus text never shuffles and no Python worker sees the model.
 """
 
 from __future__ import annotations
@@ -63,12 +67,10 @@ from typing import Union
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .ngram_lm import _lm_join_side, _perplexity, _positions, _probe_model
 from .text import tokens_sql_expr as _tokens
 
 KN_DISCOUNT = 0.75
-
-
-_KN_KINDS = ("c3", "ctx3", "n2", "ctx2", "n1", "tot")
 
 
 def kneser_ney_model(df: DataFrame, text_col: str,
@@ -87,9 +89,9 @@ def kneser_ney_model(df: DataFrame, text_col: str,
     ``tot``   ()              v1 = N₁₊(··),  v2 = V
     ========  ==============  =======================================
 
-    The count-of-count columns needed by modified-KN discounting are
-    recomputed cheaply from this table at scoring time (three tiny
-    aggregations), so the persisted model stays smoothing-agnostic.
+    The count-of-counts needed by modified-KN discounting are counted
+    from this table by the scorer's model probe, so the persisted model
+    stays smoothing-agnostic.
 
     ``min_count`` (default 1 = keep everything, the oracle-certified
     configuration) prunes trigram types with ``c(uvw) < min_count``
@@ -159,19 +161,12 @@ def kneser_ney_model(df: DataFrame, text_col: str,
     return out
 
 
-def _modified_discounts(counts: DataFrame, val_col: str) -> tuple:
-    """(D1, D2, D3p) from the count-of-counts of ``val_col`` — Chen &
-    Goodman eq. 26: Y = n₁/(n₁+2n₂), D_k = k − (k+1)·Y·n_{k+1}/n_k.
+def _modified_discounts(n1: int, n2: int, n3: int, n4: int) -> tuple:
+    """(D1, D2, D3p) from the count-of-counts n₁..n₄ of one order —
+    Chen & Goodman eq. 26: Y = n₁/(n₁+2n₂), D_k = k − (k+1)·Y·n_{k+1}/n_k.
     Falls back to the fixed default when a needed n_k is zero (tiny or
     degenerate corpora), clamped to [0, k] so max(c−D, 0) never goes
     negative and weights stay non-negative."""
-    row = counts.agg(
-        F.sum(F.when(F.col(val_col) == 1, 1).otherwise(0)).alias("n1"),
-        F.sum(F.when(F.col(val_col) == 2, 1).otherwise(0)).alias("n2"),
-        F.sum(F.when(F.col(val_col) == 3, 1).otherwise(0)).alias("n3"),
-        F.sum(F.when(F.col(val_col) == 4, 1).otherwise(0)).alias("n4"),
-    ).collect()[0]
-    n1, n2, n3, n4 = (row[k] or 0 for k in ("n1", "n2", "n3", "n4"))
     if n1 == 0 or n2 == 0:
         return (KN_DISCOUNT, KN_DISCOUNT, KN_DISCOUNT)
     y = n1 / (n1 + 2.0 * n2)
@@ -180,6 +175,16 @@ def _modified_discounts(counts: DataFrame, val_col: str) -> tuple:
     d3 = 3.0 - 4.0 * y * n4 / n3 if n3 else KN_DISCOUNT
     return (min(max(d1, 0.0), 1.0), min(max(d2, 0.0), 2.0),
             min(max(d3, 0.0), 3.0))
+
+
+def _key(kind: Union[str, Column], *parts) -> Column:
+    """A model row's lookup key: its kind and keys joined by single
+    spaces (``concat_ws`` skips the NULL key slots).  Kinds and ``\\S+``
+    tokens hold no ASCII space and every kind has a fixed key arity, so
+    the string is unambiguous and one relation keyed this way serves
+    every lookup."""
+    kind = F.lit(kind) if isinstance(kind, str) else kind
+    return F.concat_ws(" ", kind, *parts)
 
 
 def kneser_ney_score(df: DataFrame, text_col: str, id_col: str,
@@ -193,52 +198,84 @@ def kneser_ney_score(df: DataFrame, text_col: str, id_col: str,
     per document).  ``discount`` is a fixed D in (0, 1) or ``"modified"``
     (per-order count-of-count discounts, the KenLM default).
 
+    The Stupid Backoff skeleton (functions/ngram_lm.py) with KN's own
+    statistics: ONE job checkpoints the model and probes it, observed,
+    for its row count, the ``tot`` values N₁₊(··) and V (plan literals
+    from then on) and the count-of-counts the modified discounts are
+    computed from on the driver.  All five lookups (c3, ctx3, n2, ctx2,
+    n1) join the model as ONE relation on the string key
+    ``kind k1 k2 k3`` (see :func:`_key`), so no per-kind slice is
+    needed; with ``"modified"``, the two context lookups instead read
+    one relation grouped from the c3/n2 rows, keyed the same way, that
+    carries their per-context N₁/N₂/N₃₊ splits.  One nested-CASE
+    expression evaluates the interpolation ladder and a sorted-position
+    fold sums the log-probabilities.
+
     ``broadcast`` is the model-side JOIN POLICY: ``'auto'`` (default)
-    broadcasts the six stat slices only while the materialized model is
+    broadcasts the lookup relation only while the materialized model is
     at most :data:`~.ngram_lm.LM_BROADCAST_MAX_ROWS` rows and falls back
-    to plain hash joins on the gram keys beyond that — the full distinct-
+    to plain hash joins on the key beyond that — the full distinct-
     trigram table of a 100 TB corpus (10⁹⁺ rows) must never ride a
     forced broadcast hint (pair with ``kneser_ney_model(min_count=...)``
     pruning to stay under the threshold when broadcast speed matters).
-    Empty documents yield ``kn_ppl = NULL`` with ``n_tokens = 0``."""
-    from .ngram_lm import _lm_join_side
-
-    # the model feeds six join branches; materialize once (ngram_lm
-    # policy) so a raw training plan is not re-aggregated per branch.
-    # The coalesce (narrow) folds the union's per-kind shuffle
-    # partitions so the checkpoint scan, the auto probe and the six
-    # broadcast builds each run cluster-parallelism tasks
-    model = model.coalesce(
-        df.sparkSession.sparkContext.defaultParallelism) \
-        .localCheckpoint(eager=False)
-    n_model = model.count() if broadcast == "auto" else 0
-    side = lambda sdf: _lm_join_side(sdf, broadcast, n_model)  # noqa: E731
-    c3 = model.filter(F.col("kind") == "c3").select(
-        F.col("k1").alias("_3u"), F.col("k2").alias("_3v"),
-        F.col("k3").alias("_3w"), F.col("v1").alias("_c3"))
-    ctx3 = model.filter(F.col("kind") == "ctx3").select(
-        F.col("k1").alias("_xu"), F.col("k2").alias("_xv"),
-        F.col("v1").alias("_csum"), F.col("v2").alias("_n3"))
-    n2 = model.filter(F.col("kind") == "n2").select(
-        F.col("k1").alias("_2v"), F.col("k2").alias("_2w"),
-        F.col("v1").alias("_n2"))
-    ctx2 = model.filter(F.col("kind") == "ctx2").select(
-        F.col("k1").alias("_yv"), F.col("v1").alias("_nsum"),
-        F.col("v2").alias("_nn2"))
-    n1 = model.filter(F.col("kind") == "n1").select(
-        F.col("k1").alias("_1w"), F.col("v1").alias("_n1"))
-    tot = model.filter(F.col("kind") == "tot").select(
-        F.col("v1").alias("_tt"), F.col("v2").alias("_vv"))
-
-    if discount == "modified":
-        d3s = _modified_discounts(c3, "_c3")
-        d2s = _modified_discounts(n2, "_n2")
-        d1s = _modified_discounts(n1, "_n1")
-    else:
+    Empty documents yield ``kn_ppl = NULL`` with ``n_tokens = 0``; a
+    model without bigram types (every document ≤ 1 token) has
+    N₁₊(··) = 0 and scores every document ``kn_ppl = NULL``."""
+    modified = discount == "modified"
+    if not modified:
         dfix = float(discount)
         if not 0.0 < dfix < 1.0:
             raise ValueError(f"discount must be in (0, 1), got {dfix}")
+    kind, v1 = F.col("kind"), F.col("v1")
+    model, seen = _probe_model(
+        df, model,
+        F.max(F.when(kind == "tot", v1)).alias("tt"),
+        F.max(F.when(kind == "tot", F.col("v2"))).alias("vv"),
+        F.count_if((kind == "n1") & (v1 >= 3)).alias("n1_3p"),
+        *[F.count_if((kind == k) & (v1 == c)).alias(f"{k}_{c}")
+          for k in ("c3", "n2", "n1") for c in (1, 2, 3, 4)])
+
+    rel = model.select(_key(kind, "k1", "k2", "k3").alias("key"), "v1", "v2")
+    if modified:
+        d3s, d2s, d1s = (_modified_discounts(
+            *(seen[f"{k}_{c}"] for c in (1, 2, 3, 4)))
+            for k in ("c3", "n2", "n1"))
+        # per-context count-of-count splits (N₁, N₂, N₃₊), so the
+        # back-off weight carries exactly the removed mass: the ctx3/ctx2
+        # lookups read them regrouped from the c3/n2 rows they aggregate
+        ctx = (model.filter(kind.isin("c3", "n2"))
+               .groupBy(F.when(kind == "c3", _key("ctx3", "k1", "k2"))
+                        .otherwise(_key("ctx2", "k1")).alias("key"))
+               .agg(F.sum(v1).alias("v1"),
+                    # N₁₊(uv·) is not read: the splits carry the mass
+                    F.lit(None).cast("long").alias("v2"),
+                    F.count_if(v1 == 1).alias("m1"),
+                    F.count_if(v1 == 2).alias("m2"),
+                    F.count_if(v1 >= 3).alias("m3")))
+    else:
         d3s = d2s = d1s = (dfix, dfix, dfix)
+        ctx = rel
+
+    def lookup(rows: DataFrame, side: DataFrame, of: str, words: tuple,
+               *names: str) -> DataFrame:
+        """Left-join ``side`` on the key of kind ``of`` over ``words``
+        (NULL where the context runs off the document head), binding its
+        value columns, in order, to ``names``."""
+        side = side.select(F.col("key").alias(f"_k{of}"),
+                           *[F.col(c).alias(n)
+                             for c, n in zip(side.columns[1:], names)])
+        key = F.when(F.col(words[0]).isNotNull(), _key(of, *words))
+        return rows.join(_lm_join_side(side, broadcast, seen["rows"]),
+                         key == F.col(f"_k{of}"), "left")
+
+    rows = _positions(df, text_col, id_col)
+    rows = lookup(rows, rel, "c3", ("_w2", "_w1", "_w"), "_c3")
+    rows = lookup(rows, ctx, "ctx3", ("_w2", "_w1"),
+                  "_csum", "_n3", "_m31", "_m32", "_m33")
+    rows = lookup(rows, rel, "n2", ("_w1", "_w"), "_n2")
+    rows = lookup(rows, ctx, "ctx2", ("_w1",),
+                  "_nsum", "_nn2", "_m21", "_m22", "_m23")
+    rows = lookup(rows, rel, "n1", ("_w",), "_n1")
 
     def disc(cnt: Column, ds: tuple) -> Column:
         """Per-count discount D(c): D₁, D₂ or D₃₊ (all equal for the
@@ -255,77 +292,23 @@ def kneser_ney_score(df: DataFrame, text_col: str, id_col: str,
                 + F.lit(ds[1]) * F.col(f"{pre}2")
                 + F.lit(ds[2]) * F.col(f"{pre}3"))
 
-    modified = discount == "modified"
-    u1mass = None
+    # the interpolation ladder — the arithmetic tree below is mirrored
+    # verbatim by the DuckDB oracle (queries._sql_kneser_ney); keep the
+    # operation ORDER identical on both sides (IEEE doubles).  N₁₊(··)
+    # and V are literals; N₁₊(··) = 0 (no bigram types) becomes NULL so
+    # every probability is NULL rather than an ANSI division error
+    tt = F.lit(seen["tt"] or None).cast("double")
+    vv = F.lit(seen["vv"]).cast("double")
+    cn1 = F.coalesce(F.col("_n1"), F.lit(0)).cast("double")
     if modified:
         # unigram back-off mass is GLOBAL — the total discount removed
         # across all continuation types, Σ_w D(n₁(w)) = D₁·M₁ + D₂·M₂ +
         # D₃₊·M₃₊ (a per-row D(n₁(w_current)) would make the reserved
-        # mass depend on the word being scored, breaking normalization);
-        # three longs, driver-collected
-        mrow = n1.agg(
-            F.sum(F.when(F.col("_n1") == 1, 1).otherwise(0)).alias("m1"),
-            F.sum(F.when(F.col("_n1") == 2, 1).otherwise(0)).alias("m2"),
-            F.sum(F.when(F.col("_n1") >= 3, 1).otherwise(0)).alias("m3"),
-        ).collect()[0]
-        u1mass = (d1s[0] * (mrow["m1"] or 0) + d1s[1] * (mrow["m2"] or 0)
-                  + d1s[2] * (mrow["m3"] or 0))
-        # per-context count-of-count splits (N₁, N₂, N₃₊) — needed so
-        # the back-off weight carries exactly the removed mass
-        ctx3 = c3.groupBy("_3u", "_3v").agg(
-            F.sum("_c3").alias("_csum"),
-            F.sum(F.when(F.col("_c3") == 1, 1).otherwise(0)).alias("_m31"),
-            F.sum(F.when(F.col("_c3") == 2, 1).otherwise(0)).alias("_m32"),
-            F.sum(F.when(F.col("_c3") >= 3, 1).otherwise(0)).alias("_m33"),
-        ).withColumnRenamed("_3u", "_xu").withColumnRenamed("_3v", "_xv")
-        ctx2 = n2.groupBy("_2v").agg(
-            F.sum("_n2").alias("_nsum"),
-            F.sum(F.when(F.col("_n2") == 1, 1).otherwise(0)).alias("_m21"),
-            F.sum(F.when(F.col("_n2") == 2, 1).otherwise(0)).alias("_m22"),
-            F.sum(F.when(F.col("_n2") >= 3, 1).otherwise(0)).alias("_m23"),
-        ).withColumnRenamed("_2v", "_yv")
-
-    toks = _tokens(text_col)
-    padded = F.concat(F.array(F.lit(None).cast("string"),
-                              F.lit(None).cast("string")), toks)
-    n = F.size(toks)
-    zipped = F.arrays_zip(
-        F.slice(padded, 1, F.greatest(n, F.lit(1))).alias("w2"),
-        F.slice(padded, 2, F.greatest(n, F.lit(1))).alias("w1"),
-        F.slice(padded, 3, F.greatest(n, F.lit(1))).alias("w"))
-    # posexplode_outer keeps empty documents as one null-position row —
-    # no second scan + join-back needed to restore them (guide §2.4)
-    rows = (df.select(F.col(id_col).alias("id"),
-                      F.posexplode_outer(F.when(n >= 1, zipped))
-                      .alias("pos", "s"))
-            .select("id", "pos",
-                    F.col("s.w2").alias("_w2"), F.col("s.w1").alias("_w1"),
-                    F.col("s.w").alias("_w")))
-    joined = (
-        rows
-        .join(side(c3),
-              (F.col("_w2").isNotNull()) & (F.col("_3u") == F.col("_w2"))
-              & (F.col("_3v") == F.col("_w1"))
-              & (F.col("_3w") == F.col("_w")), "left")
-        .join(side(ctx3),
-              (F.col("_w2").isNotNull()) & (F.col("_xu") == F.col("_w2"))
-              & (F.col("_xv") == F.col("_w1")), "left")
-        .join(side(n2),
-              (F.col("_w1").isNotNull()) & (F.col("_2v") == F.col("_w1"))
-              & (F.col("_2w") == F.col("_w")), "left")
-        .join(side(ctx2),
-              (F.col("_w1").isNotNull()) & (F.col("_yv") == F.col("_w1")),
-              "left")
-        .join(side(n1), F.col("_1w") == F.col("_w"), "left")
-        .crossJoin(F.broadcast(tot)))
-
-    # the interpolation ladder — the arithmetic tree below is mirrored
-    # verbatim by the DuckDB oracle (queries._sql_kneser_ney); keep the
-    # operation ORDER identical on both sides (IEEE doubles)
-    tt = F.col("_tt").cast("double")
-    vv = F.col("_vv").cast("double")
-    cn1 = F.coalesce(F.col("_n1"), F.lit(0)).cast("double")
-    u1m = F.lit(u1mass) if modified else F.lit(d1s[0]) * vv
+        # mass depend on the word being scored, breaking normalization)
+        u1m = F.lit(d1s[0] * seen["n1_1"] + d1s[1] * seen["n1_2"]
+                    + d1s[2] * seen["n1_3p"])
+    else:
+        u1m = F.lit(d1s[0]) * vv
     p1 = (F.greatest(cn1 - disc(F.col("_n1"), d1s), F.lit(0.0)) / tt
           + u1m / tt * (F.lit(1.0) / (vv + 1.0)))
     cn2 = F.coalesce(F.col("_n2"), F.lit(0)).cast("double")
@@ -344,27 +327,4 @@ def kneser_ney_score(df: DataFrame, text_col: str, id_col: str,
         / F.col("_csum") + w3mass / F.col("_csum") * p2).otherwise(p2)
     p = F.when(F.col("_w1").isNull(), p1) \
         .when(F.col("_w2").isNull(), p2).otherwise(p3)
-
-    # the null-position row of an empty document contributes to neither
-    # aggregate (count skips its NULL pos, the when() keeps it out of
-    # the fold list), so 0-token docs come out 0.0/0 = NULL ppl —
-    # exactly what the old ids-side join-back produced
-    per_doc = (joined.select(
-        "id", "pos",
-        F.when(F.col("pos").isNotNull(), F.log(p)).alias("_lp"))
-        .groupBy("id")
-        .agg(F.count("pos").alias("n_tokens"),
-             F.aggregate(
-                 F.array_sort(F.collect_list(
-                     F.when(F.col("pos").isNotNull(),
-                            F.struct("pos", "_lp")))),
-                 F.lit(0.0),
-                 lambda acc, x: acc + x["_lp"]).alias("_sum")))
-    # explicit 0-token guard (NULL ppl) — ANSI-safe where a bare 0/0
-    # division would throw
-    return per_doc.select(
-        "id",
-        F.when(F.col("n_tokens") > 0,
-               F.exp(-F.col("_sum") / F.col("n_tokens").cast("double")))
-        .alias("kn_ppl"),
-        F.col("n_tokens"))
+    return _perplexity(rows, p, "kn_ppl")

@@ -41,12 +41,12 @@ denominators.
 
 from __future__ import annotations
 
-from typing import Union
+from typing import Tuple, Union
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from .text import tokens_sql_expr as _tokens
+from .text import _fold_sum, tokens_sql_expr as _tokens
 
 SB_LAMBDA = 0.4
 SB_OOV_NUMERATOR = 0.5
@@ -66,12 +66,13 @@ def _lm_join_side(df: DataFrame, broadcast: Union[bool, str],
     hint, ``False`` only omits it, ``'auto'`` hints iff the materialized
     model has at most :data:`LM_BROADCAST_MAX_ROWS` rows (the
     ``quality_classifier_frame`` auto-select precedent) — the row count
-    comes from the scorer's probe of its checkpointed model (Stupid
-    Backoff reads it from the same observed job that materializes the
-    checkpoint and sums the unigram total, so the decision costs no job
-    of its own).  Without the hint the planner still chooses the join
-    itself: a model whose size estimate is under
-    ``spark.sql.autoBroadcastJoinThreshold`` is broadcast anyway."""
+    comes from :func:`_probe_model`, the one observed job in which both
+    scorers materialize their checkpointed model and read their totals
+    (Stupid Backoff's unigram total; Kneser-Ney's N₁₊(··), V and
+    count-of-counts), so the decision costs no job of its own.  Without
+    the hint the planner still chooses the join itself: a model whose
+    size estimate is under ``spark.sql.autoBroadcastJoinThreshold`` is
+    broadcast anyway."""
     if broadcast is True or (broadcast == "auto"
                              and n_rows <= LM_BROADCAST_MAX_ROWS):
         return F.broadcast(df)
@@ -120,66 +121,42 @@ def word_ngram_counts(df: DataFrame, text_col: str, order: int = 3,
             .filter(F.col("cnt") >= min_count))
 
 
-def stupid_backoff_score(df: DataFrame, text_col: str, id_col: str,
-                         counts: DataFrame,
-                         lam: float = SB_LAMBDA,
-                         broadcast: Union[bool, str] = "auto") -> DataFrame:
-    """(id, sb_ppl, n_tokens) — per-document Stupid Backoff perplexity
-    against a ``word_ngram_counts`` model, entirely JVM-side.  ``id``
-    must identify documents uniquely (one output row per document).
+def _probe_model(df: DataFrame, model: DataFrame,
+                 *aggs: Column) -> Tuple[DataFrame, dict]:
+    """The scorer skeleton's model step: checkpoint ``model`` and read
+    its row count plus ``aggs`` (named aggregate Columns) in ONE job.
 
-    The position frame is built BEFORE exploding (arrays_zip of the
-    null-left-padded token array with its shifts — never per-element
-    lambdas over the outer array, which Catalyst would inline and
-    re-tokenize per position), so each exploded row carries only
-    (id, pos, w₋₂, w₋₁, w); ``posexplode_outer`` keeps empty documents
-    as one null-position row, so no second scan + join-back is needed to
-    restore them (guide §2.4).  All five count lookups (trigram, its
-    context bigram, bigram, its context unigram, unigram) join the SAME
-    model relation ``(gram, cnt)`` on ``gram``: tokens are ``\\S+``
-    matches with no ASCII space, so a gram joined by single spaces has
-    exactly n-1 spaces and its string alone fixes its order — the
-    lookups need no per-order slice, and adaptive execution builds one
-    broadcast and reuses it for the other four.  The unigram total N
-    enters the plan as a literal.  ``broadcast`` picks the model-side
-    join strategy: ``'auto'`` (default) broadcasts the model only while
-    it is at most :data:`LM_BROADCAST_MAX_ROWS` rows and falls back to
-    plain gram-key joins beyond — an unpruned web-scale count table
-    must never ride a forced broadcast hint.  The per-doc mean folds
-    ln S in position order (deterministic float association, the
-    BM25/classifier policy).  Empty docs yield ``sb_ppl = NULL`` with
-    ``n_tokens = 0``."""
-    # the model feeds the probe and five lookups below: without a lineage
-    # cut, a caller passing the raw word_ngram_counts plan would re-run
-    # the training aggregation once per branch.  A lazy localCheckpoint
-    # makes the operator self-sufficient — the counts RDD materializes
-    # once, in the probe, and every lookup scans it (the scoring plan
-    # shows ExistingRDD scans, no training aggregates; plan-tested).
-    # Already-checkpointed input costs one cheap re-cache of a pruned,
-    # broadcast-sized table.  Coalescing the aggregation's shuffle
-    # partitions (narrow, no shuffle) keeps the checkpoint scan, the
-    # probe and the broadcast build at cluster-parallelism tasks.
-    counts = counts.coalesce(
+    The model feeds the probe and five lookups: without a lineage cut, a
+    caller passing a raw training plan would re-run the training
+    aggregation once per branch.  A lazy localCheckpoint makes the
+    scorer self-sufficient — the model RDD materializes once, in the
+    probe, and every lookup scans it (the scoring plan shows ExistingRDD
+    scans, no training aggregates; plan-tested).  Already-checkpointed
+    input costs one cheap re-cache of a pruned, broadcast-sized table.
+    Coalescing the aggregation's shuffle partitions (narrow, no shuffle)
+    keeps the checkpoint scan, the probe and the broadcast build at
+    cluster-parallelism tasks.  The probe is an ``Observation`` over a
+    noop write of the checkpoint: a global agg + collect would add a
+    shuffle stage, a second job."""
+    model = model.coalesce(
         df.sparkSession.sparkContext.defaultParallelism) \
         .localCheckpoint(eager=False)
-    # ONE job materializes the checkpoint and brings back, observed, the
-    # model size for the 'auto' policy and the unigram total N (NULL for
-    # a model without unigrams, as an empty sum was); a global agg +
-    # collect would add a shuffle stage, a second job
     probe = Observation()
-    counts.observe(probe, F.count(F.lit(1)).alias("rows"),
-                   F.sum(F.when(F.col("n") == 1, F.col("cnt")))
-                   .alias("total")) \
+    model.observe(probe, F.count(F.lit(1)).alias("rows"), *aggs) \
         .write.format("noop").mode("overwrite").save()
-    seen = probe.get
-    n_model, n_total = seen["rows"], seen["total"]
-    model = counts.select("gram", "cnt")
+    return model, probe.get
 
-    def lookup(gram: str, cnt: str) -> DataFrame:
-        return _lm_join_side(model.select(F.col("gram").alias(gram),
-                                          F.col("cnt").alias(cnt)),
-                             broadcast, n_model)
 
+def _positions(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, pos, _w2, _w1, _w): one row per token with its two left
+    context words (NULL before the document head).
+
+    The frame is built BEFORE exploding (arrays_zip of the null-left-
+    padded token array with its shifts — never per-element lambdas over
+    the outer array, which Catalyst would inline and re-tokenize per
+    position); ``posexplode_outer`` keeps an empty document as one
+    null-position row, so no second scan + join-back is needed to
+    restore it (guide §2.4)."""
     toks = _tokens(text_col)
     padded = F.concat(F.array(F.lit(None).cast("string"),
                               F.lit(None).cast("string")), toks)
@@ -188,19 +165,74 @@ def stupid_backoff_score(df: DataFrame, text_col: str, id_col: str,
         F.slice(padded, 1, F.greatest(n, F.lit(1))).alias("w2"),
         F.slice(padded, 2, F.greatest(n, F.lit(1))).alias("w1"),
         F.slice(padded, 3, F.greatest(n, F.lit(1))).alias("w"))
-    rows = (df.select(F.col(id_col).alias("id"),
+    return (df.select(F.col(id_col).alias("id"),
                       F.posexplode_outer(F.when(n >= 1, zipped))
-                      .alias("pos", "s")))
-    rows = rows.select(
-        "id", "pos",
-        F.col("s.w2").alias("_w2"), F.col("s.w1").alias("_w1"),
-        F.col("s.w").alias("_w"))
+                      .alias("pos", "s"))
+            .select("id", "pos",
+                    F.col("s.w2").alias("_w2"), F.col("s.w1").alias("_w1"),
+                    F.col("s.w").alias("_w")))
+
+
+def _perplexity(scored: DataFrame, prob: Column, name: str) -> DataFrame:
+    """(id, ``name``, n_tokens): ``exp(−mean(ln prob))`` per document,
+    the log-probabilities folded in position order (deterministic float
+    association, the BM25/classifier policy).
+
+    The null-position row of an empty document is not counted
+    (``count`` skips its NULL pos), so a 0-token document comes out with
+    ``n_tokens = 0`` and, through the explicit guard, a NULL ppl —
+    ANSI-safe where a bare 0/0 division would throw."""
+    per_doc = scored.groupBy("id").agg(
+        F.count("pos").alias("n_tokens"),
+        _fold_sum(F.col("pos"), F.log(prob)).alias("_sum"))
+    return per_doc.select(
+        "id",
+        F.when(F.col("n_tokens") > 0,
+               F.exp(-F.col("_sum") / F.col("n_tokens").cast("double")))
+        .alias(name),
+        F.col("n_tokens"))
+
+
+def stupid_backoff_score(df: DataFrame, text_col: str, id_col: str,
+                         counts: DataFrame,
+                         lam: float = SB_LAMBDA,
+                         broadcast: Union[bool, str] = "auto") -> DataFrame:
+    """(id, sb_ppl, n_tokens) — per-document Stupid Backoff perplexity
+    against a ``word_ngram_counts`` model, entirely JVM-side.  ``id``
+    must identify documents uniquely (one output row per document).
+
+    One job checkpoints the model and probes it, observed, for its size
+    (the 'auto' policy) and the unigram total N (NULL for a model
+    without unigrams, as an empty sum was), which enters the plan as a
+    literal.  Each position of the :func:`_positions` frame then looks
+    up its five counts (trigram, its context bigram, bigram, its context
+    unigram, unigram) in the SAME model relation ``(gram, cnt)`` on
+    ``gram``: tokens are ``\\S+`` matches with no ASCII space, so a gram
+    joined by single spaces has exactly n-1 spaces and its string alone
+    fixes its order — the lookups need no per-order slice, and adaptive
+    execution builds one broadcast and reuses it for the other four.
+    ``broadcast`` picks the model-side join strategy: ``'auto'``
+    (default) broadcasts the model only while it is at most
+    :data:`LM_BROADCAST_MAX_ROWS` rows and falls back to plain gram-key
+    joins beyond — an unpruned web-scale count table must never ride a
+    forced broadcast hint.  Empty docs yield ``sb_ppl = NULL`` with
+    ``n_tokens = 0``."""
+    counts, seen = _probe_model(
+        df, counts,
+        F.sum(F.when(F.col("n") == 1, F.col("cnt"))).alias("total"))
+    model = counts.select("gram", "cnt")
+
+    def lookup(gram: str, cnt: str) -> DataFrame:
+        return _lm_join_side(model.select(F.col("gram").alias(gram),
+                                          F.col("cnt").alias(cnt)),
+                             broadcast, seen["rows"])
+
     tri = F.when(F.col("_w2").isNotNull(),
                  F.concat_ws(" ", "_w2", "_w1", "_w"))
     ctx2 = F.when(F.col("_w2").isNotNull(), F.concat_ws(" ", "_w2", "_w1"))
     big = F.when(F.col("_w1").isNotNull(), F.concat_ws(" ", "_w1", "_w"))
     scored = (
-        rows
+        _positions(df, text_col, id_col)
         .withColumn("_tri", tri).withColumn("_ctx2", ctx2)
         .withColumn("_big", big)
         .join(lookup("_g3", "_c3"), F.col("_tri") == F.col("_g3"), "left")
@@ -211,7 +243,7 @@ def stupid_backoff_score(df: DataFrame, text_col: str, id_col: str,
               "left")
         .join(lookup("_g1", "_c1"), F.col("_w") == F.col("_g1"), "left"))
     lam2 = float(lam) * float(lam)
-    total = F.lit(n_total).cast("long")
+    total = F.lit(seen["total"]).cast("long")
     s = F.when(F.col("_c3").isNotNull(),
                F.col("_c3") / F.col("_c2a")) \
         .when(F.col("_c2").isNotNull(),
@@ -219,26 +251,4 @@ def stupid_backoff_score(df: DataFrame, text_col: str, id_col: str,
         .when(F.col("_c1").isNotNull(),
               F.lit(lam2) * F.col("_c1") / total) \
         .otherwise(F.lit(lam2 * SB_OOV_NUMERATOR) / total)
-    # a null-position row (empty doc) contributes neither to the count
-    # nor to the fold — count("_ls") skips its NULL, the when() keeps it
-    # out of the list — and 0-token docs come out as 0.0/0 = NULL ppl,
-    # exactly what the old join-back produced
-    per_doc = (scored.select(
-        "id", "pos",
-        F.when(F.col("pos").isNotNull(), F.log(s)).alias("_ls"))
-        .groupBy("id")
-        .agg(F.count("pos").alias("n_tokens"),
-             F.aggregate(
-                 F.array_sort(F.collect_list(
-                     F.when(F.col("pos").isNotNull(),
-                            F.struct("pos", "_ls")))),
-                 F.lit(0.0),
-                 lambda acc, x: acc + x["_ls"]).alias("_sum")))
-    # explicit 0-token guard (NULL ppl) — ANSI-safe where a bare 0/0
-    # division would throw
-    return per_doc.select(
-        "id",
-        F.when(F.col("n_tokens") > 0,
-               F.exp(-F.col("_sum") / F.col("n_tokens").cast("double")))
-        .alias("sb_ppl"),
-        F.col("n_tokens"))
+    return _perplexity(scored, s, "sb_ppl")

@@ -24,6 +24,19 @@ def _c(col) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
+def _fold_sum(key: Column, val: Column) -> Column:
+    """Deterministic float reduction: fold ``val`` in ``key`` order.
+    Float addition is not associative, so a plain ``F.sum`` over a
+    shuffle wobbles run-to-run; sorting the group's ``(key, val)``
+    structs first makes the sum bit-reproducible and mirrorable by a
+    sequential oracle.  ``key`` must be unique within the group (struct
+    sort ties would otherwise fall through to the value)."""
+    return F.aggregate(
+        F.array_sort(F.collect_list(F.struct(key.alias("k"),
+                                             val.alias("v")))),
+        F.lit(0.0), lambda acc, x: acc + x["v"])
+
+
 # --------------------------------------------------------------------------
 # Token counting
 # --------------------------------------------------------------------------
@@ -611,12 +624,8 @@ def quality_classifier_join(df, id_col: str, text_col: str = "text",
         .agg(F.count(F.lit(1)).alias("_cnt"))
         .join(F.broadcast(wdf), "token")
         .groupBy(id_col)
-        .agg(F.aggregate(
-            F.array_sort(F.collect_list(F.struct(
-                F.col("token"),
-                (F.col("weight") * F.col("_cnt")).alias("_contrib")))),
-            F.lit(0.0),
-            lambda acc, s: acc + s["_contrib"]).alias("_total")))
+        .agg(_fold_sum(F.col("token"), F.col("weight") * F.col("_cnt"))
+             .alias("_total")))
     # docs whose every token is OOV (or that are empty) vanish at the
     # inner join — restore them with a zero numerator; NULL text stays
     # NULL-scored (matching the literal path, where the fold over a NULL

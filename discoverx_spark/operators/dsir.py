@@ -40,7 +40,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.text import tokens_sql_expr
+from ..functions.text import _fold_sum, tokens_sql_expr
 from .sampling import _bucket_expr
 
 DSIR_BUCKETS = 8192
@@ -113,12 +113,8 @@ def dsir_log_weights(raw_df: DataFrame, target_df: DataFrame,
                    .agg(F.count(F.lit(1)).alias("_cb")))
     weights = (doc_buckets.join(F.broadcast(ratio), "bucket")
                .groupBy("id")
-               .agg(F.aggregate(
-                   F.array_sort(F.collect_list(F.struct(
-                       F.col("bucket"),
-                       (F.col("_cb") * F.col("_lr")).alias("_w")))),
-                   F.lit(0.0),
-                   lambda acc, s: acc + s["_w"]).alias("log_weight")))
+               .agg(_fold_sum(F.col("bucket"), F.col("_cb") * F.col("_lr"))
+                    .alias("log_weight")))
     ids = raw_df.select(F.col(id_col).alias("id"))
     return (ids.join(weights, "id", "left")
             .select("id", F.coalesce("log_weight", F.lit(0.0))

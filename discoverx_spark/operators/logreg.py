@@ -52,19 +52,9 @@ from typing import Optional, Tuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens_sql_expr as _tokens
+from ..functions.text import _fold_sum, tokens_sql_expr as _tokens
 
 BIAS_FEATURE = -1
-
-
-def _fold_sum(key: Column, val: Column) -> Column:
-    """Deterministic float reduction: fold ``val`` in ``key`` order.
-    ``key`` must be unique within the group (struct sort ties would
-    otherwise fall through to the value)."""
-    return F.aggregate(
-        F.array_sort(F.collect_list(F.struct(key.alias("k"),
-                                             val.alias("v")))),
-        F.lit(0.0), lambda acc, x: acc + x["v"])
 
 
 def hashed_features(df: DataFrame, text_col: str, id_col: str,

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.text import tokens_sql_expr
+from ..functions.text import _fold_sum, tokens_sql_expr
 
 K1 = 1.2
 B = 0.75
@@ -97,10 +97,7 @@ def bm25_topk(df: DataFrame, text_col: str, id_col: str,
               # cross-engine oracle hash needs bit-identical doubles —
               # same policy as the cosine dot-product fold
               .groupBy("id")
-              .agg(F.aggregate(
-                  F.array_sort(F.collect_list(F.struct("term", "_s"))),
-                  F.lit(0.0),
-                  lambda acc, x: acc + x["_s"]).alias("score")))
+              .agg(_fold_sum(F.col("term"), F.col("_s")).alias("score")))
     # top-k via TakeOrderedAndProject (never a global sort); the ranking
     # window then runs over the ≤k surviving rows only
     topk = (scored.select("id", F.round("score", round_digits).alias("score"))
@@ -199,10 +196,7 @@ def bm25_topk_batch(df: DataFrame, text_col: str, id_col: str,
             F.col("_idf") * (F.col("tf") * (k1 + 1))
             / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("_avgdl"))))
         .groupBy("query_id", "id")
-        .agg(F.aggregate(
-            F.array_sort(F.collect_list(F.struct("term", "_s"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["_s"]).alias("score")))
+        .agg(_fold_sum(F.col("term"), F.col("_s")).alias("score")))
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("id"))
     return (scored.select("query_id", "id",
                           F.round("score", round_digits).alias("score"))
@@ -256,19 +250,15 @@ def sparse_near_duplicates(df: DataFrame, text_col: str, id_col: str,
     w = tfidf_weights(df, text_col, id_col, max_df=max_df) \
         .localCheckpoint(eager=True)
     norms = w.groupBy("id").agg(
-        F.sqrt(F.aggregate(
-            F.array_sort(F.collect_list(F.struct("term", "w"))),
-            F.lit(0.0), lambda acc, x: acc + x["w"] * x["w"]))
+        F.sqrt(_fold_sum(F.col("term"), F.col("w") * F.col("w")))
         .alias("norm"))
     a = w.select(F.col("id").alias("id_a"), "term", F.col("w").alias("w_a"))
     b = w.select(F.col("id").alias("id_b"), "term", F.col("w").alias("w_b"))
     dots = (a.join(b, on="term")
             .filter(F.col("id_a") < F.col("id_b"))
             .groupBy("id_a", "id_b")
-            .agg(F.aggregate(
-                F.array_sort(F.collect_list(
-                    F.struct("term", (F.col("w_a") * F.col("w_b")).alias("p")))),
-                F.lit(0.0), lambda acc, x: acc + x["p"]).alias("dot")))
+            .agg(_fold_sum(F.col("term"), F.col("w_a") * F.col("w_b"))
+                 .alias("dot")))
     na = norms.select(F.col("id").alias("id_a"), F.col("norm").alias("norm_a"))
     nb = norms.select(F.col("id").alias("id_b"), F.col("norm").alias("norm_b"))
     return (dots.join(na, on="id_a").join(nb, on="id_b")

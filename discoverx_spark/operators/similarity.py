@@ -19,6 +19,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import _fold_sum
+
 
 def dot_expr(a, b) -> Column:
     """Sequential left-fold dot product in double precision."""
@@ -580,10 +582,8 @@ def pq_topk(codes_df: DataFrame, codebook: DataFrame,
               .select("id", F.posexplode("codes").alias("subspace", "code"))
               .join(F.broadcast(lut), ["subspace", "code"])
               .groupBy("id")
-              .agg(F.round(F.aggregate(
-                  F.array_sort(F.collect_list(F.struct("subspace", "_d"))),
-                  F.lit(0.0), lambda acc, x: acc + x["_d"]),
-                  round_digits).alias("adc_dist")))
+              .agg(F.round(_fold_sum(F.col("subspace"), F.col("_d")),
+                           round_digits).alias("adc_dist")))
     topk = scores.orderBy(F.asc("adc_dist"), F.asc("id")).limit(k)
     w = Window.orderBy(F.asc("adc_dist"), F.asc("id"))
     return topk.withColumn("rank", F.row_number().over(w))

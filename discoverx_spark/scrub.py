@@ -135,26 +135,15 @@ SCRUB_RESULT_TYPE = T.StructType([
 def make_scrub_udf(profile: str = PROFILE_PYTHON):
     """Arrow-batched scrub UDF: ``text -> struct(scrubbed_text, pii_counts)``.
 
-    Iterator-of-series form so the compiled alternation is built once per
-    executor Python worker (pattern from reference
+    Each row goes through :func:`scrub_string`, whose per-profile cache
+    compiles the rules once per executor Python worker (iterator-of-series
+    form, pattern from reference
     ``examples/pii_detection_presidio.py:117-128``).
     """
 
     def _scrub_batches(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        rules = _compiled(profile)
-
-        def one(text):
-            if text is None:
-                return None, {}
-            counts = {}
-            for name, rx, token in rules:
-                text, n = rx.subn(token, text)
-                if n:
-                    counts[name] = n
-            return text, counts
-
         for batch in batches:
-            out = [one(t) for t in batch]
+            out = [scrub_string(t, profile) for t in batch]
             yield pd.DataFrame(
                 {"scrubbed_text": [o[0] for o in out],
                  "pii_counts": [o[1] for o in out]}

@@ -13,11 +13,14 @@ import pyarrow.parquet as pq
 import pytest
 
 from discoverx_spark.dx import DX
+from discoverx_spark.functions.kneser_ney import (kneser_ney_model,
+                                                  kneser_ney_score)
 from discoverx_spark.functions.ngram_lm import (stupid_backoff_score,
                                                 word_ngram_counts)
 from discoverx_spark.lineage import ResumableRunner, write_bucketed
 from discoverx_spark.pipeline import PipelineConfig
-from discoverx_spark.queries import q_dedup_stack_documents
+from discoverx_spark.queries import (q_dedup_stack_documents,
+                                     q_kneser_ney_documents)
 from discoverx_spark.transcripts import generate_transcripts
 
 
@@ -152,6 +155,35 @@ def test_stupid_backoff_trains_and_scores_in_budget(spark, count_jobs):
     n, rows = count_jobs(scored.collect)
     assert n == 3
     assert len(rows) == 4
+
+
+@pytest.mark.parametrize("discount, build, score",
+                         [(0.75, 9, 4), ("modified", 9, 5)])
+def test_kneser_ney_trains_and_scores_in_budget(spark, count_jobs, discount,
+                                                build, score):
+    docs = spark.createDataFrame(
+        [(1, "the cat sat on the mat"), (2, "the cat ran"), (3, ""),
+         (4, "a mat")], "doc_id long, text string")
+    # building the scorer trains the model (the stage jobs of its
+    # shuffles) and probes the checkpoint once for the model size, the
+    # totals and the count-of-counts
+    n, scored = count_jobs(lambda: kneser_ney_score(
+        docs, "text", "doc_id", kneser_ney_model(docs, "text"),
+        discount=discount))
+    assert n == build
+    # scoring: two broadcasts of the model relation (the c3/n2/n1 and the
+    # context projections), the per-document fold's shuffle, the result;
+    # modified KN adds the shuffle of its per-context splits
+    n, rows = count_jobs(scored.collect)
+    assert n == score
+    assert len(rows) == 4
+
+
+def test_kneser_ney_documents_in_budget(spark, sf_dir, count_jobs):
+    n, rows = count_jobs(
+        lambda: q_kneser_ney_documents(spark, sf_dir).collect())
+    assert n == 16
+    assert rows
 
 
 def test_dedup_stack_documents_in_budget(spark, tmp_path, count_jobs):

@@ -208,6 +208,18 @@ def test_kn_oov_scores_positive(spark):
     assert n == 3 and ppl is not None and math.isfinite(ppl) and ppl > 0
 
 
+@pytest.mark.parametrize("discount", [0.75, "modified"])
+def test_kn_bigram_free_model_scores_null(spark, discount):
+    """A corpus whose every document has at most one token trains a
+    model with no bigram types, N₁₊(··) = 0: every document scores a
+    NULL perplexity (as Stupid Backoff does against a model without
+    unigrams) with its token count kept, where dividing by the zero
+    total would raise under ANSI mode."""
+    texts = ["hello", "world", ""]
+    got = _spark_ppl(spark, texts, texts, discount)
+    assert got == {0: (None, 1), 1: (None, 1), 2: (None, 0)}
+
+
 def test_kn_bad_discount_raises(spark):
     train = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
     model = kneser_ney_model(train, "text")
