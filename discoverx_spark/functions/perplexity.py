@@ -90,15 +90,18 @@ def _train(k: float = 0.5) -> np.ndarray:
 CHAR_LM: np.ndarray = _train()
 
 
-def perplexity_of(text: Optional[str]) -> float:
-    """Driver-side scorer (tests / oracle cross-checks)."""
-    if text is None:
-        return float(V)
-    ids = _ids(text)
+def ids_perplexity(ids: np.ndarray, lm: np.ndarray = CHAR_LM) -> float:
+    """The perplexity formula: ``exp(-mean(ln P(c_i | c_{i-1})))`` of the
+    symbol ids from :func:`_ids` under ``lm``; ``V`` for fewer than two."""
     if ids.size < 2:
         return float(V)
-    logp = CHAR_LM[ids[:-1], ids[1:]]
+    logp = lm[ids[:-1], ids[1:]]
     return float(np.exp(-logp.sum() / logp.size))
+
+
+def perplexity_of(text: Optional[str]) -> float:
+    """Driver-side scorer (tests / oracle cross-checks)."""
+    return float(V) if text is None else ids_perplexity(_ids(text))
 
 
 def make_perplexity_udf(lm: Optional[np.ndarray] = None, spark=None):
@@ -128,15 +131,8 @@ def make_perplexity_udf(lm: Optional[np.ndarray] = None, spark=None):
     def batches(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
         m = bcast.value if bcast is not None else lm_matrix
         for s in it:
-            out = np.full(len(s), float(V), dtype=np.float64)
-            for i, t in enumerate(s.tolist()):
-                if t is None:
-                    continue
-                ids = _ids(t)
-                if ids.size >= 2:
-                    logp = m[ids[:-1], ids[1:]]
-                    out[i] = np.exp(-logp.sum() / logp.size)
-            yield pd.Series(out)
+            yield pd.Series([float(V) if t is None else ids_perplexity(_ids(t), m)
+                             for t in s.tolist()], dtype=np.float64)
 
     return F.pandas_udf(batches, returnType=T.DoubleType())
 

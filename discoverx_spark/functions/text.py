@@ -183,20 +183,93 @@ def langid_sql_exprs(text_sql: str) -> tuple:
     return lang_sql, score_sql
 
 
-# Unicode script ranges for the UDF variant (deterministic, no model file:
-# the fastText lid.176 binary is not shippable here, so the scale plumbing
-# is real and the scorer is a stub-quality heuristic — swap `_classify`
-# for a real model load per examples/pii_detection_presidio.py:94-97).
+# Unicode script ranges for the Python classifier (deterministic, no model
+# file: the fastText lid.176 binary is not shippable here, so the scale
+# plumbing is real and the scorer is a stub-quality heuristic — swap
+# `make_lang_classifier` for a real model load per
+# examples/pii_detection_presidio.py:94-97).
 _SCRIPTS = [
     ("zh", 0x4E00, 0x9FFF), ("ja", 0x3040, 0x30FF), ("ko", 0xAC00, 0xD7AF),
     ("ru", 0x0400, 0x04FF), ("ar", 0x0600, 0x06FF), ("he", 0x0590, 0x05FF),
     ("el", 0x0370, 0x03FF), ("hi", 0x0900, 0x097F), ("th", 0x0E00, 0x0E7F),
 ]
 
+_STRIP = ".,;:!?\"'()"
+
+
+def make_lang_classifier(stopwords: Optional[dict] = None):
+    """The Python language classifier of :func:`make_langid_udf` and the
+    pipeline's row scorer: ``lang_of(text, words) -> (lang, lang_score)``
+    with ``words = text.lower().split()``.  Script ranges first (non-ASCII
+    text only), then stopword density; a missed word ending in
+    punctuation is retried stripped.  ``stopwords`` ({lang: [word, ...]},
+    e.g. ``functions.models.load_stopwords(path)``) replaces
+    :data:`LANG_STOPWORDS`; its words are lowercased and its key order is
+    the tie order.  Build one per task: it caches word masks (bounded)."""
+    tables = stopwords if stopwords is not None else LANG_STOPWORDS
+    order = list(tables) if stopwords is not None else _LANG_ORDER
+    n_langs = len(order)
+    # stopword → bitmask over ``order``: one dict probe per word instead
+    # of one set probe per language
+    word_langs = {}
+    for li, lang in enumerate(order):
+        for w in tables[lang]:
+            w = w.lower()
+            word_langs[w] = word_langs.get(w, 0) | (1 << li)
+    # word → resolved mask INCLUDING the punctuation-strip fallback,
+    # learned per classifier (bounded): real vocabularies are Zipf, so
+    # the common words hit one dict probe instead of probe+strip+reprobe
+    mask_cache = dict(word_langs)
+
+    def lang_of(text: str, words: list) -> tuple:
+        # script detection only for non-ASCII text (isascii is C-speed)
+        if not text.isascii():
+            counts = {}
+            for ch in text:
+                cp = ord(ch)
+                if cp < 0x300:
+                    continue
+                for lang, lo, hi in _SCRIPTS:
+                    if lo <= cp <= hi:
+                        counts[lang] = counts.get(lang, 0) + 1
+                        break
+            if counts:
+                best = max(sorted(counts), key=counts.get)
+                frac = counts[best] / max(len(text), 1)
+                if frac > 0.15:
+                    return best, min(1.0, frac * 2)
+        if not words:
+            return "und", 0.0
+        hits = [0] * n_langs
+        cache_get = mask_cache.get
+        for w in words:
+            m = cache_get(w)
+            if m is None:
+                mm = word_langs.get(w)
+                if mm is None and w and w[-1] in _STRIP:
+                    mm = word_langs.get(w.strip(_STRIP))
+                m = mm or 0
+                if len(mask_cache) < 262_144:
+                    mask_cache[w] = m
+            if m:
+                for li in range(n_langs):
+                    if m & (1 << li):
+                        hits[li] += 1
+        best_li, best_hits = 0, 0
+        for li in range(n_langs):
+            if hits[li] > best_hits:
+                best_li, best_hits = li, hits[li]
+        if best_hits == 0:
+            return "und", 0.0
+        return order[best_li], min(1.0, best_hits / len(words) * 2)
+
+    return lang_of
+
 
 def make_langid_udf(stopwords=None):
-    """Arrow-batched language ID: script detection for non-Latin text,
-    stopword density for Latin text. Returns struct(lang, lang_score).
+    """Arrow-batched language ID: :func:`make_lang_classifier` per row,
+    so it gives ``pipeline.decide()``'s ``(lang, lang_score)``; NULL is
+    ``('und', 0.0)``.  Returns struct(lang, lang_score).
 
     ``stopwords`` overrides the embedded Latin-language tables with an
     external export ({lang: [word, ...]} from
@@ -204,48 +277,14 @@ def make_langid_udf(stopwords=None):
     order — the seam a real lid-model token table drops into."""
     import pyspark.sql.types as T
 
-    tables = stopwords if stopwords is not None else LANG_STOPWORDS
-    lang_order = list(stopwords) if stopwords is not None else _LANG_ORDER
-    # lowercase so external tables with mixed-case tokens still match the
-    # lowercased words (the membership test below is case-sensitive)
-    stop_sets = {l: frozenset(w.lower() for w in ws)
-                 for l, ws in tables.items()}
-
-    def _classify(text: Optional[str]):
-        if text is None or not text.strip():
-            return "und", 0.0
-        counts = {}
-        n_char = 0
-        for ch in text:
-            cp = ord(ch)
-            if cp < 0x300:
-                continue
-            n_char += 1
-            for lang, lo, hi in _SCRIPTS:
-                if lo <= cp <= hi:
-                    counts[lang] = counts.get(lang, 0) + 1
-                    break
-        if counts:
-            best = max(sorted(counts), key=counts.get)
-            frac = counts[best] / max(len(text), 1)
-            if frac > 0.15:
-                return best, min(1.0, frac * 2)
-        words = text.lower().split()
-        if not words:
-            return "und", 0.0
-        scores = {l: sum(w.strip(".,;:!?\"'()") in s for w in words) / len(words)
-                  for l, s in stop_sets.items()}
-        best = max(lang_order, key=lambda l: scores[l])
-        if scores[best] == 0:
-            return "und", 0.0
-        return best, min(1.0, scores[best] * 2)
-
     ret = T.StructType([T.StructField("lang", T.StringType()),
                         T.StructField("lang_score", T.DoubleType())])
 
     def batches(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+        lang_of = make_lang_classifier(stopwords)
         for s in it:
-            out = [_classify(t) for t in s]
+            out = [("und", 0.0) if t is None else lang_of(t, t.lower().split())
+                   for t in s]
             yield pd.DataFrame({"lang": [o[0] for o in out],
                                 "lang_score": [o[1] for o in out]})
 

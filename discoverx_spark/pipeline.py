@@ -35,16 +35,15 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Iterator, Optional, Tuple
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .functions import perplexity as _ppl
-from .functions.text import (_LANG_ORDER, _SCRIPTS, LANG_STOPWORDS,
-                             TOXIC_KEYWORDS, toxicity_pattern)
-from .scrub import PROFILE_PYTHON, _compiled
+from .functions.perplexity import V, _ids, ids_perplexity
+from .functions.text import (TOXIC_KEYWORDS, make_lang_classifier,
+                             toxicity_pattern)
+from .scrub import PROFILE_PYTHON, _compiled, scrub_pii
 
 DECISION_COLUMNS = [
     "conv_id", "turn_idx", "role", "lang", "lang_score", "perplexity",
@@ -62,7 +61,6 @@ class PipelineConfig:
     max_perplexity: float = 16.0
     max_toxicity_hits: int = 1          # drop when hits >= this
     toxicity_keywords: Optional[Tuple[str, ...]] = None
-    scrub_profile: str = PROFILE_PYTHON
     # Bounded PER-TASK result cache keyed on the raw text (the
     # iterator-of-series closure is rebuilt per task, so the cache resets
     # at partition boundaries — cross-partition duplicates re-compute).
@@ -91,83 +89,25 @@ _FEATURES_TYPE = T.StructType([
 _FEAT_COLS = [f.name for f in _FEATURES_TYPE.fields]
 
 
-def make_row_scorer(scrub_profile: str = PROFILE_PYTHON,
-                    toxicity_keywords: Optional[Tuple[str, ...]] = None):
-    """Build the per-row feature closure shared by the Arrow UDF (one
-    instance per Python worker) and the driver-side reference scorer used
-    by tests and the correctness oracle.  Returns ``one(text) -> tuple``
-    in ``_FEAT_COLS`` order."""
+def make_row_scorer(toxicity_keywords: Optional[Tuple[str, ...]] = None):
+    """Build the per-row feature closure of the fused Arrow UDF (one
+    instance per task) and of driver-side checks and benchmarks.  It
+    composes the feature kernels — :func:`scrub.scrub_pii` over the exact
+    profile, :func:`functions.perplexity.ids_perplexity`,
+    :func:`functions.text.make_lang_classifier` and the toxicity pattern;
+    ``oracle_ref`` re-implements them independently.  Returns
+    ``one(text) -> tuple`` in ``_FEAT_COLS`` order."""
     import re as _re
 
     kws = list(toxicity_keywords) if toxicity_keywords is not None else TOXIC_KEYWORDS
-    rules = _compiled(scrub_profile)
-    lm = _ppl.CHAR_LM
-    v = float(_ppl.V)
-    # stopword → bitmask over _LANG_ORDER: one dict probe per word
-    # instead of four set probes
-    word_langs = {}
-    for li, l in enumerate(_LANG_ORDER):
-        for w in LANG_STOPWORDS[l]:
-            word_langs[w] = word_langs.get(w, 0) | (1 << li)
-    # derived, never hardcoded: a language added to _LANG_ORDER must
-    # flow into the mask loops or its stopword hits are silently dropped
-    _N_LANGS = len(_LANG_ORDER)
-    # word → resolved mask INCLUDING the punctuation-strip fallback,
-    # learned per worker (bounded): real vocabularies are Zipf, so the
-    # common words hit one dict probe instead of probe+strip+reprobe
-    # (measured ~1.2× on the word loop; semantics unchanged)
-    mask_cache = dict(word_langs)
+    rules = _compiled(PROFILE_PYTHON)
+    v = float(V)
+    lang_of = make_lang_classifier()
     # shared escaped builder: keywords match literally (metacharacters
     # escaped) and an empty list DISABLES the gate (None) instead of
     # compiling the match-everything empty alternation
     _tox_pat = toxicity_pattern(kws)
     tox_rx = _re.compile(_tox_pat) if _tox_pat is not None else None
-    strip_chars = ".,;:!?\"'()"
-    # every scrub pattern requires '@', ':', '/', or a digit — one cheap
-    # C-level scan rejects the (common) PII-free rows before 7 regex subs
-    pii_gate = _re.compile(r"[@:/0-9]")
-
-    def lang_of(text, words):
-        # script detection only for non-ASCII text (isascii is C-speed)
-        if not text.isascii():
-            counts = {}
-            for ch in text:
-                cp = ord(ch)
-                if cp < 0x300:
-                    continue
-                for lang, lo, hi in _SCRIPTS:
-                    if lo <= cp <= hi:
-                        counts[lang] = counts.get(lang, 0) + 1
-                        break
-            if counts:
-                best = max(sorted(counts), key=counts.get)
-                frac = counts[best] / max(len(text), 1)
-                if frac > 0.15:
-                    return best, min(1.0, frac * 2)
-        if not words:
-            return "und", 0.0
-        masks = [0] * _N_LANGS
-        cache_get = mask_cache.get
-        for w in words:
-            m = cache_get(w)
-            if m is None:
-                mm = word_langs.get(w)
-                if mm is None and w and w[-1] in strip_chars:
-                    mm = word_langs.get(w.strip(strip_chars))
-                m = mm or 0
-                if len(mask_cache) < 262_144:
-                    mask_cache[w] = m
-            if m:
-                for li in range(_N_LANGS):
-                    if m & (1 << li):
-                        masks[li] += 1
-        best_li, best_hits = 0, 0
-        for li in range(_N_LANGS):
-            if masks[li] > best_hits:
-                best_li, best_hits = li, masks[li]
-        if best_hits == 0:
-            return "und", 0.0
-        return _LANG_ORDER[best_li], min(1.0, best_hits / len(words) * 2)
 
     def one(text):
         if text is None:
@@ -175,40 +115,23 @@ def make_row_scorer(scrub_profile: str = PROFILE_PYTHON,
         lowered = text.lower()
         words = lowered.split()
         n_tokens = len(words)
-        n_chars = len(text)
-        is_blank = not text.strip()
         lang, lang_score = lang_of(text, words)
         tox_hits = (len(tox_rx.findall(lowered))
                     if tox_rx is not None else 0)
-        tox_score = tox_hits / max(n_tokens, 1)
-        ids = _ppl._ids(text, lowered)  # perplexity: ORIGINAL text
-        if ids.size >= 2:
-            logp = lm[ids[:-1], ids[1:]]
-            ppl = float(np.exp(-logp.sum() / logp.size))
-        else:
-            ppl = v
-        # scrubbed_text is None when nothing changed (the common case):
-        # skipping the Arrow round-trip of unchanged text cuts the UDF
-        # return payload ~8× (JVM side coalesces back to the original)
-        counts = None
-        scrubbed = None
-        if pii_gate.search(text):
-            new_text = text
-            for name, rx, token in rules:
-                new_text, n = rx.subn(token, new_text)
-                if n:
-                    counts = counts or {}
-                    counts[name] = n
-            if counts is not None:
-                scrubbed = new_text
-        return (scrubbed, counts, ppl, lang, lang_score, tox_hits,
-                tox_score, n_tokens, n_chars, is_blank)
+        # scrubbed_text and pii_counts are None when nothing changed (the
+        # common case): skipping the Arrow round-trip of unchanged text
+        # cuts the UDF return payload ~8× (JVM side coalesces back to the
+        # original)
+        scrubbed, counts = scrub_pii(text, rules)
+        # perplexity: ORIGINAL text
+        return (scrubbed, counts, ids_perplexity(_ids(text, lowered)),
+                lang, lang_score, tox_hits, tox_hits / max(n_tokens, 1),
+                n_tokens, len(text), not text.strip())
 
     return one
 
 
-def make_features_udf(scrub_profile: str = PROFILE_PYTHON,
-                      toxicity_keywords: Optional[Tuple[str, ...]] = None,
+def make_features_udf(toxicity_keywords: Optional[Tuple[str, ...]] = None,
                       memo_size: int = 0):
     """Single Arrow-batched UDF: scrub + pii counts + perplexity + language
     ID (script ranges → stopword density) + toxicity + token stats, one
@@ -223,7 +146,7 @@ def make_features_udf(scrub_profile: str = PROFILE_PYTHON,
     fraction (boilerplate-heavy web text: large; deduped prose: none)."""
 
     def batches(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        one = make_row_scorer(scrub_profile, toxicity_keywords)
+        one = make_row_scorer(toxicity_keywords)
         memo: dict = {}
         for s in it:
             if memo_size > 0:
@@ -247,8 +170,7 @@ def make_features_udf(scrub_profile: str = PROFILE_PYTHON,
 def annotate(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> DataFrame:
     """Attach the fused feature struct; no filtering. One narrow map stage,
     one ArrowEvalPython node."""
-    feats = make_features_udf(cfg.scrub_profile, cfg.toxicity_keywords,
-                              cfg.memo_size)
+    feats = make_features_udf(cfg.toxicity_keywords, cfg.memo_size)
     return df.select("*", feats(F.col("text")).alias("_feat"))
 
 

@@ -10,21 +10,25 @@ state, Arrow-batched, never per-row Python).
 Two deterministic profiles:
 
 * ``PROFILE_PYTHON`` — exact profile; Python ``re`` patterns with
-  lookaround guards, applied class-by-class in a fixed precedence order
-  inside an Arrow-vectorized pandas UDF.  Used by the transcripts pipeline
-  (:mod:`discoverx_spark.pipeline`).  Byte-deterministic: fixed class
-  order, each class replaces *all* occurrences before the next class runs,
-  so overlap resolution is total and resume-safe.
+  lookaround guards, applied class-by-class in a fixed precedence order.
+  Used by the transcripts pipeline's fused scorer
+  (:mod:`discoverx_spark.pipeline`) and by :func:`make_scrub_udf`.
+  Byte-deterministic: fixed class order, each class replaces *all*
+  occurrences before the next class runs, so overlap resolution is total
+  and resume-safe.
 * ``PROFILE_SQL`` — RE2-compatible profile (no lookaround), expressible
   identically as Spark JVM ``regexp_replace`` chains *and* in ANSI SQL
   engines (the DuckDB oracle).  This is the whole-stage-codegen fast path:
   zero Python in the hot loop.
 
-Both profiles emit ``(scrubbed_text, pii_counts map<class,int>)``.
+:func:`scrub_pii` is the one Python scrub loop: :func:`scrub_string`,
+:func:`make_scrub_udf` and the pipeline's row scorer all call it.  Both
+profiles emit ``(scrubbed_text, pii_counts map<class,int>)``.
 """
 
 from __future__ import annotations
 
+import functools
 import re
 from dataclasses import dataclass
 from typing import Iterator, Optional, Sequence
@@ -102,28 +106,47 @@ PROFILE_PYTHON = "python"
 PROFILE_SQL = "sql"
 
 
-def _compiled(profile: str) -> list:
+# Every rule of both profiles needs one of '@', ':', '/' or a digit (a
+# URL needs "://", an email '@', an IPv6 address ':', every other class a
+# digit), so text holding none of them skips the rule loop.  ``\d``
+# because Python's ``\d`` also takes non-ASCII decimal digits, which the
+# card, SSN and phone rules accept; on ASCII text ``0-9`` is the same
+# class and cheaper to test.
+_GATE = re.compile(r"[@:/\d]")
+_ASCII_GATE = re.compile(r"[@:/0-9]")
+
+
+@functools.lru_cache(maxsize=None)
+def _compiled(profile: str) -> tuple:
     attr = "pattern" if profile == PROFILE_PYTHON else "sql_pattern"
-    return [(r.class_name, re.compile(getattr(r, attr)), r.token)
-            for r in SCRUB_RULES]
+    return tuple((r.class_name, re.compile(getattr(r, attr)), r.token)
+                 for r in SCRUB_RULES)
 
 
-def scrub_string(text: Optional[str], profile: str = PROFILE_PYTHON,
-                 _cache={}) -> tuple:
+def scrub_pii(text: str, rules: Sequence) -> tuple:
+    """The scrub loop: ``rules`` (``_compiled(profile)``) in precedence
+    order, each class replacing all of its matches before the next runs.
+    Returns ``(scrubbed, {class: count})``, or ``(None, None)`` when no
+    rule matched."""
+    if not (_ASCII_GATE if text.isascii() else _GATE).search(text):
+        return None, None
+    counts = None
+    for name, rx, token in rules:
+        text, n = rx.subn(token, text)
+        if n:
+            if counts is None:
+                counts = {}
+            counts[name] = n
+    return (None, None) if counts is None else (text, counts)
+
+
+def scrub_string(text: Optional[str], profile: str = PROFILE_PYTHON) -> tuple:
     """Scrub one string → (scrubbed, {class: count}). Reference semantics
     for determinism: fixed class order, global replace per class."""
     if text is None:
         return None, {}
-    rules = _cache.get(profile)
-    if rules is None:
-        rules = _cache[profile] = _compiled(profile)
-    counts = {}
-    for name, rx, token in rules:
-        new_text, n = rx.subn(token, text)
-        if n:
-            counts[name] = counts.get(name, 0) + n
-            text = new_text
-    return text, counts
+    scrubbed, counts = scrub_pii(text, _compiled(profile))
+    return (text, {}) if counts is None else (scrubbed, counts)
 
 
 SCRUB_RESULT_TYPE = T.StructType([
@@ -135,10 +158,9 @@ SCRUB_RESULT_TYPE = T.StructType([
 def make_scrub_udf(profile: str = PROFILE_PYTHON):
     """Arrow-batched scrub UDF: ``text -> struct(scrubbed_text, pii_counts)``.
 
-    Each row goes through :func:`scrub_string`, whose per-profile cache
-    compiles the rules once per executor Python worker (iterator-of-series
-    form, pattern from reference
-    ``examples/pii_detection_presidio.py:117-128``).
+    Each row goes through :func:`scrub_string`; the rules are compiled
+    once per profile per executor Python worker (iterator-of-series form,
+    pattern from reference ``examples/pii_detection_presidio.py:117-128``).
     """
 
     def _scrub_batches(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
@@ -152,13 +174,14 @@ def make_scrub_udf(profile: str = PROFILE_PYTHON):
     return F.pandas_udf(_scrub_batches, returnType=SCRUB_RESULT_TYPE)
 
 
-def scrub_text_expr(col, profile: str = PROFILE_SQL) -> Column:
-    """JVM-only scrub: chained ``regexp_replace`` (whole-stage codegen, zero
-    Python).  Same fixed class order as the UDF path."""
+def scrub_text_expr(col) -> Column:
+    """JVM-only scrub: chained ``regexp_replace`` of the ``PROFILE_SQL``
+    patterns (whole-stage codegen, zero Python; the same text as the
+    DuckDB oracle's :func:`scrub_sql_exprs`).  Same fixed class order as
+    the UDF path."""
     c = F.col(col) if isinstance(col, str) else col
-    attr = "pattern" if profile == PROFILE_PYTHON else "sql_pattern"
     for r in SCRUB_RULES:
-        c = F.regexp_replace(c, getattr(r, attr), r.token)
+        c = F.regexp_replace(c, r.sql_pattern, r.token)
     return c
 
 

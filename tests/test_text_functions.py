@@ -85,6 +85,29 @@ def test_langid_udf_scripts(spark):
     assert out == ["en", "ru", "zh", "und"]
 
 
+def test_langid_udf_equals_decide(spark):
+    """The standalone UDF and decide() share one classifier: a word that
+    misses is stripped of punctuation only when it ends in it, so
+    "(the" does not count."""
+    from discoverx_spark.pipeline import decide
+
+    texts = ["(the cat and the dog", "(le chat) (est)", "", None,
+             "Это тест на русском языке", "这是一个中文测试句子 the and"]
+    df = spark.createDataFrame(
+        [("c", i, "user", t) for i, t in enumerate(texts)],
+        "conv_id string, turn_idx long, role string, text string")
+    udf = {r["turn_idx"]: (r["l"]["lang"], r["l"]["lang_score"])
+           for r in df.select("turn_idx", make_langid_udf()("text")
+                              .alias("l")).collect()}
+    dec = {r["turn_idx"]: (r["lang"], r["lang_score"])
+           for r in decide(df).collect()}
+    assert udf == dec
+    assert udf[0] == ("en", 0.8)
+    assert udf[1] == ("fr", pytest.approx(2 / 3))
+    assert udf[2] == udf[3] == ("und", 0.0)
+    assert [udf[4][0], udf[5][0]] == ["ru", "zh"]
+
+
 def test_toxicity(spark):
     df = spark.createDataFrame(
         [("you are stupid and dumb",), ("a perfectly nice sentence",),
