@@ -43,7 +43,7 @@ from pyspark.sql import types as T
 from .functions.perplexity import V, _ids, ids_perplexity
 from .functions.text import (TOXIC_KEYWORDS, make_lang_classifier,
                              toxicity_pattern)
-from .scrub import PROFILE_PYTHON, _compiled, scrub_pii
+from .scrub import scrub_pii
 
 DECISION_COLUMNS = [
     "conv_id", "turn_idx", "role", "lang", "lang_score", "perplexity",
@@ -100,7 +100,6 @@ def make_row_scorer(toxicity_keywords: Optional[Tuple[str, ...]] = None):
     import re as _re
 
     kws = list(toxicity_keywords) if toxicity_keywords is not None else TOXIC_KEYWORDS
-    rules = _compiled(PROFILE_PYTHON)
     v = float(V)
     lang_of = make_lang_classifier()
     # shared escaped builder: keywords match literally (metacharacters
@@ -122,7 +121,7 @@ def make_row_scorer(toxicity_keywords: Optional[Tuple[str, ...]] = None):
         # common case): skipping the Arrow round-trip of unchanged text
         # cuts the UDF return payload ~8× (JVM side coalesces back to the
         # original)
-        scrubbed, counts = scrub_pii(text, rules)
+        scrubbed, counts = scrub_pii(text)
         # perplexity: ORIGINAL text
         return (scrubbed, counts, ids_perplexity(_ids(text, lowered)),
                 lang, lang_score, tox_hits, tox_hits / max(n_tokens, 1),

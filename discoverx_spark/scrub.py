@@ -108,12 +108,10 @@ PROFILE_SQL = "sql"
 
 # Every rule of both profiles needs one of '@', ':', '/' or a digit (a
 # URL needs "://", an email '@', an IPv6 address ':', every other class a
-# digit), so text holding none of them skips the rule loop.  ``\d``
-# because Python's ``\d`` also takes non-ASCII decimal digits, which the
-# card, SSN and phone rules accept; on ASCII text ``0-9`` is the same
-# class and cheaper to test.
+# digit), so text holding none of them skips the rule loop.  ``\d``, not
+# ``0-9``: Python's ``\d`` also takes non-ASCII decimal digits, which the
+# card, SSN and phone rules accept.
 _GATE = re.compile(r"[@:/\d]")
-_ASCII_GATE = re.compile(r"[@:/0-9]")
 
 
 @functools.lru_cache(maxsize=None)
@@ -123,15 +121,15 @@ def _compiled(profile: str) -> tuple:
                  for r in SCRUB_RULES)
 
 
-def scrub_pii(text: str, rules: Sequence) -> tuple:
-    """The scrub loop: ``rules`` (``_compiled(profile)``) in precedence
-    order, each class replacing all of its matches before the next runs.
-    Returns ``(scrubbed, {class: count})``, or ``(None, None)`` when no
-    rule matched."""
-    if not (_ASCII_GATE if text.isascii() else _GATE).search(text):
+def scrub_pii(text: str, profile: str = PROFILE_PYTHON) -> tuple:
+    """The scrub loop: the ``profile``'s rules in precedence order, each
+    class replacing all of its matches before the next runs.  Returns
+    ``(scrubbed, {class: count})``, or ``(None, None)`` when no rule
+    matched — the fused row scorer ships those Nones as is."""
+    if not _GATE.search(text):
         return None, None
     counts = None
-    for name, rx, token in rules:
+    for name, rx, token in _compiled(profile):
         text, n = rx.subn(token, text)
         if n:
             if counts is None:
@@ -141,11 +139,12 @@ def scrub_pii(text: str, rules: Sequence) -> tuple:
 
 
 def scrub_string(text: Optional[str], profile: str = PROFILE_PYTHON) -> tuple:
-    """Scrub one string → (scrubbed, {class: count}). Reference semantics
-    for determinism: fixed class order, global replace per class."""
+    """Scrub one string → (scrubbed, {class: count}), the text itself and
+    ``{}`` when nothing matched.  Reference semantics for determinism:
+    fixed class order, global replace per class."""
     if text is None:
         return None, {}
-    scrubbed, counts = scrub_pii(text, _compiled(profile))
+    scrubbed, counts = scrub_pii(text, profile)
     return (text, {}) if counts is None else (scrubbed, counts)
 
 
