@@ -5,7 +5,8 @@
 test:
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" \
 	  SPARK_LOCAL_DIRS=/tmp/spark-local; \
-	python -m pytest tests/ -q -p no:cacheprovider
+	timeout -k 10 2670 python -m pytest tests/ -q \
+	  --continue-on-collection-errors -p no:cacheprovider
 
 bench:
 	python bench.py

@@ -116,7 +116,7 @@ def force(df) -> None:
 
 def warm_python_workers(spark, cpus: int) -> None:
     """Fork + import-warm one Python UDF worker per task slot.  First-touch
-    of a pandas UDF costs 1-2 s/worker (numpy+pandas import); timing that
+    of a Python UDF costs 1-2 s/worker (library imports); timing that
     would measure interpreter startup, not the operators."""
     from discoverx_spark.pipeline import decide
     from discoverx_spark.transcripts import generate_transcripts

@@ -4,8 +4,8 @@ Reference context: discoverx's term gates scan with one regex per rule
 (``scanner.py:310-313``) — O(patterns × text).  A production blocklist
 or taxonomy has 10³-10⁵ terms; Aho-Corasick matches ALL of them in one
 O(text) pass per document, which is the difference between feasible and
-not at 100 TB.  The automaton is built ONCE PER WORKER inside the pandas
-UDF's per-batch closure cache (the iterator-UDF per-worker-state pattern
+not at 100 TB.  The automaton is built ONCE PER TASK by the kernel
+factory that ``functions.udf.row_udf`` calls (the per-task-state pattern
 the transcripts pipeline uses), so per-row cost is pure matching.
 
 Counting semantics: per keyword, matches are counted LEFTMOST-GREEDY
@@ -20,10 +20,10 @@ from __future__ import annotations
 
 from typing import Iterable, List, Sequence, Tuple
 
-import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, IntegerType, StringType,
                                StructField, StructType)
+
+from .udf import row_udf
 
 
 def build_automaton(keywords: Sequence[str]):
@@ -94,17 +94,14 @@ _MATCH_SCHEMA = ArrayType(StructType([
 
 def make_keyword_match_udf(keywords: Sequence[str],
                            lowercase: bool = True):
-    """Pandas UDF: text -> array<struct<kw,cnt>> of keywords with at
-    least one match.  The automaton is built lazily once per Python
-    worker (captured list is small; the trie is built on first batch)."""
+    """Arrow UDF: text -> array<struct<kw,cnt>> of keywords with at
+    least one match.  The automaton is built once per task, in the
+    kernel factory :func:`functions.udf.row_udf` calls; only the small
+    keyword list rides the closure."""
     kws = [k.lower() for k in keywords] if lowercase else list(keywords)
-    state: dict = {}
 
-    @F.pandas_udf(_MATCH_SCHEMA)
-    def match(texts: pd.Series) -> pd.Series:
-        if "ac" not in state:
-            state["ac"] = build_automaton(kws)
-        goto, fail, out = state["ac"]
+    def make_kernel():
+        goto, fail, out = build_automaton(kws)
 
         def one(t):
             if t is None:
@@ -114,6 +111,6 @@ def make_keyword_match_udf(keywords: Sequence[str],
             return [{"kw": kws[i], "cnt": int(n)}
                     for i, n in enumerate(c) if n > 0]
 
-        return texts.map(one)
+        return one
 
-    return match
+    return row_udf(make_kernel, _MATCH_SCHEMA)

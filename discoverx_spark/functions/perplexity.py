@@ -6,9 +6,10 @@ environment, so the *model* is a small deterministic character-bigram LM
 trained at import time on an embedded English corpus — but the Spark-side
 plumbing is exactly the production shape: the probability matrix is built
 once per Python worker, scoring is pure numpy over Arrow batches
-(no per-row Python beyond an ASCII re-encode), and the UDF is the
-iterator-of-series form from the reference's sanctioned pattern
-(``/root/reference/examples/pii_detection_presidio.py:117-128``).
+(no per-row Python beyond an ASCII re-encode), and the UDF is a per-row
+kernel run by the package's one Arrow UDF shell, ``functions.udf.row_udf``
+(per-task state as in the reference's sanctioned pattern,
+``/root/reference/examples/pii_detection_presidio.py:117-128``).
 Swap ``CHAR_LM`` for a memory-mapped KenLM load to productionize.
 
 Scoring: texts are lowercased and projected onto a 27-symbol alphabet
@@ -21,12 +22,13 @@ drift well above — thresholds live in the pipeline config.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .udf import row_udf
 
 # Original training text (deterministic, embedded; ~1.4 KB).
 _TRAIN = (
@@ -128,13 +130,11 @@ def make_perplexity_udf(lm: Optional[np.ndarray] = None, spark=None):
         # ship the full matrix per task and defeat the broadcast
         lm_matrix = None
 
-    def batches(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    def make_kernel():
         m = bcast.value if bcast is not None else lm_matrix
-        for s in it:
-            yield pd.Series([float(V) if t is None else ids_perplexity(_ids(t), m)
-                             for t in s.tolist()], dtype=np.float64)
+        return lambda t: float(V) if t is None else ids_perplexity(_ids(t), m)
 
-    return F.pandas_udf(batches, returnType=T.DoubleType())
+    return row_udf(make_kernel, T.DoubleType())
 
 
 # --------------------------------------------------------------------------

@@ -13,11 +13,12 @@ the driver's correctness gate.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional, Sequence
+from typing import Optional, Sequence
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from .udf import row_udf
 
 
 def _c(col) -> Column:
@@ -280,15 +281,12 @@ def make_langid_udf(stopwords=None):
     ret = T.StructType([T.StructField("lang", T.StringType()),
                         T.StructField("lang_score", T.DoubleType())])
 
-    def batches(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+    def make_kernel():
         lang_of = make_lang_classifier(stopwords)
-        for s in it:
-            out = [("und", 0.0) if t is None else lang_of(t, t.lower().split())
-                   for t in s]
-            yield pd.DataFrame({"lang": [o[0] for o in out],
-                                "lang_score": [o[1] for o in out]})
+        return lambda t: (("und", 0.0) if t is None
+                          else lang_of(t, t.lower().split()))
 
-    return F.pandas_udf(batches, returnType=ret)
+    return row_udf(make_kernel, ret)
 
 
 # --------------------------------------------------------------------------
@@ -482,18 +480,13 @@ def make_compression_ratio_udf(level: int = 6):
 
     import pyspark.sql.types as T
 
-    def batches(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in it:
-            out = []
-            for t in s.tolist():
-                if not t:
-                    out.append(1.0)
-                else:
-                    raw = t.encode("utf-8")
-                    out.append(len(zlib.compress(raw, level)) / len(raw))
-            yield pd.Series(out, dtype="float64")
+    def ratio(t):
+        if not t:
+            return 1.0
+        raw = t.encode("utf-8")
+        return len(zlib.compress(raw, level)) / len(raw)
 
-    return F.pandas_udf(batches, returnType=T.DoubleType())
+    return row_udf(lambda: ratio, T.DoubleType())
 
 
 # --------------------------------------------------------------------------

@@ -34,10 +34,12 @@ import math
 from typing import Tuple
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType
+
+from ..functions.udf import row_udf
 
 
 def bloom_params(expected_items: int, fpp: float) -> Tuple[int, int]:
@@ -85,13 +87,17 @@ def make_might_contain_udf(spark, words: np.ndarray, num_bits: int,
     cross-implementation twin that certifies :func:`bloom_membership_frame`
     (the pure-Python XXH64 == F.xxhash64 equivalence is what makes the
     no-false-negative argument independently checkable); the production
-    probe path below never crosses the Python boundary."""
+    probe path below never crosses the Python boundary.
+
+    ``str(key)`` must equal the build's ``CAST(key AS STRING)``: keys
+    reach the kernel as plain Python values through
+    :func:`functions.udf.row_udf`, so an integer key is hashed as
+    ``'5'``, never ``'5.0'``, even in a batch that holds a NULL."""
     from ..functions.xxh import spark_xxhash64_string
 
     bc = spark.sparkContext.broadcast(words)
 
-    @F.pandas_udf("boolean")
-    def might_contain(keys: pd.Series) -> pd.Series:
+    def make_kernel():
         w = bc.value
 
         def test(s):
@@ -103,9 +109,9 @@ def make_might_contain_udf(spark, words: np.ndarray, num_bits: int,
                     return False
             return True
 
-        return keys.map(test)
+        return test
 
-    return might_contain
+    return row_udf(make_kernel, BooleanType())
 
 
 def bloom_membership_frame(df: DataFrame, key_col: str, words: np.ndarray,

@@ -34,13 +34,14 @@ the expression form; merge table broadcast per session).
 
 from __future__ import annotations
 
-from typing import Iterator, List, Tuple
+from typing import List, Tuple
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.text import tokens_sql_expr
+from ..functions.udf import row_udf
 from .packing import token_counts
 
 END_OF_WORD = "</w>"
@@ -336,14 +337,8 @@ def make_bpe_segment_udf(merges: List[Tuple[str, str]], spark=None):
             out.extend(syms)
         return out
 
-    def batches(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    def make_kernel():
         r, mlist = bcast.value if bcast is not None else payload
-        for s in it:
-            yield pd.Series([
-                None if t is None else segment(t.lower(), r, mlist)
-                for t in s])
+        return lambda t: None if t is None else segment(t.lower(), r, mlist)
 
-    from pyspark.sql import types as T
-
-    return F.pandas_udf(batches,
-                        returnType=T.ArrayType(T.StringType()))
+    return row_udf(make_kernel, T.ArrayType(T.StringType()))

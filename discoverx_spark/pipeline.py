@@ -15,13 +15,14 @@ Output schema = FIXTURES.md §F2 ``decisions`` table.
 
 Plan-shape engineering (measured on 5M turns, local[8] vs local[32]):
 
-* All per-row text analysis lives in a SINGLE ``pandas_udf`` returning one
-  struct — one ArrowEvalPython node, one serialization round-trip.  Two
-  chained UDFs doubled Arrow overhead; JVM-side regex variants of the same
-  features (still available in functions/text.py and used by the oracle
-  queries) caused JVM↔Python core contention at high parallelism: every
-  task thread ran ~20 regex passes per row while its Python worker was
-  also saturated, so local[32] barely beat local[8].
+* All per-row text analysis lives in a SINGLE Arrow UDF (``row_udf``)
+  returning one struct — one ArrowEvalPython node, one serialization
+  round-trip.  Two chained UDFs doubled Arrow overhead; JVM-side regex
+  variants of the same features (still available in functions/text.py
+  and used by the oracle queries) caused JVM↔Python core contention at
+  high parallelism: every task thread ran ~20 regex passes per row while
+  its Python worker was also saturated, so local[32] barely beat
+  local[8].
 * Gate logic is plain column arithmetic over the struct's fields —
   whole-stage codegen, no higher-order functions (``concat`` of
   conditional arrays, not ``filter``/``array_compact``, which knock the
@@ -33,9 +34,8 @@ Plan-shape engineering (measured on 5M turns, local[8] vs local[32]):
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Iterator, Optional, Tuple
+from typing import Optional, Tuple
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -43,6 +43,7 @@ from pyspark.sql import types as T
 from .functions.perplexity import V, _ids, ids_perplexity
 from .functions.text import (TOXIC_KEYWORDS, make_lang_classifier,
                              toxicity_pattern)
+from .functions.udf import row_udf
 from .scrub import scrub_pii
 
 DECISION_COLUMNS = [
@@ -61,9 +62,9 @@ class PipelineConfig:
     max_perplexity: float = 16.0
     max_toxicity_hits: int = 1          # drop when hits >= this
     toxicity_keywords: Optional[Tuple[str, ...]] = None
-    # Bounded PER-TASK result cache keyed on the raw text (the
-    # iterator-of-series closure is rebuilt per task, so the cache resets
-    # at partition boundaries — cross-partition duplicates re-compute).
+    # Bounded PER-TASK result cache keyed on the raw text (the row_udf
+    # kernel is rebuilt per task, so the cache resets at partition
+    # boundaries — cross-partition duplicates re-compute).
     # The scorer is a pure function, so caching is byte-exact; the win is
     # entirely
     # input-dependent (web boilerplate: large; unique prose: none).
@@ -86,8 +87,6 @@ _FEATURES_TYPE = T.StructType([
     T.StructField("is_blank", T.BooleanType()),
 ])
 
-_FEAT_COLS = [f.name for f in _FEATURES_TYPE.fields]
-
 
 def make_row_scorer(toxicity_keywords: Optional[Tuple[str, ...]] = None):
     """Build the per-row feature closure of the fused Arrow UDF (one
@@ -96,7 +95,7 @@ def make_row_scorer(toxicity_keywords: Optional[Tuple[str, ...]] = None):
     profile, :func:`functions.perplexity.ids_perplexity`,
     :func:`functions.text.make_lang_classifier` and the toxicity pattern;
     ``oracle_ref`` re-implements them independently.  Returns
-    ``one(text) -> tuple`` in ``_FEAT_COLS`` order."""
+    ``one(text) -> tuple`` in ``_FEATURES_TYPE`` field order."""
     import re as _re
 
     kws = list(toxicity_keywords) if toxicity_keywords is not None else TOXIC_KEYWORDS
@@ -132,38 +131,35 @@ def make_row_scorer(toxicity_keywords: Optional[Tuple[str, ...]] = None):
 
 def make_features_udf(toxicity_keywords: Optional[Tuple[str, ...]] = None,
                       memo_size: int = 0):
-    """Single Arrow-batched UDF: scrub + pii counts + perplexity + language
-    ID (script ranges → stopword density) + toxicity + token stats, one
-    Python pass per batch.  All compiled state is built once per TASK
-    (iterator-of-series lifecycle, reference
-    examples/pii_detection_presidio.py:117-128) — amortized over every
-    batch of the partition, not per row.
+    """Single Arrow UDF: scrub + pii counts + perplexity + language ID
+    (script ranges → stopword density) + toxicity + token stats, one
+    Python pass per batch through :func:`functions.udf.row_udf`.  The row
+    scorer's compiled state is built once per TASK and amortized over
+    every batch of the partition, not per row.
 
-    ``memo_size > 0`` adds a bounded per-task cache keyed on the raw
-    text (resets at partition boundaries): the scorer is pure, so results are byte-identical (pytest-
-    asserted); the speedup is proportional to the corpus's exact-duplicate
-    fraction (boilerplate-heavy web text: large; deduped prose: none)."""
+    ``memo_size > 0`` wraps the scorer in a bounded per-task cache keyed
+    on the raw text (resets at partition boundaries): the scorer is pure,
+    so results are byte-identical (pytest-asserted); the speedup is
+    proportional to the corpus's exact-duplicate fraction
+    (boilerplate-heavy web text: large; deduped prose: none)."""
 
-    def batches(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+    def make_kernel():
         one = make_row_scorer(toxicity_keywords)
+        if memo_size <= 0:
+            return one
         memo: dict = {}
-        for s in it:
-            if memo_size > 0:
-                out = []
-                get = memo.get
-                for t in s.tolist():
-                    r = get(t)
-                    if r is None:
-                        r = one(t)
-                        if len(memo) < memo_size:
-                            memo[t] = r
-                    out.append(r)
-            else:
-                out = [one(t) for t in s.tolist()]
-            yield pd.DataFrame({c: [o[i] for o in out]
-                                for i, c in enumerate(_FEAT_COLS)})
 
-    return F.pandas_udf(batches, returnType=_FEATURES_TYPE)
+        def cached(t):
+            r = memo.get(t)
+            if r is None:
+                r = one(t)
+                if len(memo) < memo_size:
+                    memo[t] = r
+            return r
+
+        return cached
+
+    return row_udf(make_kernel, _FEATURES_TYPE)
 
 
 def annotate(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> DataFrame:

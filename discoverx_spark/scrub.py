@@ -31,12 +31,13 @@ from __future__ import annotations
 import functools
 import re
 from dataclasses import dataclass
-from typing import Iterator, Optional, Sequence
+from typing import Optional, Sequence
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .functions.udf import row_udf
 
 
 @dataclass(frozen=True)
@@ -155,22 +156,14 @@ SCRUB_RESULT_TYPE = T.StructType([
 
 
 def make_scrub_udf(profile: str = PROFILE_PYTHON):
-    """Arrow-batched scrub UDF: ``text -> struct(scrubbed_text, pii_counts)``.
+    """Arrow UDF: ``text -> struct(scrubbed_text, pii_counts)``.
 
     Each row goes through :func:`scrub_string`; the rules are compiled
-    once per profile per executor Python worker (iterator-of-series form,
-    pattern from reference ``examples/pii_detection_presidio.py:117-128``).
+    once per profile per executor Python worker, and
+    :func:`functions.udf.row_udf` runs the kernel over the Arrow batches.
     """
-
-    def _scrub_batches(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = [scrub_string(t, profile) for t in batch]
-            yield pd.DataFrame(
-                {"scrubbed_text": [o[0] for o in out],
-                 "pii_counts": [o[1] for o in out]}
-            )
-
-    return F.pandas_udf(_scrub_batches, returnType=SCRUB_RESULT_TYPE)
+    return row_udf(lambda: lambda t: scrub_string(t, profile),
+                   SCRUB_RESULT_TYPE)
 
 
 def scrub_text_expr(col) -> Column:

@@ -20,13 +20,22 @@ def test_params_math():
 
 
 def test_no_false_negatives(spark):
-    index = spark.createDataFrame([(f"key-{i}",) for i in range(500)],
-                                  "k string")
-    m, k = bloom_params(500, 0.01)
-    words = bloom_build(index, "k", m, k)
-    mc = make_might_contain_udf(spark, words, m, k)
-    out = index.withColumn("hit", mc(F.col("k")))
-    assert out.filter(~F.col("hit")).count() == 0
+    strings = spark.createDataFrame([(f"key-{i}",) for i in range(500)],
+                                    "k string")
+    # a NULL in the same Arrow batch as integer keys: each key must still
+    # hash as the build's CAST(k AS STRING) ('5', never '5.0')
+    ints = spark.createDataFrame([(i,) for i in range(200)] + [(None,)],
+                                 "k bigint").coalesce(1)
+    for index, n in ((strings, 500), (ints, 200)):
+        m, k = bloom_params(n, 0.01)
+        words = bloom_build(index, "k", m, k)
+        mc = make_might_contain_udf(spark, words, m, k)
+        # filtered in Python: a `k IS NOT NULL` filter would be pushed
+        # below the UDF and keep the NULL out of the batch
+        rows = index.withColumn("hit", mc(F.col("k"))).collect()
+        keyed = [r for r in rows if r["k"] is not None]
+        assert len(keyed) == n
+        assert [r["k"] for r in keyed if not r["hit"]] == []
 
 
 def test_false_positive_rate_bounded(spark):

@@ -20,7 +20,8 @@ from discoverx_spark.functions.ngram_lm import (stupid_backoff_score,
 from discoverx_spark.lineage import ResumableRunner, write_bucketed
 from discoverx_spark.pipeline import PipelineConfig
 from discoverx_spark.queries import (q_dedup_stack_documents,
-                                     q_kneser_ney_documents)
+                                     q_kneser_ney_documents,
+                                     q_transcripts_pipeline)
 from discoverx_spark.transcripts import generate_transcripts
 
 
@@ -206,3 +207,12 @@ def test_dedup_stack_documents_in_budget(spark, tmp_path, count_jobs):
     # the three copies of base elect one survivor; the tail copy loses
     # its duplicated spans; "short" fails the length gate
     assert {r["doc_id"] for r in rows} == {0, 3, 5}
+
+
+def test_transcripts_pipeline_in_budget(spark, sf_dir, count_jobs):
+    # generated input, one fused Arrow UDF and the JVM gates in a single
+    # narrow stage: the collect is the one job
+    n, rows = count_jobs(
+        lambda: q_transcripts_pipeline(spark, sf_dir).collect())
+    assert n == 1
+    assert rows

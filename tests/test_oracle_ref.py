@@ -5,11 +5,13 @@ adversarial edge strings.  A disagreement here means a real divergence the
 flagship oracle would then adjudicate."""
 
 import pandas as pd
+from hypothesis import Phase, given, seed, settings
 from pyspark.sql import functions as F
 
 from discoverx_spark.oracle_ref import reference_decide
-from discoverx_spark.pipeline import DECISION_COLUMNS, decide
+from discoverx_spark.pipeline import DECISION_COLUMNS, PipelineConfig, decide
 from discoverx_spark.transcripts import generate_transcripts_pandas
+from test_properties import DIFFERENTIAL
 
 EDGE_TEXTS = [
     None, "", "   \n  ", "x", "the the the",
@@ -68,6 +70,43 @@ def test_reference_decide_matches_production_on_edges(spark):
     })
     pd.testing.assert_frame_equal(reference_decide(pdf),
                                   spark_decide(spark, pdf))
+
+
+def _differential_batch(n: int) -> list:
+    """``n`` draws of the driver-side differential's strategy under a
+    pinned seed: the same texts on every run."""
+    drawn = []
+
+    @seed(20261019)
+    @settings(max_examples=n, database=None, deadline=None,
+              phases=[Phase.generate])
+    @given(DIFFERENTIAL)
+    def draw(text):
+        drawn.append(text)
+
+    draw()
+    return drawn
+
+
+def test_reference_decide_matches_production_on_differential_batch(spark):
+    """The driver-side differential's inputs through one Spark
+    ``decide()``, so the Arrow boundary is covered as well as the row
+    scorer; plus turns one below, at and one above ``max_chars``."""
+    max_chars = PipelineConfig().max_chars
+    unit = "mail a@b.com, the café 中文 ١٢٣-٤٥-٦٧٨٩ "
+    long = (unit * (max_chars // len(unit) + 2))
+    texts = _differential_batch(150) + [
+        long[:n] for n in (max_chars - 1, max_chars, max_chars + 1)]
+    pdf = pd.DataFrame({
+        "conv_id": [f"d{i}" for i in range(len(texts))],
+        "turn_idx": list(range(len(texts))),
+        "role": ["user"] * len(texts),
+        "text": texts,
+    })
+    want = reference_decide(pdf)
+    pd.testing.assert_frame_equal(want, spark_decide(spark, pdf))
+    assert list(want["drop_reasons"].str.contains("too_long")[-3:]) == \
+        [False, False, True]
 
 
 def test_reference_decide_is_feature_independent():

@@ -93,6 +93,9 @@ SEPARATORS = st.sampled_from(["", " ", "  ", "\n", ".", ",", "-", ":", "/"])
 HOSTILE = st.lists(st.tuples(st.one_of(FRAGMENTS, TEXT), SEPARATORS),
                    max_size=8).map(lambda parts: "".join(
                        f + sep for f, sep in parts))
+# the inputs of the scorer-vs-reference differential (the Spark-side
+# pass in test_oracle_ref.py draws one batch from it too)
+DIFFERENTIAL = st.one_of(HOSTILE, TEXT, PIIISH, st.none())
 
 
 def _reference_features(text):
@@ -103,7 +106,7 @@ def _reference_features(text):
                              "scrubbed_text"]])
 
 
-@given(st.one_of(HOSTILE, TEXT, PIIISH, st.none()))
+@given(DIFFERENTIAL)
 @example("ssn ١٢٣-٤٥-٦٧٨٩ and (the cat")
 @settings(max_examples=400, deadline=None, derandomize=True, database=None)
 def test_row_scorer_matches_reference_decide(text):
