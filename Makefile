@@ -1,5 +1,5 @@
 # mirrors the reference's Makefile targets (reference Makefile:12-13)
-.PHONY: test bench pipeline clean
+.PHONY: test budgets bench pipeline clean
 
 # the tier-1 command of ROADMAP.md: all host CPUs, Spark scratch in /tmp
 test:
@@ -7,6 +7,13 @@ test:
 	  SPARK_LOCAL_DIRS=/tmp/spark-local; \
 	timeout -k 10 2670 python -m pytest tests/ -q \
 	  --continue-on-collection-errors -p no:cacheprovider
+
+# the exact Spark job counts alone (about a minute), same environment
+budgets:
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" \
+	  SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	python -m pytest tests/test_job_budgets.py tests/test_lineage.py -q \
+	  -p no:cacheprovider
 
 bench:
 	python bench.py

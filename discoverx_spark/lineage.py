@@ -16,31 +16,38 @@ continues).  Re-targeted at partitions of one huge table per SURVEY §7 M4:
   because every partition job is a pure function of its input split and
   the config, a resumed run produces byte-identical decisions.
 
-A partition is one observed write plus two tiny appends (the run infers the
+A partition is one Spark job, its observed write (the run infers the
 input schema once, from the first partition it reads): the decisions go
-out through :func:`pipeline.write_decisions` (the bulk path's writer) with a
-``pyspark.sql.Observation`` attached, so that single job also yields the
-row counts and per-class rates; the lineage and metrics rows are built on
-the driver from them and appended as new parquet files (append mode =
-atomic-enough commit per partition; on real object stores this maps to a
+out through :func:`pipeline.write_decisions` (the bulk path's writer) with
+a ``pyspark.sql.Observation`` attached, so that single job also yields the
+row counts and per-class rates.  The lineage and metrics rows are built on
+the driver from them and committed from the driver too, each append one
+new parquet file written through the path's Hadoop ``FileSystem`` under a
+hidden name and renamed into place, so no job runs and no two appends
+share a ``_temporary`` directory (on real object stores this maps to a
 manifest commit, Iceberg's snapshot append being the production target).
 """
 
 from __future__ import annotations
 
 import os
+import uuid
 from dataclasses import dataclass
+from datetime import datetime, timezone
 from typing import Callable, Dict, List, Optional
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from .pipeline import PipelineConfig, decide, write_decisions
 from .scrub import PII_CLASSES
 
-# row schemas as WRITTEN by _append (the timestamp is added at append
-# time); the public constants derive from them so they cannot drift
+# row schemas as built by the runner (_append adds the timestamp); the
+# public constants derive from them so they cannot drift
 _LINEAGE_ROW_SCHEMA = ("partition_id string, status string, rows_in long, "
                        "rows_kept long, rows_dropped long, error string, "
                        "snapshot_id long")
@@ -156,16 +163,36 @@ class ResumableRunner:
         return {r["partition_id"] for r in done.select("partition_id").collect()}
 
     def _append(self, path: str, rows: list, schema: str) -> None:
-        """Append driver-side rows as one parquet file.  The rows travel as
-        JVM literals: a Python list through ``createDataFrame`` costs about
-        1 s more per append on a local session (4-core host)."""
-        fields = T.StructType.fromDDL(schema).fields
-        cells = F.array(*[
-            F.struct(*[F.lit(v).cast(f.dataType).alias(f.name)
-                       for v, f in zip(row, fields)]) for row in rows])
-        (self.spark.range(1, numPartitions=1).select(F.inline(cells))
-         .withColumn("effective_timestamp", F.current_timestamp())
-         .write.mode("append").parquet(path))
+        """Append driver-side rows of the DDL ``schema`` as one parquet
+        file, stamped with the driver clock as ``effective_timestamp``.
+        No Spark job runs: the file is built with pyarrow and written
+        through the path's Hadoop ``FileSystem`` under a hidden name,
+        which Spark's file listing skips, then renamed to a unique
+        ``part-<uuid>.parquet``.  A crash before the rename leaves only
+        the hidden file, which no read sees.  ``store_schema=False``
+        keeps the file as small as Spark's own (no Arrow schema in the
+        footer)."""
+        from .scanner import _arrow_rows, _hadoop_fs
+
+        fields = T.StructType.fromDDL(
+            schema + ", effective_timestamp timestamp").fields
+        now = datetime.now(timezone.utc)
+        table = _arrow_rows(
+            [tuple(r) + (now,) for r in rows],
+            pa.schema([(f.name, to_arrow_type(f.dataType)) for f in fields]))
+        buf = pa.BufferOutputStream()
+        pq.write_table(table, buf, store_schema=False)
+        name = f"part-{uuid.uuid4()}.parquet"
+        fs, hdir = _hadoop_fs(self.spark, path)
+        Path = self.spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+        tmp, dst = Path(hdir, "." + name), Path(hdir, name)
+        out = fs.create(tmp, False)
+        try:
+            out.write(buf.getvalue().to_pybytes())
+        finally:
+            out.close()
+        if not fs.rename(tmp, dst):
+            raise IOError(f"could not rename {tmp} to {dst}")
 
     def _append_lineage(self, partition_id: str, status: str, rows_in: int,
                         rows_kept: int, error: Optional[str],

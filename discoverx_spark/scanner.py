@@ -50,6 +50,15 @@ def qcol(df: DataFrame, name: str):
     return df[_sql_ident(name)]
 
 
+def _hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` of ``path`` under the session's Hadoop
+    configuration: the file system Spark's own reader and writer would
+    use for it, looked up on the driver without a job."""
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return hpath.getFileSystem(conf), hpath
+
+
 def _read_parquet_if_exists(spark: SparkSession, path: str,
                             schema: Union[T.StructType, str, None] = None,
                             **options):
@@ -65,10 +74,8 @@ def _read_parquet_if_exists(spark: SparkSession, path: str,
     analysis, and once an ``Observation`` has run in the session that
     failure also reaches its query listener, which logs an ERROR with a
     full stack trace."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    conf = spark._jsparkSession.sessionState().newHadoopConf()
-    if not hpath.getFileSystem(conf).exists(hpath):
+    fs, hpath = _hadoop_fs(spark, path)
+    if not fs.exists(hpath):
         return None
     reader = spark.read.options(**options)
     if schema is not None:
@@ -100,10 +107,15 @@ def _local_frame(spark: SparkSession, rows: Sequence[Sequence],
     the frame carries its rows in the plan, so collecting or filtering it
     runs no Spark job (a Python list through ``createDataFrame`` becomes
     an RDD scan that costs a job per action)."""
+    return spark.createDataFrame(_arrow_rows(rows, schema))
+
+
+def _arrow_rows(rows: Sequence[Sequence], schema: pa.Schema) -> pa.Table:
+    """Driver-side row tuples as an Arrow table of ``schema``."""
     cols = list(zip(*rows)) or [()] * len(schema)
-    return spark.createDataFrame(pa.Table.from_arrays(
+    return pa.Table.from_arrays(
         [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
-        schema=schema))
+        schema=schema)
 
 
 def _sql_string(value: str) -> str:

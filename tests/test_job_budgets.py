@@ -124,6 +124,24 @@ def test_completed_partitions_is_one_job(spark, tmp_path, count_jobs):
         assert n <= 1
 
 
+def test_resume_one_partition_in_budget(spark, tmp_path, count_jobs):
+    """Resuming one pending partition is the lineage read, the input
+    footer and the decisions write; the lineage and metrics appends
+    (``_append``) are committed from the driver and start no job."""
+    src = str(tmp_path / "src")
+    write_bucketed(generate_transcripts(spark, 8, seed=3), src, n_buckets=2)
+    runner = ResumableRunner(spark, str(tmp_path / "state"))
+    out = str(tmp_path / "out")
+    runner.run(src, out, PipelineConfig(), partitions=["0"])
+    n, rep = count_jobs(lambda: runner.run(src, out, PipelineConfig(),
+                                           partitions=["0", "1"]))
+    assert (rep.skipped, rep.processed) == (["0"], ["1"])
+    assert n == 3
+    n, _ = count_jobs(lambda: runner._append_lineage("2", "failed", 0, 0,
+                                                     "boom"))
+    assert n == 0
+
+
 def test_delete_what_if_counts_in_one_job(spark, tables, count_jobs):
     dx = _dx(spark, tables)
     res = dx.scan()

@@ -4,7 +4,11 @@ Arrow UDF plus the JVM keep/drop gates) — over the full flagship input AND
 adversarial edge strings.  A disagreement here means a real divergence the
 flagship oracle would then adjudicate."""
 
+import json
+
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from hypothesis import Phase, given, seed, settings
 from pyspark.sql import functions as F
 
@@ -126,3 +130,39 @@ def test_reference_decide_is_feature_independent():
             assert not (names & banned), names & banned
         if isinstance(node, ast.Attribute):
             assert node.attr not in banned, node.attr
+
+
+def test_invalid_utf8_row_gets_a_decision(spark, tmp_path):
+    """Spark strings are unvalidated bytes: a text column written as
+    binary and read as ``string`` can hold invalid UTF-8, here a lone
+    surrogate in its CESU-8 form.  Every row still gets a decision, the
+    bad row's features are ``reference_decide``'s on the text decoded
+    with U+FFFD replacements, and its ``scrubbed_text`` (no PII, so the
+    input) passes the bytes through unchanged."""
+    bad = b"a\xed\xa0\x80b hello the world"
+    path = str(tmp_path / "bad_utf8")
+    pq.write_table(pa.table({
+        "conv_id": ["b0", "b1"], "turn_idx": pa.array([0, 1], pa.int64()),
+        "role": ["user", "user"],
+        "text": pa.array([bad, b"plain text about the weather"],
+                         pa.binary())}), path + ".parquet")
+    src = spark.read.schema(
+        "conv_id string, turn_idx long, role string, text string") \
+        .parquet(path + ".parquet")
+    rows = (decide(src)
+            .withColumn("scrubbed_text", F.col("scrubbed_text").cast("binary"))
+            .orderBy("turn_idx").collect())
+    assert [r["conv_id"] for r in rows] == ["b0", "b1"]
+    assert rows[0]["scrubbed_text"] == bad
+    want = reference_decide(pd.DataFrame({
+        "conv_id": ["b0"], "turn_idx": [0], "role": ["user"],
+        "text": [bad.decode("utf-8", errors="replace")]})).iloc[0]
+    got = rows[0]
+    assert got["lang"] == want["lang"]
+    assert got["lang_score"] == want["lang_score"]
+    assert got["perplexity"] == want["perplexity"]
+    assert got["toxicity_score"] == want["toxicity_score"]
+    assert got["keep"] == want["keep"]
+    assert ",".join(got["drop_reasons"]) == want["drop_reasons"]
+    assert json.dumps(dict(sorted(got["pii_counts"].items())),
+                      separators=(",", ":")) == want["pii_counts"]
