@@ -13,7 +13,7 @@ from .scrub import (SCRUB_RULES, PII_CLASSES, PROFILE_PYTHON, PROFILE_SQL,
                     scrub_string, make_scrub_udf, scrub_text_expr,
                     pii_count_exprs)
 from .scanner import (Scanner, ScanResult, TableRegistry, classify_scores,
-                      string_columns, SCAN_RESULT_SCHEMA)
+                      read_parquet, string_columns, SCAN_RESULT_SCHEMA)
 from .dx import DX
 from .msql import Msql, SQLRow
 from .explorer import DataExplorer
@@ -26,7 +26,7 @@ __all__ = [
     "SCRUB_RULES", "PII_CLASSES", "PROFILE_PYTHON", "PROFILE_SQL",
     "scrub_string", "make_scrub_udf", "scrub_text_expr", "pii_count_exprs",
     "Scanner", "ScanResult", "TableRegistry", "classify_scores",
-    "string_columns", "SCAN_RESULT_SCHEMA",
+    "read_parquet", "string_columns", "SCAN_RESULT_SCHEMA",
     "DX", "Msql", "SQLRow", "DataExplorer",
     "PipelineConfig", "annotate", "decide", "run_pipeline",
     "generate_transcripts", "ResumableRunner", "bucket_transcripts",

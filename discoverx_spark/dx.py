@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from . import msql as _msql
 from .explorer import DataExplorer
 from .rules import RegexRule, Rules
-from .scanner import ScanResult, Scanner, TableRegistry
+from .scanner import ScanResult, Scanner, TableRegistry, read_parquet
 
 
 class DX:
@@ -48,18 +48,17 @@ class DX:
 
     def register_parquet(self, full_name: str, path: str) -> "DX":
         """Register a parquet dataset by path.  The first read of the table
-        infers its schema from a file footer (one Spark job) and records
-        it; every later read passes that schema, so no action pays the
-        footer job again.  Registration itself reads nothing.  As with a
-        metastore entry, a change to the files' schema needs a
-        re-register."""
+        takes its schema from a file footer read on the driver
+        (:func:`scanner.read_parquet`, no Spark job) and records it; every
+        later read passes that schema.  Registration itself reads
+        nothing.  As with a metastore entry, a change to the files'
+        schema needs a re-register."""
         schema = None
 
         def read() -> DataFrame:
             nonlocal schema
-            reader = (self.spark.read if schema is None
-                      else self.spark.read.schema(schema))
-            df = reader.parquet(path)
+            df = (read_parquet(self.spark, path) if schema is None
+                  else self.spark.read.schema(schema).parquet(path))
             schema = df.schema
             return df
 

@@ -16,8 +16,9 @@ continues).  Re-targeted at partitions of one huge table per SURVEY §7 M4:
   because every partition job is a pure function of its input split and
   the config, a resumed run produces byte-identical decisions.
 
-A partition is one Spark job, its observed write (the run infers the
-input schema once, from the first partition it reads): the decisions go
+A partition is one Spark job, its observed write (the input schema comes
+from the partition's own footer, read on the driver by
+:func:`scanner.read_parquet` without a job): the decisions go
 out through :func:`pipeline.write_decisions` (the bulk path's writer) with
 a ``pyspark.sql.Observation`` attached, so that single job also yields the
 row counts and per-class rates.  The lineage and metrics rows are built on
@@ -44,6 +45,8 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type
 
 from .pipeline import PipelineConfig, decide, write_decisions
+from .scanner import (_arrow_rows, _hadoop_fs, _read_parquet_if_exists,
+                      _sql_ident, _sql_string, read_parquet)
 from .scrub import PII_CLASSES
 
 # row schemas as built by the runner (_append adds the timestamp); the
@@ -59,15 +62,14 @@ METRICS_SCHEMA = _METRICS_ROW_SCHEMA + ", effective_timestamp timestamp"
 def _partition_aggregates() -> List[Column]:
     """What one partition's decisions report, computed by the write itself:
     row counts for lineage, and per-class matched-row fraction + keep rate
-    for metrics (scanner.py:325 score semantics)."""
-    keep = F.col("keep").cast("int")
-    return [
-        F.count(F.lit(1)).alias("rows_in"),
-        F.coalesce(F.sum(keep), F.lit(0)).alias("rows_kept"),
-        *[F.avg((F.coalesce(F.col("pii_counts").getItem(c), F.lit(0)) > 0)
-                .cast("int")).alias(c) for c in PII_CLASSES],
-        F.avg(keep).alias("keep_rate"),
-    ]
+    for metrics (scanner.py:325 score semantics).  Each is one SQL
+    ``F.expr``, not a Py4J call per Column node."""
+    return [F.expr(e) for e in (
+        "count(1) AS rows_in",
+        "coalesce(sum(CAST(keep AS INT)), 0) AS rows_kept",
+        *[f"avg(CAST(coalesce(pii_counts[{_sql_string(c)}], 0) > 0 AS INT))"
+          f" AS {_sql_ident(c)}" for c in PII_CLASSES],
+        "avg(CAST(keep AS INT)) AS keep_rate")]
 
 
 def bucket_transcripts(df: DataFrame, n_buckets: int = 16) -> DataFrame:
@@ -120,8 +122,6 @@ class ResumableRunner:
         # The declared schema skips footer inference, and a state_dir
         # written before snapshot-id tracking (6-column files) reads its
         # snapshot_id as NULL next to the 7-column appends.
-        from .scanner import _read_parquet_if_exists
-
         return _read_parquet_if_exists(self.spark, self.lineage_path,
                                        schema=LINEAGE_SCHEMA)
 
@@ -132,8 +132,6 @@ class ResumableRunner:
         its metrics a second time, and latest-wins is what consumers
         want (the reprocessed values are authoritative and, the pipeline
         being deterministic, identical)."""
-        from .scanner import _read_parquet_if_exists
-
         m = _read_parquet_if_exists(self.spark, self.metrics_path,
                                     schema=METRICS_SCHEMA)
         if m is None:
@@ -172,8 +170,6 @@ class ResumableRunner:
         the hidden file, which no read sees.  ``store_schema=False``
         keeps the file as small as Spark's own (no Arrow schema in the
         footer)."""
-        from .scanner import _arrow_rows, _hadoop_fs
-
         fields = T.StructType.fromDDL(
             schema + ", effective_timestamp timestamp").fields
         now = datetime.now(timezone.utc)
@@ -221,7 +217,6 @@ class ResumableRunner:
         todo = partitions if partitions is not None else list_partitions(input_path)
         done = self.completed_partitions(snapshot_id)
         report = RunReport(processed=[], skipped=[], failed={})
-        schema = None  # inferred by the first read, then given to the rest
         for part in todo:
             if part in done:
                 report.skipped.append(part)
@@ -229,11 +224,8 @@ class ResumableRunner:
             try:
                 if fail_on is not None and fail_on(part):
                     raise RuntimeError(f"injected failure for partition {part}")
-                reader = (self.spark.read if schema is None
-                          else self.spark.read.schema(schema))
-                src = reader.parquet(
-                    os.path.join(input_path, f"part_id={part}"))
-                schema = src.schema
+                src = read_parquet(
+                    self.spark, os.path.join(input_path, f"part_id={part}"))
                 obs = Observation()
                 write_decisions(decide(src, cfg).observe(
                     obs, *_partition_aggregates()),

@@ -7,8 +7,9 @@ lifecycle (``/root/reference/discoverx/scanner.py`` +
     read transcripts
       → ONE fused Arrow UDF: PII scrub + counts, perplexity, language ID,
         toxicity, token stats        (numpy/compiled-regex, batched)
-      → keep/drop gates              (cheap JVM when-chains, shape per
-                                      reference delta_housekeeping.py:251-363)
+      → keep/drop gates              (SQL projection of CASE WHEN
+                                      arrays, shape per reference
+                                      delta_housekeeping.py:251-363)
       → stable (conv_id, turn_idx) ordering on write
 
 Output schema = FIXTURES.md §F2 ``decisions`` table.
@@ -23,10 +24,13 @@ Plan-shape engineering (measured on 5M turns, local[8] vs local[32]):
   high parallelism: every task thread ran ~20 regex passes per row while
   its Python worker was also saturated, so local[32] barely beat
   local[8].
-* Gate logic is plain column arithmetic over the struct's fields —
-  whole-stage codegen, no higher-order functions (``concat`` of
-  conditional arrays, not ``filter``/``array_compact``, which knock the
-  projection out of codegen).
+* Gate logic is a SQL projection over the struct's fields, generated
+  as strings and applied with ``selectExpr`` (as the reference builds
+  its scan SQL, scanner.py:286-345): a few Py4J calls instead of one per
+  Column node.  It stays in whole-stage codegen, with no higher-order
+  functions (``concat`` of conditional arrays, not
+  ``filter``/``array_compact``, which knock the projection out of
+  codegen).
 * Decision logic contains no timestamps or nondeterminism (resume-safety
   invariant, SURVEY §7 hard part 5).
 """
@@ -36,7 +40,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Optional, Tuple
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -44,6 +48,7 @@ from .functions.perplexity import V, _ids, ids_perplexity
 from .functions.text import (TOXIC_KEYWORDS, make_lang_classifier,
                              toxicity_pattern)
 from .functions.udf import row_udf
+from .scanner import _sql_literal, _sql_string
 from .scrub import scrub_pii
 
 DECISION_COLUMNS = [
@@ -144,7 +149,19 @@ def make_features_udf(toxicity_keywords: Optional[Tuple[str, ...]] = None,
     (boilerplate-heavy web text: large; deduped prose: none)."""
 
     def make_kernel():
-        one = make_row_scorer(toxicity_keywords)
+        scorer = make_row_scorer(toxicity_keywords)
+
+        def one(text):
+            r = scorer(text)
+            # text holding U+FFFD may be invalid UTF-8 that row_udf
+            # decoded with replacements; returned as scrubbed_text even
+            # when nothing was scrubbed, since decide's coalesce back to
+            # the input would pass the invalid bytes through.  Valid
+            # text comes back as the same bytes.
+            if r[0] is None and text is not None and "\ufffd" in text:
+                return (text,) + r[1:]
+            return r
+
         if memo_size <= 0:
             return one
         memo: dict = {}
@@ -169,49 +186,61 @@ def annotate(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> DataFrame
     return df.select("*", feats(F.col("text")).alias("_feat"))
 
 
-def _drop_reasons(cfg: PipelineConfig) -> Column:
-    # concat of conditional singleton arrays (NOT filter/array_compact):
-    # higher-order functions knock the projection out of whole-stage codegen.
-    flag = lambda cond, name: F.when(cond, F.array(F.lit(name))) \
-                               .otherwise(F.array().cast("array<string>"))
-    blank = F.col("_feat.is_blank")
-    n_tokens = F.col("_feat.n_tokens")
-    lang_ok = F.col("_feat.lang").isin(*cfg.allowed_langs)
+def _drop_reasons(cfg: PipelineConfig) -> str:
+    """The keep/drop gates as one SQL expression over :func:`annotate`'s
+    ``_feat`` struct.  Thresholds render as the literals ``F.lit`` would
+    make (:func:`scanner._sql_literal`); an empty ``allowed_langs`` is
+    ``false``, as ``isin()`` of nothing is."""
+    lit = _sql_literal
+    blank = "_feat.is_blank"
+    n_tokens = "_feat.n_tokens"
+    lang_ok = (f"(_feat.lang IN ({', '.join(map(lit, cfg.allowed_langs))}))"
+               if cfg.allowed_langs else "false")
     # substantive = long enough to judge language/fluency at all
-    substantive = ~blank & (n_tokens >= cfg.min_tokens)
-    return F.concat(
-        flag(blank, "empty"),
-        flag(~blank & (n_tokens < cfg.min_tokens), "too_short"),
-        flag(F.col("_feat.n_chars") > cfg.max_chars, "too_long"),
-        flag(substantive & ~lang_ok, "non_target_lang"),
-        flag(substantive & lang_ok
-             & (F.col("_feat.perplexity") > cfg.max_perplexity),
-             "high_perplexity"),
-        flag(F.col("_feat.tox_hits") >= cfg.max_toxicity_hits, "toxicity"),
-    )
+    substantive = f"(NOT {blank}) AND ({n_tokens} >= {lit(cfg.min_tokens)})"
+    gates = [
+        ("empty", blank),
+        ("too_short",
+         f"(NOT {blank}) AND ({n_tokens} < {lit(cfg.min_tokens)})"),
+        ("too_long", f"_feat.n_chars > {lit(cfg.max_chars)}"),
+        ("non_target_lang", f"({substantive}) AND (NOT {lang_ok})"),
+        ("high_perplexity",
+         f"(({substantive}) AND {lang_ok}) "
+         f"AND (_feat.perplexity > {lit(cfg.max_perplexity)})"),
+        ("toxicity", f"_feat.tox_hits >= {lit(cfg.max_toxicity_hits)}"),
+    ]
+    # concat of conditional singleton arrays (NOT filter/array_compact):
+    # higher-order functions knock the projection out of whole-stage codegen
+    return "concat({})".format(", ".join(
+        f"CASE WHEN {cond} THEN array({_sql_string(name)}) "
+        "ELSE CAST(array() AS array<string>) END" for name, cond in gates))
+
+
+# the decision columns over ``_feat`` and ``drop_reasons``; the reasons get
+# their own projection because ``keep`` reads them too, and codegen does
+# not share one concat between two output columns
+_DECISION_SELECT = (
+    "conv_id", "turn_idx", "role",
+    "_feat.lang AS lang",
+    "_feat.lang_score AS lang_score",
+    "_feat.perplexity AS perplexity",
+    "coalesce(_feat.pii_counts, CAST(map() AS map<string,int>)) "
+    "AS pii_counts",
+    "_feat.toxicity_score AS toxicity_score",
+    "size(drop_reasons) = 0 AS keep",
+    "drop_reasons",
+    "coalesce(_feat.scrubbed_text, text) AS scrubbed_text",
+)
 
 
 def decide(df: DataFrame, cfg: PipelineConfig = PipelineConfig()) -> DataFrame:
     """Per-turn decision table (FIXTURES.md §F2). Input shape:
-    (conv_id, turn_idx, role, text, tool, ts)."""
-    return (
-        annotate(df, cfg)
-        .withColumn("drop_reasons", _drop_reasons(cfg))
-        .select(
-            "conv_id", "turn_idx", "role",
-            F.col("_feat.lang").alias("lang"),
-            F.col("_feat.lang_score").alias("lang_score"),
-            F.col("_feat.perplexity").alias("perplexity"),
-            F.coalesce(F.col("_feat.pii_counts"),
-                       F.create_map().cast("map<string,int>"))
-            .alias("pii_counts"),
-            F.col("_feat.toxicity_score").alias("toxicity_score"),
-            (F.size("drop_reasons") == 0).alias("keep"),
-            "drop_reasons",
-            F.coalesce(F.col("_feat.scrubbed_text"), F.col("text"))
-            .alias("scrubbed_text"),
-        )
-    )
+    (conv_id, turn_idx, role, text, tool, ts).  The gates and the
+    decision columns are SQL strings, so building the plan costs a few
+    Py4J calls rather than one per Column node."""
+    return (annotate(df, cfg)
+            .selectExpr("*", f"{_drop_reasons(cfg)} AS drop_reasons")
+            .selectExpr(*_DECISION_SELECT))
 
 
 def write_decisions(decisions: DataFrame, path: str,

@@ -37,7 +37,7 @@ from .operators.dedup import (lsh_candidate_pairs, minhash_signatures,
                               simhash_expr, tokens_expr)
 from .operators.similarity import brute_force_topk, cosine_expr
 from .rules import GLOBAL_RULES, LOCALIZED_RULES
-from .scanner import classify_scores
+from .scanner import classify_scores, read_parquet
 from .scrub import SCRUB_RULES, scrub_sql_exprs, scrub_text_expr
 
 # ---------------------------------------------------------------------------
@@ -45,7 +45,7 @@ from .scrub import SCRUB_RULES, scrub_sql_exprs, scrub_text_expr
 # ---------------------------------------------------------------------------
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 # Minimum input bytes per task slot before a post-read repartition stops
@@ -1465,7 +1465,7 @@ def q_merge_upsert_roundtrip(spark, sf_dir):
     new = spark.createDataFrame(
         [(2, "b2", 21), (4, "d", 40)], "k int, name string, v int")
     merge_upsert(spark, new, path, ["k"])
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 SQL_MERGE_ROUNDTRIP = """
@@ -5393,10 +5393,11 @@ def q_dedup_stack_documents(spark, sf_dir):
     operator handoffs (column renames, null/empty propagation, case
     preservation through span rebuild) are certified, not assumed.
 
-    No stage joins back to its input: written out, the query runs 6
-    Spark jobs (the footer read, the input repartition, the fingerprint
-    aggregate, the gram window exchange, the id-keyed rebuild aggregate,
-    the write), and the write's file count follows the plan."""
+    No stage joins back to its input: written out, the query runs 5
+    Spark jobs (the input repartition, the fingerprint aggregate, the
+    gram window exchange, the id-keyed rebuild aggregate, the write; the
+    footer is read on the driver), and the write's file count follows
+    the plan."""
     from .operators.dedup import dedup_keep_best, span_dedup
     from .operators.packing import chunk_documents
     docs = _t_par(spark, sf_dir, "documents").filter(

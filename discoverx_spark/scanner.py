@@ -32,12 +32,14 @@ writes once.  The bound is the row count, tables × string columns × rules
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 from datetime import datetime, timezone
 from fnmatch import fnmatch
 from typing import Callable, Dict, List, Optional, Sequence, Union
 
 import pyarrow as pa
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -59,15 +61,88 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return hpath.getFileSystem(conf), hpath
 
 
+_SUMMARY_PREFIXES = ("_metadata", "_common_metadata")
+
+
+def _first_data_file(fs, status):
+    """The file whose footer Spark's schema inference reads for the
+    dataset at ``status``: the first data file in sorted path order, as
+    ``ParquetUtils.inferSchema`` takes it from the file index.  Names the
+    index skips (``HadoopFSUtils.shouldFilterOutPathName``: a leading
+    ``.``, a leading ``_`` without ``=``, a ``._COPYING_`` suffix) are
+    skipped.  None when there is no data file, or when a summary file
+    (``_metadata``, ``_common_metadata``) sits in a directory on the way,
+    since inference would read that instead."""
+    if not status.isDirectory():
+        return status
+    children = fs.listStatus(status.getPath())
+    keyed = []
+    for i in range(len(children)):
+        child = children[i]
+        name = child.getPath().getName()
+        if name.startswith(_SUMMARY_PREFIXES):
+            return None
+        if (name.startswith(".") or name.endswith("._COPYING_")
+                or (name.startswith("_") and "=" not in name)):
+            continue
+        # a directory's files sort as "<name>/...", a file as "<name>"
+        is_dir = child.isDirectory()
+        keyed.append((name + "/" if is_dir else name, is_dir, i))
+    for _, is_dir, i in sorted(keyed):
+        found = _first_data_file(fs, children[i]) if is_dir else children[i]
+        if found is not None:
+            return found
+    return None
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its footer job.  Spark infers
+    a parquet schema in a one-stage job (``mergeSchemasInParallel``) even
+    for one file; here the driver reads that same footer through the
+    path's Hadoop ``FileSystem`` (``ParquetFooterReader`` with
+    ``SKIP_ROW_GROUPS``) and converts it with Spark's own
+    ``ParquetFileFormat.readSchemaFromFooter`` under the session's
+    ``SQLConf``, then reads with that schema: the frame, partition
+    columns included, is the one Spark would infer, and no job runs.
+
+    Spark reads the path itself, raising its own errors and keeping its
+    own merge, when no data file is found (a missing path, an empty
+    directory), when a summary file is present, when
+    ``spark.sql.parquet.mergeSchema`` is on, or when the driver cannot
+    read the footer (not a parquet file)."""
+    fs, hpath = _hadoop_fs(spark, path)
+    if (spark.conf.get("spark.sql.parquet.mergeSchema").lower() == "true"
+            or not fs.exists(hpath)):
+        return spark.read.parquet(path)
+    status = _first_data_file(fs, fs.getFileStatus(hpath))
+    if status is None:
+        return spark.read.parquet(path)
+    jvm = spark.sparkContext._jvm
+    pkg = jvm.org.apache.spark.sql.execution.datasources.parquet
+    try:
+        meta = pkg.ParquetFooterReader.readFooter(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
+                status, fs.getConf()),
+            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter
+            .SKIP_ROW_GROUPS)
+    except Py4JJavaError:
+        return spark.read.parquet(path)
+    schema = pkg.ParquetFileFormat.readSchemaFromFooter(
+        jvm.org.apache.parquet.hadoop.Footer(status.getPath(), meta),
+        pkg.ParquetToSparkSchemaConverter(
+            spark._jsparkSession.sessionState().conf()))
+    return spark.read.schema(
+        T._parse_datatype_json_string(schema.json())).parquet(path)
+
+
 def _read_parquet_if_exists(spark: SparkSession, path: str,
-                            schema: Union[T.StructType, str, None] = None,
-                            **options):
+                            schema: Union[T.StructType, str, None] = None):
     """Read parquet, or None ONLY when the path does not exist.  Any other
     read failure (corrupt footer, permission, transient FS error) propagates
     — treating it as "first write" would silently overwrite and discard all
-    previously persisted state (MERGE-upsert must never be lossy).  A
-    declared ``schema`` skips the footer-inference job; columns it names
-    that a file lacks read as NULL.
+    previously persisted state (MERGE-upsert must never be lossy).  Without
+    a declared ``schema`` the read is :func:`read_parquet`'s; with one,
+    columns it names that a file lacks read as NULL.
 
     Existence is asked of the path's Hadoop FileSystem before any read, a
     driver-side call that runs no job: a read of a missing path fails in
@@ -77,10 +152,9 @@ def _read_parquet_if_exists(spark: SparkSession, path: str,
     fs, hpath = _hadoop_fs(spark, path)
     if not fs.exists(hpath):
         return None
-    reader = spark.read.options(**options)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
+    if schema is None:
+        return read_parquet(spark, path)
+    return spark.read.schema(schema).parquet(path)
 
 
 SCAN_RESULT_SCHEMA = T.StructType([
@@ -123,6 +197,23 @@ def _sql_string(value: str) -> str:
     (``spark.sql.parser.escapedStringLiterals=false``): every backslash
     and quote is escaped, so the parser returns ``value`` unchanged."""
     return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _sql_literal(value: Union[int, float, str]) -> str:
+    """``value`` as a Spark SQL literal of the type ``F.lit(value)``
+    gives it: an int is an INT, or a BIGINT (``L`` suffix) when it does
+    not fit; a float a DOUBLE (``D`` suffix on its shortest round-trip
+    repr; ``inf``/``nan`` as a cast, having no literal); a str goes
+    through :func:`_sql_string`."""
+    if isinstance(value, int):
+        return str(value) if -2**31 <= value < 2**31 else f"{value}L"
+    if isinstance(value, float):
+        if math.isfinite(value):
+            return f"{value!r}D"
+        return f"CAST('{value!r}' AS DOUBLE)"
+    if isinstance(value, str):
+        return _sql_string(value)
+    raise TypeError(f"no SQL literal for {value!r}")
 
 
 def _sql_ident(name: str) -> str:

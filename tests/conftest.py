@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 from pyspark.sql import SparkSession
@@ -37,3 +38,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` -> (number of Spark jobs ``fn()`` started, its
+    result)."""
+    sc = spark.sparkContext
+    jvm_sc = sc._jsc.sc()
+
+    def count(fn):
+        tag = f"budget-{uuid.uuid4().hex}"
+        sc.addJobTag(tag)
+        try:
+            out = fn()
+        finally:
+            sc.removeJobTag(tag)
+        jvm_sc.listenerBus().waitUntilEmpty()
+        return len(jvm_sc.statusTracker().getJobIdsForTag(tag)), out
+
+    return count

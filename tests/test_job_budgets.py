@@ -4,43 +4,55 @@ A Spark job costs a few hundred milliseconds on a local session whatever
 its size, and the job count repeats exactly from run to run, so each
 budget below is asserted exactly (``completed_partitions`` as a ceiling).
 Jobs are counted through a job tag read back from the status tracker.
-"""
 
-import uuid
+Driver calls are the other per-unit cost: each Py4J round trip takes about
+a millisecond, so building a plan Column by Column costs more than its
+jobs.  Those budgets are ceilings, counted by wrapping the Py4J client's
+``send_command``.
+"""
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from py4j.clientserver import ClientServerConnection
+from py4j.protocol import MEMORY_COMMAND_NAME
 
 from discoverx_spark.dx import DX
 from discoverx_spark.functions.kneser_ney import (kneser_ney_model,
                                                   kneser_ney_score)
 from discoverx_spark.functions.ngram_lm import (stupid_backoff_score,
                                                 word_ngram_counts)
-from discoverx_spark.lineage import ResumableRunner, write_bucketed
-from discoverx_spark.pipeline import PipelineConfig
+from discoverx_spark.lineage import (ResumableRunner, _partition_aggregates,
+                                     write_bucketed)
+from discoverx_spark.pipeline import PipelineConfig, decide
 from discoverx_spark.queries import (q_dedup_stack_documents,
                                      q_kneser_ney_documents,
+                                     q_stupid_backoff_documents,
                                      q_transcripts_pipeline)
 from discoverx_spark.transcripts import generate_transcripts
 
 
 @pytest.fixture
-def count_jobs(spark):
-    """``count_jobs(fn)`` -> (number of Spark jobs ``fn()`` started, its
-    result)."""
-    sc = spark.sparkContext
-    jvm_sc = sc._jsc.sc()
+def py4j_calls(monkeypatch):
+    """``py4j_calls(fn)`` -> (number of Py4J round trips ``fn()`` made,
+    its result).  Py4J's object-release commands are not counted: they
+    go out when Python collects a proxy, which may have been made before
+    ``fn`` ran, so their number varies from run to run (52 to 202 in
+    one runner partition) where every other command repeats exactly."""
+    sent = [0]
+    send = ClientServerConnection.send_command
+
+    def counted(self, command):
+        if not command.startswith(MEMORY_COMMAND_NAME):
+            sent[0] += 1
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
 
     def count(fn):
-        tag = f"budget-{uuid.uuid4().hex}"
-        sc.addJobTag(tag)
-        try:
-            out = fn()
-        finally:
-            sc.removeJobTag(tag)
-        jvm_sc.listenerBus().waitUntilEmpty()
-        return len(jvm_sc.statusTracker().getJobIdsForTag(tag)), out
+        before = sent[0]
+        out = fn()
+        return sent[0] - before, out
 
     return count
 
@@ -76,7 +88,7 @@ def test_register_parquet_reads_one_footer_per_table(spark, tables,
                                for name, path in tables.items()])
     assert n == 0                    # registration reads nothing
     n, first = count_jobs(lambda: dx.registry.get("main.crm.users"))
-    assert n == 1                    # the footer, on the first read
+    assert n == 0                    # the footer, read on the driver
     n, again = count_jobs(lambda: [dx.registry.get("main.crm.users")
                                    for _ in range(3)])
     assert n == 0                    # later reads pass the recorded schema
@@ -125,9 +137,10 @@ def test_completed_partitions_is_one_job(spark, tmp_path, count_jobs):
 
 
 def test_resume_one_partition_in_budget(spark, tmp_path, count_jobs):
-    """Resuming one pending partition is the lineage read, the input
-    footer and the decisions write; the lineage and metrics appends
-    (``_append``) are committed from the driver and start no job."""
+    """Resuming one pending partition is the lineage read and the
+    decisions write: the input footer is read on the driver, and the
+    lineage and metrics appends (``_append``) are committed from the
+    driver, so neither starts a job."""
     src = str(tmp_path / "src")
     write_bucketed(generate_transcripts(spark, 8, seed=3), src, n_buckets=2)
     runner = ResumableRunner(spark, str(tmp_path / "state"))
@@ -136,7 +149,7 @@ def test_resume_one_partition_in_budget(spark, tmp_path, count_jobs):
     n, rep = count_jobs(lambda: runner.run(src, out, PipelineConfig(),
                                            partitions=["0", "1"]))
     assert (rep.skipped, rep.processed) == (["0"], ["1"])
-    assert n == 3
+    assert n == 2
     n, _ = count_jobs(lambda: runner._append_lineage("2", "failed", 0, 0,
                                                      "boom"))
     assert n == 0
@@ -201,7 +214,16 @@ def test_kneser_ney_trains_and_scores_in_budget(spark, count_jobs, discount,
 def test_kneser_ney_documents_in_budget(spark, sf_dir, count_jobs):
     n, rows = count_jobs(
         lambda: q_kneser_ney_documents(spark, sf_dir).collect())
-    assert n == 16
+    assert n == 15
+    assert rows
+
+
+def test_stupid_backoff_documents_in_budget(spark, sf_dir, count_jobs):
+    # the scorer's build and scoring jobs over the repartitioned input;
+    # the footer is read on the driver (8 jobs when Spark inferred it)
+    n, rows = count_jobs(
+        lambda: q_stupid_backoff_documents(spark, sf_dir).collect())
+    assert n == 7
     assert rows
 
 
@@ -215,12 +237,12 @@ def test_dedup_stack_documents_in_budget(spark, tmp_path, count_jobs):
         "n_chars": pa.array([len(t) for t in texts], pa.int64())}),
         str(tmp_path / "documents.parquet"))
     out = str(tmp_path / "out")
-    # the footer read, the input repartition, the fingerprint aggregate
-    # (reused by both span-dedup branches), the gram window exchange, the
-    # id-keyed rebuild aggregate, the write
+    # the input repartition, the fingerprint aggregate (reused by both
+    # span-dedup branches), the gram window exchange, the id-keyed
+    # rebuild aggregate, the write; the footer is read on the driver
     n, _ = count_jobs(lambda: q_dedup_stack_documents(spark, str(tmp_path))
                       .write.parquet(out))
-    assert n == 6
+    assert n == 5
     rows = spark.read.parquet(out).collect()
     # the three copies of base elect one survivor; the tail copy loses
     # its duplicated spans; "short" fails the length gate
@@ -234,3 +256,34 @@ def test_transcripts_pipeline_in_budget(spark, sf_dir, count_jobs):
         lambda: q_transcripts_pipeline(spark, sf_dir).collect())
     assert n == 1
     assert rows
+
+
+def test_decide_plan_in_driver_call_budget(spark, py4j_calls):
+    """The gates and decision columns are SQL strings after the one UDF
+    column, so building ``decide()`` is a few dozen round trips, not one
+    per Column node (829 when they were built from Columns)."""
+    src = generate_transcripts(spark, 8, seed=3)
+    cfg = PipelineConfig(allowed_langs=("en", "de"))
+    n, _ = py4j_calls(lambda: decide(src, cfg))
+    assert n <= 120
+
+
+def test_partition_aggregates_in_driver_call_budget(spark, py4j_calls):
+    n, aggs = py4j_calls(_partition_aggregates)
+    assert n <= 40
+    assert len(aggs) == 10
+
+
+def test_runner_partition_in_driver_call_budget(spark, tmp_path,
+                                                py4j_calls):
+    """One partition through the runner: lineage read, driver-side
+    footer, decide, the observed write and two driver-side appends."""
+    src = str(tmp_path / "src")
+    write_bucketed(generate_transcripts(spark, 8, seed=3), src, n_buckets=2)
+    runner = ResumableRunner(spark, str(tmp_path / "state"))
+    out = str(tmp_path / "out")
+    runner.run(src, out, PipelineConfig(), partitions=["0"])
+    n, rep = py4j_calls(lambda: runner.run(src, out, PipelineConfig(),
+                                           partitions=["1"]))
+    assert rep.processed == ["1"]
+    assert n <= 450

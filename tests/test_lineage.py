@@ -89,8 +89,8 @@ def test_partition_is_one_observed_write(spark, bucketed_input, tmp_path):
     """A fresh partition is one Spark job, its decisions write: the
     lineage counts and metric scores come from an Observation on that
     write, and the lineage and metrics rows are committed from the
-    driver without a job.  The run infers the input schema once: three
-    partitions cost one footer job and three writes."""
+    driver without a job.  Each partition's input footer is read on the
+    driver as well, so three partitions cost three writes."""
     sc = spark.sparkContext
     group = "lineage-three-partitions"
     runner = ResumableRunner(spark, str(tmp_path / "state"))
@@ -104,7 +104,7 @@ def test_partition_is_one_observed_write(spark, bucketed_input, tmp_path):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker = sc.statusTracker()
     jobs = tracker.getJobIdsForGroup(group)
-    assert len(jobs) == 1 + 3, jobs
+    assert len(jobs) == 3, jobs
     stages = [tracker.getStageInfo(s) for j in jobs
               for s in tracker.getJobInfo(j).stageIds]
     assert all(s.name.startswith("parquet at") for s in stages), \

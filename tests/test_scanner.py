@@ -12,7 +12,8 @@ from pyspark.sql import functions as F
 
 from discoverx_spark.rules import Rules
 from discoverx_spark.scanner import (ScanResult, Scanner, TableRegistry,
-                                     classify_scores, string_columns)
+                                     _sql_literal, classify_scores,
+                                     string_columns)
 
 
 @pytest.fixture(scope="module")
@@ -257,3 +258,16 @@ def test_missing_path_after_observation_logs_nothing(tmp_path):
     assert proc.returncode == 0, proc.stderr
     assert proc.stdout.split() == ["3", "None", "None"]
     assert "Listener threw" not in proc.stderr
+
+
+@pytest.mark.parametrize("value", [
+    0, -2**31, 2**31 - 1, 2**31, -2**31 - 1, 2**62, 16.0, -0.0, 1e-300,
+    1.5e300, 0.1, float("inf"), float("-inf"), float("nan"), "en", "x'y\\z", ""])
+def test_sql_literal_is_f_lit(spark, value):
+    """A config value rendered into SQL text has the type and value
+    ``F.lit`` gives it (a non-finite double is a cast, which Spark types
+    as nullable)."""
+    got = spark.range(1).selectExpr(f"{_sql_literal(value)} AS v")
+    want = spark.range(1).select(F.lit(value).alias("v"))
+    assert got.schema["v"].dataType == want.schema["v"].dataType
+    assert repr(got.first()["v"]) == repr(want.first()["v"])
