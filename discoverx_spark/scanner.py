@@ -64,73 +64,76 @@ def _hadoop_fs(spark: SparkSession, path: str):
 _SUMMARY_PREFIXES = ("_metadata", "_common_metadata")
 
 
-def _first_data_file(fs, status):
-    """The file whose footer Spark's schema inference reads for the
-    dataset at ``status``: the first data file in sorted path order, as
-    ``ParquetUtils.inferSchema`` takes it from the file index.  Names the
-    index skips (``HadoopFSUtils.shouldFilterOutPathName``: a leading
-    ``.``, a leading ``_`` without ``=``, a ``._COPYING_`` suffix) are
-    skipped.  None when there is no data file, or when a summary file
-    (``_metadata``, ``_common_metadata``) sits in a directory on the way,
-    since inference would read that instead."""
-    if not status.isDirectory():
-        return status
-    children = fs.listStatus(status.getPath())
-    keyed = []
-    for i in range(len(children)):
-        child = children[i]
-        name = child.getPath().getName()
-        if name.startswith(_SUMMARY_PREFIXES):
-            return None
-        if (name.startswith(".") or name.endswith("._COPYING_")
-                or (name.startswith("_") and "=" not in name)):
-            continue
-        # a directory's files sort as "<name>/...", a file as "<name>"
-        is_dir = child.isDirectory()
-        keyed.append((name + "/" if is_dir else name, is_dir, i))
-    for _, is_dir, i in sorted(keyed):
-        found = _first_data_file(fs, children[i]) if is_dir else children[i]
-        if found is not None:
-            return found
-    return None
+def _first_data_file(spark: SparkSession, path: str):
+    """The status of the file whose footer Spark's schema inference reads
+    for the dataset at ``path``, or None when Spark must infer it itself.
+
+    Spark's own file index (``InMemoryFileIndex``) lists the leaf files,
+    so the name filter (``HadoopFSUtils.shouldFilterOutPathName``: a
+    leading ``.``, a leading ``_`` without ``=``, a ``._COPYING_``
+    suffix), the recursion into partition directories and the listing
+    job for a level wider than ``parallelPartitionDiscovery.threshold``
+    are Spark's.  The JVM joins the leaf paths into one string, so the
+    listing costs the same few Py4J round trips for one file or a
+    thousand.  As in ``ParquetUtils.inferSchema`` the first path in
+    sorted order wins (Scala orders strings by UTF-16 code unit); None
+    when there is no file, or when any leaf is a ``_metadata`` or
+    ``_common_metadata`` summary, which inference would read instead."""
+    jvm = spark.sparkContext._jvm
+    index_class = (jvm.org.apache.spark.sql.execution.datasources
+                   .InMemoryFileIndex)
+    none = jvm.scala.Option.empty()
+    leaves = index_class(
+        spark._jsparkSession,
+        jvm.PythonUtils.toSeq([jvm.org.apache.hadoop.fs.Path(path)]),
+        jvm.PythonUtils.toScalaMap({}), none,
+        getattr(index_class, "$lessinit$greater$default$5")(),  # NoopCache
+        none, none).leafFiles()
+    joined = leaves.keys().mkString("\0")
+    paths = joined.split("\0") if joined else []
+    if not paths or any(p.rsplit("/", 1)[-1].startswith(_SUMMARY_PREFIXES)
+                        for p in paths):
+        return None
+    first = min(range(len(paths)), key=lambda i: paths[i].encode("utf-16-be"))
+    return leaves.values().toSeq().apply(first)
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` without its footer job.  Spark infers
     a parquet schema in a one-stage job (``mergeSchemasInParallel``) even
-    for one file; here the driver reads that same footer through the
-    path's Hadoop ``FileSystem`` (``ParquetFooterReader`` with
-    ``SKIP_ROW_GROUPS``) and converts it with Spark's own
+    for one file; here the driver reads that same footer (the file
+    :func:`_first_data_file` picks) through Hadoop (``ParquetFooterReader``
+    with ``SKIP_ROW_GROUPS``) and converts it with Spark's own
     ``ParquetFileFormat.readSchemaFromFooter`` under the session's
     ``SQLConf``, then reads with that schema: the frame, partition
-    columns included, is the one Spark would infer, and no job runs.
+    columns included, is the one Spark would infer, and no footer job
+    runs.  The path is listed twice, here and by the read, both times
+    by Spark's own file index.
 
     Spark reads the path itself, raising its own errors and keeping its
     own merge, when no data file is found (a missing path, an empty
-    directory), when a summary file is present, when
-    ``spark.sql.parquet.mergeSchema`` is on, or when the driver cannot
-    read the footer (not a parquet file)."""
-    fs, hpath = _hadoop_fs(spark, path)
-    if (spark.conf.get("spark.sql.parquet.mergeSchema").lower() == "true"
-            or not fs.exists(hpath)):
+    directory), when a summary file is present anywhere under the path,
+    when ``spark.sql.parquet.mergeSchema`` is on, or when the driver
+    cannot read the footer (not a parquet file)."""
+    if spark.conf.get("spark.sql.parquet.mergeSchema").lower() == "true":
         return spark.read.parquet(path)
-    status = _first_data_file(fs, fs.getFileStatus(hpath))
+    status = _first_data_file(spark, path)
     if status is None:
         return spark.read.parquet(path)
     jvm = spark.sparkContext._jvm
     pkg = jvm.org.apache.spark.sql.execution.datasources.parquet
+    state = spark._jsparkSession.sessionState()
     try:
         meta = pkg.ParquetFooterReader.readFooter(
             jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
-                status, fs.getConf()),
+                status, state.newHadoopConf()),
             jvm.org.apache.parquet.format.converter.ParquetMetadataConverter
             .SKIP_ROW_GROUPS)
     except Py4JJavaError:
         return spark.read.parquet(path)
     schema = pkg.ParquetFileFormat.readSchemaFromFooter(
         jvm.org.apache.parquet.hadoop.Footer(status.getPath(), meta),
-        pkg.ParquetToSparkSchemaConverter(
-            spark._jsparkSession.sessionState().conf()))
+        pkg.ParquetToSparkSchemaConverter(state.conf()))
     return spark.read.schema(
         T._parse_datatype_json_string(schema.json())).parquet(path)
 

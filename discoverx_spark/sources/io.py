@@ -15,6 +15,8 @@ from typing import List, Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..scanner import read_parquet
+
 
 def iceberg_available(spark: SparkSession) -> bool:
     # NB: attribute access on spark._jvm never raises — py4j hands back a
@@ -29,10 +31,14 @@ def iceberg_available(spark: SparkSession) -> bool:
 
 def read_table(spark: SparkSession, path_or_name: str,
                fmt: str = "parquet") -> DataFrame:
-    """Read a table by path (parquet/csv/json) or catalog name."""
-    if "/" in path_or_name:
-        return spark.read.format(fmt).load(path_or_name)
-    return spark.read.table(path_or_name)
+    """Read a table by path (parquet/csv/json) or catalog name.  A
+    parquet path is :func:`~discoverx_spark.scanner.read_parquet`'s read:
+    its footer is read on the driver, not in a Spark job."""
+    if "/" not in path_or_name:
+        return spark.read.table(path_or_name)
+    if fmt == "parquet":
+        return read_parquet(spark, path_or_name)
+    return spark.read.format(fmt).load(path_or_name)
 
 
 def read_csv(spark: SparkSession, path: str, schema: str,

@@ -12,6 +12,8 @@ import sys
 import uuid
 
 import pytest
+from py4j.clientserver import ClientServerConnection
+from py4j.protocol import MEMORY_COMMAND_NAME
 from pyspark.sql import SparkSession
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -56,5 +58,30 @@ def count_jobs(spark):
             sc.removeJobTag(tag)
         jvm_sc.listenerBus().waitUntilEmpty()
         return len(jvm_sc.statusTracker().getJobIdsForTag(tag)), out
+
+    return count
+
+
+@pytest.fixture
+def py4j_calls(monkeypatch):
+    """``py4j_calls(fn)`` -> (number of Py4J round trips ``fn()`` made,
+    its result).  Py4J's object-release commands are not counted: they
+    go out when Python collects a proxy, which may have been made before
+    ``fn`` ran, so their number varies from run to run (52 to 202 in
+    one runner partition) where every other command repeats exactly."""
+    sent = [0]
+    send = ClientServerConnection.send_command
+
+    def counted(self, command):
+        if not command.startswith(MEMORY_COMMAND_NAME):
+            sent[0] += 1
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+
+    def count(fn):
+        before = sent[0]
+        out = fn()
+        return sent[0] - before, out
 
     return count

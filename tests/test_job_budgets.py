@@ -14,8 +14,6 @@ jobs.  Those budgets are ceilings, counted by wrapping the Py4J client's
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-from py4j.clientserver import ClientServerConnection
-from py4j.protocol import MEMORY_COMMAND_NAME
 
 from discoverx_spark.dx import DX
 from discoverx_spark.functions.kneser_ney import (kneser_ney_model,
@@ -30,31 +28,6 @@ from discoverx_spark.queries import (q_dedup_stack_documents,
                                      q_stupid_backoff_documents,
                                      q_transcripts_pipeline)
 from discoverx_spark.transcripts import generate_transcripts
-
-
-@pytest.fixture
-def py4j_calls(monkeypatch):
-    """``py4j_calls(fn)`` -> (number of Py4J round trips ``fn()`` made,
-    its result).  Py4J's object-release commands are not counted: they
-    go out when Python collects a proxy, which may have been made before
-    ``fn`` ran, so their number varies from run to run (52 to 202 in
-    one runner partition) where every other command repeats exactly."""
-    sent = [0]
-    send = ClientServerConnection.send_command
-
-    def counted(self, command):
-        if not command.startswith(MEMORY_COMMAND_NAME):
-            sent[0] += 1
-        return send(self, command)
-
-    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
-
-    def count(fn):
-        before = sent[0]
-        out = fn()
-        return sent[0] - before, out
-
-    return count
 
 
 @pytest.fixture(scope="module")

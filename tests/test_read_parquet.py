@@ -1,7 +1,8 @@
 """``scanner.read_parquet``: Spark's parquet schema inference without its
 footer job.  On every input it runs no Spark job, and its schema and rows
 equal ``spark.read.parquet``'s; where Spark must read the path itself it
-raises Spark's own errors."""
+raises Spark's own errors.  Its driver calls do not grow with the number
+of files."""
 
 import datetime
 import decimal
@@ -15,6 +16,7 @@ from py4j.protocol import Py4JJavaError
 
 from discoverx_spark.lineage import write_bucketed
 from discoverx_spark.scanner import read_parquet
+from discoverx_spark.sources import read_table
 from discoverx_spark.transcripts import generate_transcripts
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -101,6 +103,30 @@ def test_hidden_and_temp_files_are_skipped(spark, count_jobs, tmp_path):
     assert df.columns == ["a", "b"]
 
 
+def test_driver_calls_do_not_grow_with_the_file_count(spark, count_jobs,
+                                                     py4j_calls, tmp_path):
+    """Spark's file index lists the folder and hands its paths over as one
+    string, so 300 part files cost the Py4J round trips of one.  The
+    first file in sorted order, written last here, sets the schema."""
+    calls = []
+    for n in (1, 300):
+        path = tmp_path / f"files{n}"
+        path.mkdir()
+        for i in reversed(range(n)):
+            cols = {"a": [i]} if i == 0 else {"b": [str(i)]}
+            pq.write_table(pa.table(cols), str(path / f"part-{i:05d}.parquet"))
+        calls.append(py4j_calls(lambda: read_parquet(spark, str(path)))[0])
+        assert _same_as_spark(spark, count_jobs, str(path)).columns == ["a"]
+    assert calls[0] == calls[1]
+
+
+def test_read_table_reads_parquet_without_a_job(spark, count_jobs, sf_dir):
+    path = f"{sf_dir}/nation.parquet"
+    n, df = count_jobs(lambda: read_table(spark, path))
+    assert n == 0
+    assert df.schema == spark.read.parquet(path).schema
+
+
 def test_summary_file_leaves_inference_to_spark(spark, tmp_path):
     """A ``_common_metadata`` summary is what Spark's inference reads, so
     the path goes to Spark; its wider schema shows which file won."""
@@ -111,6 +137,22 @@ def test_summary_file_leaves_inference_to_spark(spark, tmp_path):
                       str(path / "_common_metadata"))
     df = read_parquet(spark, str(path))
     assert df.columns == ["a", "extra"]
+    assert df.schema == spark.read.parquet(str(path)).schema
+
+
+def test_summary_file_in_a_later_folder_leaves_inference_to_spark(spark,
+                                                                  tmp_path):
+    """Spark's inference reads a summary wherever it sits under the path,
+    here in a partition folder after the first data file."""
+    path = tmp_path / "d"
+    for part in (0, 1):
+        (path / f"part_id={part}").mkdir(parents=True)
+        pq.write_table(pa.table({"a": [part]}),
+                       str(path / f"part_id={part}" / "part-1.parquet"))
+    pq.write_metadata(pa.schema([("a", pa.int64()), ("extra", pa.string())]),
+                      str(path / "part_id=1" / "_common_metadata"))
+    df = read_parquet(spark, str(path))
+    assert df.columns == ["a", "extra", "part_id"]
     assert df.schema == spark.read.parquet(str(path)).schema
 
 
