@@ -14,7 +14,9 @@ continues).  Re-targeted at partitions of one huge table per SURVEY §7 M4:
   (``scanner.py:325`` score semantics: matched rows / rows).
 * resume — on restart, partitions whose lineage says ``done`` are skipped;
   because every partition job is a pure function of its input split and
-  the config, a resumed run produces byte-identical decisions.
+  the config, a resumed run writes the same decision rows.  The rows, not
+  the file bytes: parquet-mr records each column chunk's encoding set in
+  an order that varies between JVM runs, so compare decoded rows.
 
 A partition is one Spark job, its observed write (the input schema comes
 from the partition's own footer, read on the driver by
@@ -24,7 +26,8 @@ a ``pyspark.sql.Observation`` attached, so that single job also yields the
 row counts and per-class rates.  The lineage and metrics rows are built on
 the driver from them and committed from the driver too, each append one
 new parquet file written through the path's Hadoop ``FileSystem`` under a
-hidden name and renamed into place, so no job runs and no two appends
+hidden name and renamed into place (:func:`scanner._write_parquet`, the
+scan state's writer too), so no job runs and no two appends
 share a ``_temporary`` directory (on real object stores this maps to a
 manifest commit, Iceberg's snapshot append being the production target).
 """
@@ -32,21 +35,19 @@ manifest commit, Iceberg's snapshot append being the production target).
 from __future__ import annotations
 
 import os
-import uuid
 from dataclasses import dataclass
 from datetime import datetime, timezone
 from typing import Callable, Dict, List, Optional
 
 import pyarrow as pa
-import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type
 
 from .pipeline import PipelineConfig, decide, write_decisions
-from .scanner import (_arrow_rows, _hadoop_fs, _read_parquet_if_exists,
-                      _sql_ident, _sql_string, read_parquet)
+from .scanner import (_arrow_rows, _read_parquet_if_exists, _sql_ident,
+                      _sql_string, _write_parquet, read_parquet)
 from .scrub import PII_CLASSES
 
 # row schemas as built by the runner (_append adds the timestamp); the
@@ -162,33 +163,15 @@ class ResumableRunner:
 
     def _append(self, path: str, rows: list, schema: str) -> None:
         """Append driver-side rows of the DDL ``schema`` as one parquet
-        file, stamped with the driver clock as ``effective_timestamp``.
-        No Spark job runs: the file is built with pyarrow and written
-        through the path's Hadoop ``FileSystem`` under a hidden name,
-        which Spark's file listing skips, then renamed to a unique
-        ``part-<uuid>.parquet``.  A crash before the rename leaves only
-        the hidden file, which no read sees.  ``store_schema=False``
-        keeps the file as small as Spark's own (no Arrow schema in the
-        footer)."""
+        file, stamped with the driver clock as ``effective_timestamp``,
+        through :func:`scanner._write_parquet` (no Spark job; hidden name,
+        then renamed into place)."""
         fields = T.StructType.fromDDL(
             schema + ", effective_timestamp timestamp").fields
         now = datetime.now(timezone.utc)
-        table = _arrow_rows(
+        _write_parquet(self.spark, path, _arrow_rows(
             [tuple(r) + (now,) for r in rows],
-            pa.schema([(f.name, to_arrow_type(f.dataType)) for f in fields]))
-        buf = pa.BufferOutputStream()
-        pq.write_table(table, buf, store_schema=False)
-        name = f"part-{uuid.uuid4()}.parquet"
-        fs, hdir = _hadoop_fs(self.spark, path)
-        Path = self.spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-        tmp, dst = Path(hdir, "." + name), Path(hdir, name)
-        out = fs.create(tmp, False)
-        try:
-            out.write(buf.getvalue().to_pybytes())
-        finally:
-            out.close()
-        if not fs.rename(tmp, dst):
-            raise IOError(f"could not rename {tmp} to {dst}")
+            pa.schema([(f.name, to_arrow_type(f.dataType)) for f in fields])))
 
     def _append_lineage(self, partition_id: str, status: str, rows_in: int,
                         rows_kept: int, error: Optional[str],

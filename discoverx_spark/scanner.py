@@ -10,13 +10,16 @@ again per rule, then ``sum(value)/count(value)`` grouped by
 
 Spark-first rewrite: the same score — *fraction of sampled non-null values
 matching each rule* — is computed in a **single aggregate pass with zero
-row-explosion and zero data shuffle**: one ``avg(regexp_like(col, rx)::int)``
-expression per (string column × rule) evaluated map-side (partial hash
-aggregation), producing a 1-row frame that is then unpivoted (a 1-row
-explode, not an N-row stack).  At 100 TB this reads the table once, keeps
-everything inside whole-stage codegen, and shuffles only C×R doubles.  The
-driver thread pool fan-out/fan-in (the reference's #1 scaling bottleneck)
-disappears entirely.
+row-explosion**: one ``avg(regexp_like(col, rx)::int)`` expression per
+(string column × rule) in one aggregate, producing a 1-row frame that is
+then unpivoted (a 1-row Expand, not an N-row stack).  A row-count sample
+(the default) is one task per table that reads the table's splits in
+order and stops at N rows, with no shuffle; a full or fractional scan
+aggregates map-side and shuffles only C×R partial averages.  Either way
+the whole scan stays inside whole-stage codegen, and :class:`Scanner`
+runs every table's scan in one Spark job: the reference's driver thread
+pool fan-out/fan-in (its #1 scaling bottleneck) becomes Spark's task
+scheduling.
 
 Output schema matches the reference ScanResult
 (``scanner.py:92``): ``table_catalog, table_schema, table_name,
@@ -25,20 +28,24 @@ column_name, class_name, score``.
 Scan state is driver-local, as the reference keeps it in a small metadata
 table: a scan collects its score rows once, and :class:`ScanResult` holds
 them as a ``LocalRelation`` (an Arrow table shipped with the plan), so
-class lookups run no Spark job and ``save`` merges on the driver and
-writes once.  The bound is the row count, tables × string columns × rules
-(2 tables × 10 columns × 18 rules = 360 rows), never the data.
+class lookups run no Spark job, and ``save`` and ``load`` read and write
+the state's parquet files on the driver through the path's Hadoop
+``FileSystem``, with no Spark job either.  The bound is the row count,
+tables × string columns × rules (2 tables × 10 columns × 18 rules = 360
+rows), never the data.
 """
 
 from __future__ import annotations
 
 import math
+import uuid
 from dataclasses import dataclass
 from datetime import datetime, timezone
 from fnmatch import fnmatch
 from typing import Callable, Dict, List, Optional, Sequence, Union
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -64,21 +71,16 @@ def _hadoop_fs(spark: SparkSession, path: str):
 _SUMMARY_PREFIXES = ("_metadata", "_common_metadata")
 
 
-def _first_data_file(spark: SparkSession, path: str):
-    """The status of the file whose footer Spark's schema inference reads
-    for the dataset at ``path``, or None when Spark must infer it itself.
-
-    Spark's own file index (``InMemoryFileIndex``) lists the leaf files,
-    so the name filter (``HadoopFSUtils.shouldFilterOutPathName``: a
-    leading ``.``, a leading ``_`` without ``=``, a ``._COPYING_``
-    suffix), the recursion into partition directories and the listing
-    job for a level wider than ``parallelPartitionDiscovery.threshold``
-    are Spark's.  The JVM joins the leaf paths into one string, so the
-    listing costs the same few Py4J round trips for one file or a
-    thousand.  As in ``ParquetUtils.inferSchema`` the first path in
-    sorted order wins (Scala orders strings by UTF-16 code unit); None
-    when there is no file, or when any leaf is a ``_metadata`` or
-    ``_common_metadata`` summary, which inference would read instead."""
+def _leaf_files(spark: SparkSession, path: str):
+    """Spark's own file index (``InMemoryFileIndex``) listing of the
+    dataset at ``path``: the leaf paths in listing order, and the index's
+    path → ``FileStatus`` map in the same order.  The name filter
+    (``HadoopFSUtils.shouldFilterOutPathName``: a leading ``.``, a
+    leading ``_`` without ``=``, a ``._COPYING_`` suffix), the recursion
+    into partition directories and the listing job for a level wider
+    than ``parallelPartitionDiscovery.threshold`` are Spark's.  The JVM
+    joins the leaf paths into one string, so the listing costs the same
+    few Py4J round trips for one file or a thousand."""
     jvm = spark.sparkContext._jvm
     index_class = (jvm.org.apache.spark.sql.execution.datasources
                    .InMemoryFileIndex)
@@ -90,11 +92,33 @@ def _first_data_file(spark: SparkSession, path: str):
         getattr(index_class, "$lessinit$greater$default$5")(),  # NoopCache
         none, none).leafFiles()
     joined = leaves.keys().mkString("\0")
-    paths = joined.split("\0") if joined else []
+    return (joined.split("\0") if joined else []), leaves
+
+
+def _scala_order(p: str) -> bytes:
+    """Sort key of a path string as Scala orders strings (UTF-16 code
+    unit by code unit)."""
+    return p.encode("utf-16-be")
+
+
+def _data_files(spark: SparkSession, path: str) -> List[str]:
+    """Every data file of the dataset at ``path``, as Spark's file index
+    lists it (:func:`_leaf_files`), in sorted order."""
+    return sorted(_leaf_files(spark, path)[0], key=_scala_order)
+
+
+def _first_data_file(spark: SparkSession, path: str):
+    """The status of the file whose footer Spark's schema inference reads
+    for the dataset at ``path``, or None when Spark must infer it itself.
+    As in ``ParquetUtils.inferSchema`` the first of :func:`_leaf_files`
+    in sorted order wins; None when there is no file, or when any leaf
+    is a ``_metadata`` or ``_common_metadata`` summary, which inference
+    would read instead."""
+    paths, leaves = _leaf_files(spark, path)
     if not paths or any(p.rsplit("/", 1)[-1].startswith(_SUMMARY_PREFIXES)
                         for p in paths):
         return None
-    first = min(range(len(paths)), key=lambda i: paths[i].encode("utf-16-be"))
+    first = min(range(len(paths)), key=lambda i: _scala_order(paths[i]))
     return leaves.values().toSeq().apply(first)
 
 
@@ -195,6 +219,79 @@ def _arrow_rows(rows: Sequence[Sequence], schema: pa.Schema) -> pa.Table:
         schema=schema)
 
 
+def _write_parquet(spark: SparkSession, directory: str,
+                   table: pa.Table) -> None:
+    """Add ``table`` to the dataset at ``directory`` as one new parquet
+    file, with no Spark job: the package's one driver-side parquet
+    writer.  The file is built with pyarrow and written through the
+    path's Hadoop ``FileSystem`` under a hidden name, which Spark's file
+    listing skips, then renamed to a unique ``part-<uuid>.parquet``.  A
+    crash before the rename leaves only the hidden file, which no read
+    sees.  ``store_schema=False`` keeps the file as small as Spark's own
+    (no Arrow schema in the footer)."""
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf, store_schema=False)
+    name = f"part-{uuid.uuid4()}.parquet"
+    fs, hdir = _hadoop_fs(spark, directory)
+    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    tmp, dst = Path(hdir, "." + name), Path(hdir, name)
+    out = fs.create(tmp, False)
+    try:
+        out.write(buf.getvalue().to_pybytes())
+    finally:
+        out.close()
+    if not fs.rename(tmp, dst):
+        raise IOError(f"could not rename {tmp} to {dst}")
+
+
+def _read_state(spark: SparkSession, path: str):
+    """The scan state at ``path``, read on the driver with no Spark job:
+    ``(rows, files)``, or None when the path does not exist.  ``rows``
+    are ``_ARROW_STATE`` tuples, one per key, the newest
+    ``effective_timestamp`` winning (two generations are visible when a
+    save stopped between its rename and its deletes, or when two saves
+    ran at once); ``files`` are the data files read, which a save
+    deletes once its own file is in place.
+
+    The files are listed by Spark's file index (:func:`_data_files`)
+    and each is fetched whole through the path's Hadoop ``FileSystem``.
+    A file gone between the listing and the read was deleted by a save
+    whose newer generation holds its rows, so it is skipped.  State that
+    Spark wrote stores ``effective_timestamp`` as INT96, which pyarrow
+    reads as a naive ``timestamp[ns]`` of the UTC instant; the cast to
+    ``_ARROW_STATE`` reads it as that instant."""
+    fs, hpath = _hadoop_fs(spark, path)
+    if not fs.exists(hpath):
+        return None
+    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    files = _data_files(spark, path)
+    newest: Dict[tuple, tuple] = {}
+    for p in files:
+        try:
+            stream = fs.open(Path(p))
+        except Py4JJavaError as e:
+            if (e.java_exception.getClass().getName()
+                    == "java.io.FileNotFoundException"):
+                continue
+            raise
+        try:
+            data = stream.readAllBytes()
+        finally:
+            stream.close()
+        table = pq.read_table(pa.BufferReader(data),
+                              columns=_ARROW_STATE.names).cast(_ARROW_STATE)
+        for row in zip(*(c.to_pylist() for c in table.columns)):
+            have = newest.get(row[:5])
+            if have is None or _stamp(row) >= _stamp(have):
+                newest[row[:5]] = row
+    return list(newest.values()), files
+
+
+def _stamp(row: tuple) -> datetime:
+    """A state row's ``effective_timestamp``, a NULL one oldest."""
+    return row[6] or datetime.min.replace(tzinfo=timezone.utc)
+
+
 def _sql_string(value: str) -> str:
     """``value`` as a Spark SQL string literal under the default parser
     (``spark.sql.parser.escapedStringLiterals=false``): every backslash
@@ -250,10 +347,16 @@ def classify_scores(
     (scanner.py:325): nulls drop out of both numerator and denominator.
 
     Sampling: ``sample_size`` mirrors the reference's ``TABLESAMPLE
-    (N ROWS)`` (scanner.py:338) — a row-count limit, cheap but read-order
-    biased.  ``sample_fraction`` is the 100 TB-correct alternative:
-    seeded Bernoulli sampling pushed into the scan, unbiased across
-    partitions.  Passing both uses the fraction.
+    (N ROWS)`` (scanner.py:338): the first N rows in read order, taken
+    by one task that reads the table's splits one after another and
+    stops at N rows (``coalesce(1)`` under the ``limit``; the single
+    partition needs no exchange for the limit or the aggregate), so the
+    scan is one stage of one task, whatever the table's size.  Cheap and
+    deterministic for a given file layout, but read-order biased.
+    ``sample_fraction`` is the 100 TB-correct alternative: seeded
+    Bernoulli sampling pushed into the scan, unbiased across partitions.
+    Passing both uses the fraction; ``sample_size=None`` scans every
+    row.
     """
     cols = list(columns) if columns is not None else string_columns(df)
     if not cols:
@@ -270,22 +373,29 @@ def classify_scores(
     if sample_fraction is not None:
         scan = scan.sample(fraction=float(sample_fraction), seed=seed)
     elif sample_size is not None:
-        scan = scan.limit(int(sample_size))  # TABLESAMPLE (N ROWS) analog, scanner.py:338
+        # TABLESAMPLE (N ROWS) analog, scanner.py:338: one task reads the
+        # splits in order and stops at N rows; its single partition meets
+        # the limit's and the aggregate's AllTuples, so no exchange
+        scan = scan.coalesce(1).limit(int(sample_size))
 
-    aggs, cells = [], []
-    for ci, c in enumerate(cols):
-        for ri, r in enumerate(rules):
-            alias = f"m_{ci}_{ri}"
-            aggs.append(f"avg(CAST(regexp_like({_sql_ident(c)}, "
-                        f"{_sql_string(r.pattern)}) AS INT)) AS {alias}")
-            cells.append(f"struct({_sql_string(c)} AS column_name, "
-                         f"{_sql_string(r.name)} AS class_name, "
-                         f"CAST({alias} AS DOUBLE) AS score)")
-    return scan.selectExpr(*aggs).selectExpr(
-        f"{_sql_string(table_catalog)} AS table_catalog",
-        f"{_sql_string(table_schema)} AS table_schema",
-        f"{_sql_string(table_name)} AS table_name",
-        f"inline(array({', '.join(cells)}))")
+    cells = [f"struct({_sql_string(c)} AS column_name, "
+             f"{_sql_string(r.name)} AS class_name, "
+             f"CAST(avg(CAST(regexp_like({_sql_ident(c)}, "
+             f"{_sql_string(r.pattern)}) AS INT)) AS DOUBLE) AS score)"
+             f" AS m_{ci}_{ri}"
+             for ci, c in enumerate(cols) for ri, r in enumerate(rules)]
+    # unpivoted by an Expand (``unpivot`` with no ids: every cell is a
+    # value), not a Generate: an Expand's output partitioning is unknown,
+    # so a union of single-partition samples (Scanner.scan) stays a plain
+    # union, one task per table, where Spark would zip equal
+    # SinglePartition children into one task
+    return (scan.selectExpr(*cells).unpivot([], None, "_m", "_cell")
+            .selectExpr(f"{_sql_string(table_catalog)} AS table_catalog",
+                        f"{_sql_string(table_schema)} AS table_schema",
+                        f"{_sql_string(table_name)} AS table_name",
+                        "_cell.column_name AS column_name",
+                        "_cell.class_name AS class_name",
+                        "_cell.score AS score"))
 
 
 @dataclass
@@ -312,34 +422,36 @@ class ScanResult:
         parquet: new rows replace matching keys, others are preserved with
         their ``effective_timestamp``; new rows get the save time.
 
-        Both sides are small, so the merge runs on the driver: one job
-        reads the old state with the declared schema (none when ``path``
-        does not exist yet), one writes new ∪ kept.  The old rows are
-        collected before the overwrite starts, so rewriting the path that
-        was read is safe without a checkpoint."""
+        Both sides are small, so no Spark job runs: the old state is read
+        on the driver (:func:`_read_state`), merged there, and written as
+        one new file (:func:`_write_parquet`); only once that file is in
+        place are the files that were read deleted.  A crash at any point
+        leaves the state readable and whole: before the rename the old
+        files stand alone, after it the reader keeps each key's newest
+        row.  Two saves at once each keep every key they read, so no key
+        is lost either."""
         spark = self.df.sparkSession
         now = datetime.now(timezone.utc)
         # collect, not toArrow: toArrow runs a job even on a LocalRelation
         new = [tuple(r[k] for k in SCAN_RESULT_SCHEMA.names) + (now,)
                for r in self.df.collect()]
         replaced = {r[:5] for r in new}
-        old = _read_parquet_if_exists(spark, path, schema=SCAN_STATE_SCHEMA)
-        # toArrow here: its timestamps stay UTC instants, where collect
-        # would return naive local times to convert back
-        kept = [] if old is None else [
-            row for row in (tuple(d.values())
-                            for d in old.toArrow().to_pylist())
-            if row[:5] not in replaced]
-        (_local_frame(spark, kept + new, _ARROW_STATE)
-         .write.mode("overwrite").parquet(path))
+        old, files = _read_state(spark, path) or ([], [])
+        kept = [row for row in old if row[:5] not in replaced]
+        _write_parquet(spark, path, _arrow_rows(kept + new, _ARROW_STATE))
+        fs, _ = _hadoop_fs(spark, path)
+        Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+        for p in files:
+            fs.delete(Path(p), False)
 
     @staticmethod
     def load(spark: SparkSession, path: str) -> "ScanResult":
-        """The saved state as a driver-local result: one read with the
-        declared schema, no footer inference."""
-        table = (spark.read.schema(SCAN_STATE_SCHEMA).parquet(path)
-                 .drop("effective_timestamp").toArrow())
-        return ScanResult(df=spark.createDataFrame(table.cast(_ARROW_RESULT)))
+        """The saved state as a driver-local result, read on the driver
+        (:func:`_read_state`, one row per key) with no Spark job."""
+        state = _read_state(spark, path)
+        if state is None:
+            raise FileNotFoundError(f"no scan state at {path}")
+        return ScanResult(df=_local_frame(spark, [r[:6] for r in state[0]]))
 
 
 class TableRegistry:
@@ -442,10 +554,12 @@ class TableRegistry:
 class Scanner:
     """Multi-table scan orchestration (reference dx.scan, dx.py:100-160).
 
-    Unlike the reference there is no driver thread pool: each table is one
-    single-stage aggregate job and Spark's own task parallelism covers the
-    cluster; the per-table results are unioned and collected once (C×R
-    score rows, never the data) into a local ScanResult frame.
+    Unlike the reference there is no driver thread pool: the per-table
+    scans are unioned and collected once (C×R score rows, never the
+    data) into a local ScanResult frame, so a scan of T tables is one
+    Spark job and Spark's scheduler runs the tables side by side.  With
+    a ``sample_size`` (the default) that job is one stage of T tasks,
+    each reading one table until it has N rows.
     """
 
     def __init__(self, registry: TableRegistry,

@@ -42,22 +42,43 @@ def sf_dir():
     return SF_DIR
 
 
+def _tagged_jobs(spark, fn):
+    """(ids of the Spark jobs ``fn()`` started, its result)."""
+    sc = spark.sparkContext
+    jvm_sc = sc._jsc.sc()
+    tag = f"budget-{uuid.uuid4().hex}"
+    sc.addJobTag(tag)
+    try:
+        out = fn()
+    finally:
+        sc.removeJobTag(tag)
+    jvm_sc.listenerBus().waitUntilEmpty()
+    return list(jvm_sc.statusTracker().getJobIdsForTag(tag)), out
+
+
 @pytest.fixture
 def count_jobs(spark):
     """``count_jobs(fn)`` -> (number of Spark jobs ``fn()`` started, its
     result)."""
-    sc = spark.sparkContext
-    jvm_sc = sc._jsc.sc()
 
     def count(fn):
-        tag = f"budget-{uuid.uuid4().hex}"
-        sc.addJobTag(tag)
-        try:
-            out = fn()
-        finally:
-            sc.removeJobTag(tag)
-        jvm_sc.listenerBus().waitUntilEmpty()
-        return len(jvm_sc.statusTracker().getJobIdsForTag(tag)), out
+        ids, out = _tagged_jobs(spark, fn)
+        return len(ids), out
+
+    return count
+
+
+@pytest.fixture
+def stage_tasks(spark):
+    """``stage_tasks(fn)`` -> (number of Spark jobs ``fn()`` started, the
+    task count of each of their stages, its result)."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def count(fn):
+        ids, out = _tagged_jobs(spark, fn)
+        stages = [s for j in ids for s in tracker.getJobInfo(j).stageIds]
+        return len(ids), [tracker.getStageInfo(s).numTasks
+                          for s in stages], out
 
     return count
 

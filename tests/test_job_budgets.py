@@ -2,7 +2,7 @@
 
 A Spark job costs a few hundred milliseconds on a local session whatever
 its size, and the job count repeats exactly from run to run, so each
-budget below is asserted exactly (``completed_partitions`` as a ceiling).
+budget below is asserted exactly.
 Jobs are counted through a job tag read back from the status tracker.
 
 Driver calls are the other per-unit cost: each Py4J round trip takes about
@@ -25,6 +25,7 @@ from discoverx_spark.lineage import (ResumableRunner, _partition_aggregates,
 from discoverx_spark.pipeline import PipelineConfig, decide
 from discoverx_spark.queries import (q_dedup_stack_documents,
                                      q_kneser_ney_documents,
+                                     q_scan_documents, q_scrub_documents,
                                      q_stupid_backoff_documents,
                                      q_transcripts_pipeline)
 from discoverx_spark.transcripts import generate_transcripts
@@ -72,9 +73,11 @@ def test_scan_and_class_lookups(spark, tables, count_jobs):
     dx = _dx(spark, tables)
     for name in tables:
         dx.registry.get(name)        # footers paid up front
-    # one partial-aggregate shuffle job per table, one collect
+    # one job: each table's sample is one task that reads until it has
+    # its rows, so no limit exchange runs as a job of its own (one per
+    # table, plus the collect, when the limit read every split)
     n, res = count_jobs(dx.scan)
-    assert n == 3
+    assert n == 1
     n, classes = count_jobs(res.get_classes)
     assert n == 0
     assert ("main", "crm", "users", "email", "email") in classes
@@ -82,17 +85,18 @@ def test_scan_and_class_lookups(spark, tables, count_jobs):
     assert n == 0 and len(rows) == (3 + 1) * len(dx.rules.get_rules("*"))
 
 
-def test_save_writes_once_and_merges_in_two_jobs(spark, tables, tmp_path,
-                                                 count_jobs):
+def test_save_merge_and_load_run_no_job(spark, tables, tmp_path,
+                                        count_jobs):
+    """The scan state is read, merged and written on the driver."""
     dx = _dx(spark, tables)
     dx.scan()
     path = str(tmp_path / "state")
     n, _ = count_jobs(lambda: dx.save(path))
-    assert n == 1                    # the write; a missing path is no read
+    assert n == 0                    # a new state
     n, _ = count_jobs(lambda: dx.save(path))
-    assert n == 2                    # one declared-schema read, one write
+    assert n == 0                    # a merge
     n, loaded = count_jobs(lambda: dx.load(path))
-    assert n == 1
+    assert n == 0
     n, _ = count_jobs(loaded.get_classes)
     assert n == 0
 
@@ -106,7 +110,7 @@ def test_completed_partitions_is_one_job(spark, tmp_path, count_jobs):
     runner.run(src, str(tmp_path / "out"), PipelineConfig())
     for snapshot_id in (None, 4):
         n, _ = count_jobs(lambda: runner.completed_partitions(snapshot_id))
-        assert n <= 1
+        assert n == 1
 
 
 def test_resume_one_partition_in_budget(spark, tmp_path, count_jobs):
@@ -220,6 +224,22 @@ def test_dedup_stack_documents_in_budget(spark, tmp_path, count_jobs):
     # the three copies of base elect one survivor; the tail copy loses
     # its duplicated spans; "short" fails the length gate
     assert {r["doc_id"] for r in rows} == {0, 3, 5}
+
+
+def test_scan_documents_in_budget(spark, sf_dir, count_jobs):
+    # a full scan (no sample): the partial aggregate's shuffle and the
+    # final aggregate; the footer is read on the driver
+    n, rows = count_jobs(lambda: q_scan_documents(spark, sf_dir).collect())
+    assert n == 2
+    assert rows
+
+
+def test_scrub_documents_in_budget(spark, sf_dir, count_jobs):
+    # the one-file input's repartition to the task slots, then the
+    # narrow scrub and counts in the result stage
+    n, rows = count_jobs(lambda: q_scrub_documents(spark, sf_dir).collect())
+    assert n == 2
+    assert rows
 
 
 def test_transcripts_pipeline_in_budget(spark, sf_dir, count_jobs):

@@ -2,18 +2,25 @@
 (tb_1 fixture: the ip column scores ip_v4 = 1.0, mac column scores
 mac_address = 1.0, description scores 0.0)."""
 
+import glob
 import os
 import subprocess
 import sys
 import textwrap
+from concurrent.futures import ThreadPoolExecutor
+from datetime import datetime, timedelta, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from discoverx_spark.rules import Rules
-from discoverx_spark.scanner import (ScanResult, Scanner, TableRegistry,
-                                     _sql_literal, classify_scores,
-                                     string_columns)
+from discoverx_spark.scanner import (_ARROW_STATE, SCAN_STATE_SCHEMA,
+                                     ScanResult, Scanner, TableRegistry,
+                                     _arrow_rows, _local_frame, _read_state,
+                                     _sql_literal, _write_parquet,
+                                     classify_scores, string_columns)
 
 
 @pytest.fixture(scope="module")
@@ -83,7 +90,43 @@ def test_sample_size_limits_rows(spark):
         F.when(F.col("id") < 50, F.lit("1.2.3.4")).otherwise(F.lit("x")).alias("v"))
     rules = Rules().get_rules("ip_v4")
     d = scores_dict(classify_scores(df, rules, sample_size=10, table_name="t"))
-    assert 0.0 <= d[("v", "ip_v4")] <= 1.0
+    # the first 10 rows in read order, ids 0-9: every one an address
+    assert d[("v", "ip_v4")] == 1.0
+
+
+def test_sample_is_one_task_per_table_and_its_first_rows(spark, tmp_path,
+                                                          stage_tasks):
+    """A ``sample_size`` scan of a multi-file table is one task that
+    reads the splits in order and stops at N rows: its scores are those
+    of the first N rows the table's own read returns, and a scan of two
+    tables is one job of one stage with one task per table."""
+    n = 100
+    paths = {}
+    for name, step in (("a", 3), ("b", 5)):
+        # 6 files of 40 rows, most with their own share of addresses, so
+        # which rows the sample holds shows in the score
+        paths[name] = str(tmp_path / name)
+        os.makedirs(paths[name])
+        for k in range(6):
+            values = ["1.2.3.4" if (i + k) % step < k % step else "x"
+                      for i in range(40)]
+            pq.write_table(pa.table({"v": values}),
+                           os.path.join(paths[name], f"part-{k}.parquet"))
+    rules = Rules(locale="us").get_rules("*")
+    reg = TableRegistry()
+    for name, path in paths.items():
+        df = spark.read.parquet(path)
+        assert len(df.inputFiles()) == 6 and df.count() > n
+        want = scores_dict(classify_scores(
+            spark.createDataFrame(df.collect()[:n], df.schema), rules,
+            sample_size=None, table_name=name))
+        assert scores_dict(classify_scores(df, rules, sample_size=n,
+                                           table_name=name)) == want
+        reg.register(f"main.s.{name}", df)
+    jobs, tasks, res = stage_tasks(
+        lambda: Scanner(reg, locale="us", sample_size=n).scan())
+    assert (jobs, tasks) == (1, [len(paths)])
+    assert {r["table_name"] for r in res.df.collect()} == set(paths)
 
 
 def test_scanner_registry_and_wildcards(spark, tb_1):
@@ -222,6 +265,108 @@ def test_save_merge_keeps_old_keys_and_their_timestamps(spark, tb_1,
     assert sorted(loaded.get_classes()) == sorted(
         (k[0], k[1], k[2], k[3], k[4]) for k, (s, _) in first.items()
         if s is not None and s >= 0.95)
+
+
+def _key(table, column, klass):
+    return ("main", "s", table, column, klass)
+
+
+def _result(spark, rows):
+    """A ScanResult of ``(key, score)`` pairs."""
+    return ScanResult(df=_local_frame(spark, [k + (s,) for k, s in rows]))
+
+
+def _spark_state(spark, path):
+    """The state as Spark reads it: {key: (score, effective_timestamp)},
+    the timestamps as UTC instants."""
+    table = spark.read.schema(SCAN_STATE_SCHEMA).parquet(path).toArrow()
+    return {tuple(r.values())[:5]: (r["score"], r["effective_timestamp"])
+            for r in table.to_pylist()}
+
+
+def _loaded(spark, path):
+    return {tuple(r[:5]): r["score"]
+            for r in ScanResult.load(spark, path).df.collect()}
+
+
+def test_state_written_by_spark_loads_and_merges(spark, tmp_path):
+    """A state directory that Spark wrote (INT96 timestamps, a
+    ``_SUCCESS`` marker) reads as the same rows and instants, and a merge
+    into it keeps the instants of the keys it does not replace."""
+    path = str(tmp_path / "state")
+    t0 = datetime(2024, 5, 1, 12, 30, 15, 123456, tzinfo=timezone.utc)
+    t1 = t0 + timedelta(days=3, microseconds=7)
+    rows = [_key("t", "ip", "ip_v4") + (1.0, t0),
+            _key("t", "ip", "email") + (0.0, t1),
+            _key("u", "mac", "mac_address") + (None, t1)]
+    _local_frame(spark, rows, _ARROW_STATE).write.parquet(path)
+    written = glob.glob(os.path.join(path, "part-*.parquet"))
+    assert os.path.exists(os.path.join(path, "_SUCCESS"))
+    assert {pq.ParquetFile(f).schema.column(6).physical_type
+            for f in written} == {"INT96"}
+
+    state, files = _read_state(spark, path)
+    assert sorted(state, key=repr) == sorted(rows, key=repr)
+    assert sorted(files) == sorted("file:" + f for f in written)
+    assert _loaded(spark, path) == {r[:5]: r[5] for r in rows}
+
+    _result(spark, [(rows[0][:5], 0.5)]).save(path)
+    assert not any(os.path.exists(f) for f in written)
+    merged = _spark_state(spark, path)
+    assert sorted(_read_state(spark, path)[0], key=repr) == sorted(
+        (k + v for k, v in merged.items()), key=repr)
+    score, stamp = merged.pop(rows[0][:5])
+    assert score == 0.5 and stamp > t1
+    assert merged == {r[:5]: r[5:] for r in rows[1:]}
+
+
+def test_state_ignores_a_hidden_part_file(spark, tmp_path):
+    """A save that stopped before its rename leaves a hidden
+    ``.part-*`` file, which neither a load nor the next save reads."""
+    path = str(tmp_path / "state")
+    _result(spark, [(_key("t", "ip", "ip_v4"), 1.0)]).save(path)
+    ghost = pa.Table.from_pylist(
+        [dict(zip(_ARROW_STATE.names, _key("ghost", "c", "email") + (
+            1.0, datetime.now(timezone.utc))))], schema=_ARROW_STATE)
+    pq.write_table(ghost, os.path.join(path, ".part-left-over.parquet"))
+    assert _loaded(spark, path) == {_key("t", "ip", "ip_v4"): 1.0}
+    _result(spark, [(_key("t", "ip", "email"), 0.0)]).save(path)
+    assert _loaded(spark, path) == {_key("t", "ip", "ip_v4"): 1.0,
+                                    _key("t", "ip", "email"): 0.0}
+
+
+def test_two_state_generations_load_newest_row_per_key(spark, tmp_path):
+    """A save that stopped between its rename and its deletes leaves two
+    visible generations: each key loads once, its newest row winning,
+    and the next save folds both into one file."""
+    path = str(tmp_path / "state")
+    a, b, c = (_key("t", "ip", k) for k in ("ip_v4", "email", "mac_address"))
+    _result(spark, [(a, 1.0), (b, 1.0)]).save(path)
+    saved = _spark_state(spark, path)[a][1]
+    _write_parquet(spark, path, _arrow_rows(
+        [a + (0.25, saved + timedelta(seconds=1)),
+         b + (0.5, saved - timedelta(seconds=1)),
+         c + (0.75, saved)], _ARROW_STATE))
+    assert len(glob.glob(os.path.join(path, "part-*.parquet"))) == 2
+    state, _ = _read_state(spark, path)
+    assert len(state) == 3
+    assert _loaded(spark, path) == {a: 0.25, b: 1.0, c: 0.75}
+    d = _key("u", "ip", "ip_v4")
+    _result(spark, [(d, 0.0)]).save(path)
+    assert len(glob.glob(os.path.join(path, "part-*.parquet"))) == 1
+    assert _loaded(spark, path) == {a: 0.25, b: 1.0, c: 0.75, d: 0.0}
+
+
+def test_concurrent_saves_keep_every_key(spark, tmp_path):
+    """Saves that run at once each write the keys they read plus their
+    own, and delete only the files they read: no key is lost."""
+    path = str(tmp_path / "state")
+    results = [_result(spark, [(_key(f"t{i}", "c", "email"), i / 8)])
+               for i in range(8)]
+    with ThreadPoolExecutor(4) as pool:
+        list(pool.map(lambda r: r.save(path), results))
+    assert _loaded(spark, path) == {_key(f"t{i}", "c", "email"): i / 8
+                                    for i in range(8)}
 
 
 _MISSING_PATH_SESSION = textwrap.dedent("""
