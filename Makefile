@@ -8,13 +8,15 @@ test:
 	timeout -k 10 2670 python -m pytest tests/ -q \
 	  --continue-on-collection-errors -p no:cacheprovider
 
-# the exact Spark job counts, driver-call ceilings and the scan-state
-# tests alone (about three minutes), same environment
+# the exact Spark job counts, driver-call ceilings and the state-store
+# tests (scan state, runner lineage and metrics, the snapshot log) alone
+# (about four minutes), same environment
 budgets:
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" \
 	  SPARK_LOCAL_DIRS=/tmp/spark-local; \
 	python -m pytest tests/test_job_budgets.py tests/test_lineage.py \
-	  tests/test_read_parquet.py tests/test_scanner.py -q \
+	  tests/test_read_parquet.py tests/test_scanner.py \
+	  tests/test_state_store.py tests/test_table_format.py -q \
 	  -p no:cacheprovider
 
 bench:

@@ -24,12 +24,15 @@ from the partition's own footer, read on the driver by
 out through :func:`pipeline.write_decisions` (the bulk path's writer) with
 a ``pyspark.sql.Observation`` attached, so that single job also yields the
 row counts and per-class rates.  The lineage and metrics rows are built on
-the driver from them and committed from the driver too, each append one
-new parquet file written through the path's Hadoop ``FileSystem`` under a
-hidden name and renamed into place (:func:`scanner._write_parquet`, the
-scan state's writer too), so no job runs and no two appends
+the driver from them and kept in two :mod:`state_store` stores, written
+and read on the driver: each append is one new parquet file written under
+a hidden name and renamed into place, so no job runs and no two appends
 share a ``_temporary`` directory (on real object stores this maps to a
 manifest commit, Iceberg's snapshot append being the production target).
+Reading them back runs no job either, so a resume decides what to skip
+from rows on the driver; ``run()`` compacts each store once it holds more
+than :data:`state_store.COMPACT_AFTER` files, so that read stays a few
+files long.
 """
 
 from __future__ import annotations
@@ -42,22 +45,29 @@ from typing import Callable, Dict, List, Optional
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_type
 
+from . import state_store
 from .pipeline import PipelineConfig, decide, write_decisions
-from .scanner import (_arrow_rows, _read_parquet_if_exists, _sql_ident,
-                      _sql_string, _write_parquet, read_parquet)
+from .scanner import (_arrow_rows, _local_frame, _sql_ident, _sql_string,
+                      read_parquet)
 from .scrub import PII_CLASSES
 
-# row schemas as built by the runner (_append adds the timestamp); the
-# public constants derive from them so they cannot drift
-_LINEAGE_ROW_SCHEMA = ("partition_id string, status string, rows_in long, "
-                       "rows_kept long, rows_dropped long, error string, "
-                       "snapshot_id long")
-LINEAGE_SCHEMA = _LINEAGE_ROW_SCHEMA + ", effective_timestamp timestamp"
-_METRICS_ROW_SCHEMA = "partition_id string, class_name string, score double"
-METRICS_SCHEMA = _METRICS_ROW_SCHEMA + ", effective_timestamp timestamp"
+# the stores' row schemas (_append adds the timestamp); the public DDL
+# constants derive from them so they cannot drift
+_STAMP = ("effective_timestamp", pa.timestamp("us", tz="UTC"))
+_LINEAGE_ARROW = pa.schema([
+    ("partition_id", pa.string()), ("status", pa.string()),
+    ("rows_in", pa.int64()), ("rows_kept", pa.int64()),
+    ("rows_dropped", pa.int64()), ("error", pa.string()),
+    ("snapshot_id", pa.int64()), _STAMP])
+_METRICS_ARROW = pa.schema([
+    ("partition_id", pa.string()), ("class_name", pa.string()),
+    ("score", pa.float64()), _STAMP])
+_DDL = {pa.string(): "string", pa.int64(): "long", pa.float64(): "double",
+        _STAMP[1]: "timestamp"}
+LINEAGE_SCHEMA, METRICS_SCHEMA = (
+    ", ".join(f"{f.name} {_DDL[f.type]}" for f in s)
+    for s in (_LINEAGE_ARROW, _METRICS_ARROW))
 
 
 def _partition_aggregates() -> List[Column]:
@@ -99,6 +109,12 @@ def list_partitions(path: str) -> List[str]:
     return out
 
 
+def _done(lineage_rows, snapshot_id: Optional[int]) -> set:
+    rows = (dict(zip(_LINEAGE_ARROW.names, r)) for r in lineage_rows)
+    return {r["partition_id"] for r in rows if r["status"] == "done"
+            and (snapshot_id is None or r["snapshot_id"] == int(snapshot_id))}
+
+
 @dataclass
 class RunReport:
     processed: List[str]
@@ -116,15 +132,20 @@ class ResumableRunner:
         self.metrics_path = os.path.join(state_dir, "metrics")
 
     # -- state ------------------------------------------------------------
+    def _frame(self, path: str, schema: pa.Schema,
+               key=None) -> Optional[DataFrame]:
+        # ONLY a missing path means "fresh start": any other read failure
+        # propagates, since swallowing it would turn a transient error
+        # into a silent full reprocess (with duplicate appends)
+        got = state_store.read(self.spark, path, schema, key)
+        return None if got is None else _local_frame(self.spark, got[0],
+                                                     schema)
+
     def lineage(self) -> Optional[DataFrame]:
-        # ONLY a missing path means "fresh start" — swallowing every
-        # exception here would turn a transient read failure into a
-        # silent full reprocess (with duplicate lineage/metrics appends).
-        # The declared schema skips footer inference, and a state_dir
-        # written before snapshot-id tracking (6-column files) reads its
-        # snapshot_id as NULL next to the 7-column appends.
-        return _read_parquet_if_exists(self.spark, self.lineage_path,
-                                       schema=LINEAGE_SCHEMA)
+        """Every lineage row, as a driver-local frame (no Spark job).  A
+        state_dir written before snapshot-id tracking (6-column files)
+        reads its snapshot_id as NULL next to the 7-column appends."""
+        return self._frame(self.lineage_path, _LINEAGE_ARROW)
 
     def metrics(self, latest_only: bool = True) -> Optional[DataFrame]:
         """Per-(partition, class) metrics.  ``latest_only`` (default)
@@ -133,17 +154,14 @@ class ResumableRunner:
         its metrics a second time, and latest-wins is what consumers
         want (the reprocessed values are authoritative and, the pipeline
         being deterministic, identical)."""
-        m = _read_parquet_if_exists(self.spark, self.metrics_path,
-                                    schema=METRICS_SCHEMA)
-        if m is None:
-            return None
-        if latest_only:
-            from pyspark.sql.window import Window
-            w = Window.partitionBy("partition_id", "class_name") \
-                .orderBy(F.desc("effective_timestamp"))
-            m = (m.withColumn("_rn", F.row_number().over(w))
-                 .filter(F.col("_rn") == 1).drop("_rn"))
-        return m
+        return self._frame(self.metrics_path, _METRICS_ARROW,
+                           ("partition_id", "class_name")
+                           if latest_only else None)
+
+    def _lineage_rows(self):
+        """(lineage rows, the files they came from), read on the driver."""
+        return state_store.read(self.spark, self.lineage_path,
+                                _LINEAGE_ARROW) or ([], [])
 
     def completed_partitions(self, snapshot_id: Optional[int] = None) -> set:
         """Partitions with a 'done' lineage row.  With ``snapshot_id``
@@ -151,27 +169,18 @@ class ResumableRunner:
         (time-travel-shaped resume: when the source Iceberg/parquet table
         advances to a new snapshot, work done against older snapshots is
         stale and gets reprocessed; legacy NULL-snapshot rows likewise
-        don't count).  One job: the 'done' rows are collected and reduced
-        on the driver."""
-        lin = self.lineage()
-        if lin is None:
-            return set()
-        done = lin.filter(F.col("status") == "done")
-        if snapshot_id is not None:
-            done = done.filter(F.col("snapshot_id") == int(snapshot_id))
-        return {r["partition_id"] for r in done.select("partition_id").collect()}
+        don't count).  No Spark job: the lineage rows are read and
+        filtered on the driver."""
+        return _done(self._lineage_rows()[0], snapshot_id)
 
-    def _append(self, path: str, rows: list, schema: str) -> None:
-        """Append driver-side rows of the DDL ``schema`` as one parquet
-        file, stamped with the driver clock as ``effective_timestamp``,
-        through :func:`scanner._write_parquet` (no Spark job; hidden name,
-        then renamed into place)."""
-        fields = T.StructType.fromDDL(
-            schema + ", effective_timestamp timestamp").fields
+    def _append(self, path: str, rows: list, schema: pa.Schema) -> None:
+        """Append driver-side rows of ``schema`` as one parquet file,
+        stamped with the driver clock as ``effective_timestamp``
+        (:func:`state_store.append`: no Spark job; hidden name, then
+        renamed into place)."""
         now = datetime.now(timezone.utc)
-        _write_parquet(self.spark, path, _arrow_rows(
-            [tuple(r) + (now,) for r in rows],
-            pa.schema([(f.name, to_arrow_type(f.dataType)) for f in fields])))
+        state_store.append(self.spark, path, _arrow_rows(
+            [tuple(r) + (now,) for r in rows], schema))
 
     def _append_lineage(self, partition_id: str, status: str, rows_in: int,
                         rows_kept: int, error: Optional[str],
@@ -179,7 +188,7 @@ class ResumableRunner:
         row = [(partition_id, status, rows_in, rows_kept,
                 rows_in - rows_kept, error,
                 None if snapshot_id is None else int(snapshot_id))]
-        self._append(self.lineage_path, row, _LINEAGE_ROW_SCHEMA)
+        self._append(self.lineage_path, row, _LINEAGE_ARROW)
 
     # -- execution ----------------------------------------------------------
     def run(self, input_path: str, output_path: str,
@@ -192,13 +201,20 @@ class ResumableRunner:
         appended per partition.  ``fail_on`` is a test hook injecting
         per-partition failures (error-isolation path).
 
+        The lineage read at the start tells the run how many files the
+        lineage store holds, and each partition adds one; once that is
+        more than :data:`state_store.COMPACT_AFTER`, the run ends by
+        compacting the lineage store and the metrics store (which grows
+        by at most as many files) into one file each.
+
         ``snapshot_id`` pins the run to an input-table snapshot (e.g.
         ``ParquetTableFormat.current_snapshot_id`` or Iceberg's): resume
         then skips only partitions completed against the SAME snapshot,
         so advancing the source table invalidates stale work
         automatically."""
         todo = partitions if partitions is not None else list_partitions(input_path)
-        done = self.completed_partitions(snapshot_id)
+        lineage, files = self._lineage_rows()
+        done = _done(lineage, snapshot_id)
         report = RunReport(processed=[], skipped=[], failed={})
         for part in todo:
             if part in done:
@@ -217,7 +233,7 @@ class ResumableRunner:
                 self._append(self.metrics_path,
                              [(part, c, seen[c])
                               for c in (*PII_CLASSES, "keep_rate")],
-                             _METRICS_ROW_SCHEMA)
+                             _METRICS_ARROW)
                 self._append_lineage(part, "done", seen["rows_in"],
                                      seen["rows_kept"], None, snapshot_id)
                 report.processed.append(part)
@@ -229,4 +245,9 @@ class ResumableRunner:
                                          snapshot_id)
                 except Exception:
                     pass
+        if (len(files) + len(report.processed) + len(report.failed)
+                > state_store.COMPACT_AFTER):
+            for path, schema in ((self.lineage_path, _LINEAGE_ARROW),
+                                 (self.metrics_path, _METRICS_ARROW)):
+                state_store.compact(self.spark, path, schema)
         return report

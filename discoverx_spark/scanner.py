@@ -29,28 +29,28 @@ Scan state is driver-local, as the reference keeps it in a small metadata
 table: a scan collects its score rows once, and :class:`ScanResult` holds
 them as a ``LocalRelation`` (an Arrow table shipped with the plan), so
 class lookups run no Spark job, and ``save`` and ``load`` read and write
-the state's parquet files on the driver through the path's Hadoop
-``FileSystem``, with no Spark job either.  The bound is the row count,
-tables × string columns × rules (2 tables × 10 columns × 18 rules = 360
-rows), never the data.
+the state's parquet files on the driver (:mod:`state_store`), with no
+Spark job either.  The bound is the row count, tables × string columns ×
+rules (2 tables × 10 columns × 18 rules = 360 rows), never the data.
 """
 
 from __future__ import annotations
 
 import math
-import uuid
 from dataclasses import dataclass
 from datetime import datetime, timezone
 from fnmatch import fnmatch
 from typing import Callable, Dict, List, Optional, Sequence, Union
 
 import pyarrow as pa
-import pyarrow.parquet as pq
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from . import state_store
 from .rules import RegexRule, Rules
+from .state_store import _arrow_rows, _hadoop_fs, _leaf_files, _scala_order
+
 
 def qcol(df: DataFrame, name: str):
     """Column of ``df`` by EXACT name — backtick-quoted so special-char
@@ -59,52 +59,7 @@ def qcol(df: DataFrame, name: str):
     return df[_sql_ident(name)]
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    """``(FileSystem, Path)`` of ``path`` under the session's Hadoop
-    configuration: the file system Spark's own reader and writer would
-    use for it, looked up on the driver without a job."""
-    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
-    conf = spark._jsparkSession.sessionState().newHadoopConf()
-    return hpath.getFileSystem(conf), hpath
-
-
 _SUMMARY_PREFIXES = ("_metadata", "_common_metadata")
-
-
-def _leaf_files(spark: SparkSession, path: str):
-    """Spark's own file index (``InMemoryFileIndex``) listing of the
-    dataset at ``path``: the leaf paths in listing order, and the index's
-    path → ``FileStatus`` map in the same order.  The name filter
-    (``HadoopFSUtils.shouldFilterOutPathName``: a leading ``.``, a
-    leading ``_`` without ``=``, a ``._COPYING_`` suffix), the recursion
-    into partition directories and the listing job for a level wider
-    than ``parallelPartitionDiscovery.threshold`` are Spark's.  The JVM
-    joins the leaf paths into one string, so the listing costs the same
-    few Py4J round trips for one file or a thousand."""
-    jvm = spark.sparkContext._jvm
-    index_class = (jvm.org.apache.spark.sql.execution.datasources
-                   .InMemoryFileIndex)
-    none = jvm.scala.Option.empty()
-    leaves = index_class(
-        spark._jsparkSession,
-        jvm.PythonUtils.toSeq([jvm.org.apache.hadoop.fs.Path(path)]),
-        jvm.PythonUtils.toScalaMap({}), none,
-        getattr(index_class, "$lessinit$greater$default$5")(),  # NoopCache
-        none, none).leafFiles()
-    joined = leaves.keys().mkString("\0")
-    return (joined.split("\0") if joined else []), leaves
-
-
-def _scala_order(p: str) -> bytes:
-    """Sort key of a path string as Scala orders strings (UTF-16 code
-    unit by code unit)."""
-    return p.encode("utf-16-be")
-
-
-def _data_files(spark: SparkSession, path: str) -> List[str]:
-    """Every data file of the dataset at ``path``, as Spark's file index
-    lists it (:func:`_leaf_files`), in sorted order."""
-    return sorted(_leaf_files(spark, path)[0], key=_scala_order)
 
 
 def _first_data_file(spark: SparkSession, path: str):
@@ -162,14 +117,12 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
         T._parse_datatype_json_string(schema.json())).parquet(path)
 
 
-def _read_parquet_if_exists(spark: SparkSession, path: str,
-                            schema: Union[T.StructType, str, None] = None):
-    """Read parquet, or None ONLY when the path does not exist.  Any other
-    read failure (corrupt footer, permission, transient FS error) propagates
-    — treating it as "first write" would silently overwrite and discard all
-    previously persisted state (MERGE-upsert must never be lossy).  Without
-    a declared ``schema`` the read is :func:`read_parquet`'s; with one,
-    columns it names that a file lacks read as NULL.
+def _read_parquet_if_exists(spark: SparkSession, path: str):
+    """:func:`read_parquet`, or None ONLY when the path does not exist.
+    Any other read failure (corrupt footer, permission, transient FS
+    error) propagates — treating it as "first write" would silently
+    overwrite and discard all previously persisted state (MERGE-upsert
+    must never be lossy).
 
     Existence is asked of the path's Hadoop FileSystem before any read, a
     driver-side call that runs no job: a read of a missing path fails in
@@ -179,9 +132,7 @@ def _read_parquet_if_exists(spark: SparkSession, path: str,
     fs, hpath = _hadoop_fs(spark, path)
     if not fs.exists(hpath):
         return None
-    if schema is None:
-        return read_parquet(spark, path)
-    return spark.read.schema(schema).parquet(path)
+    return read_parquet(spark, path)
 
 
 SCAN_RESULT_SCHEMA = T.StructType([
@@ -209,87 +160,6 @@ def _local_frame(spark: SparkSession, rows: Sequence[Sequence],
     runs no Spark job (a Python list through ``createDataFrame`` becomes
     an RDD scan that costs a job per action)."""
     return spark.createDataFrame(_arrow_rows(rows, schema))
-
-
-def _arrow_rows(rows: Sequence[Sequence], schema: pa.Schema) -> pa.Table:
-    """Driver-side row tuples as an Arrow table of ``schema``."""
-    cols = list(zip(*rows)) or [()] * len(schema)
-    return pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
-        schema=schema)
-
-
-def _write_parquet(spark: SparkSession, directory: str,
-                   table: pa.Table) -> None:
-    """Add ``table`` to the dataset at ``directory`` as one new parquet
-    file, with no Spark job: the package's one driver-side parquet
-    writer.  The file is built with pyarrow and written through the
-    path's Hadoop ``FileSystem`` under a hidden name, which Spark's file
-    listing skips, then renamed to a unique ``part-<uuid>.parquet``.  A
-    crash before the rename leaves only the hidden file, which no read
-    sees.  ``store_schema=False`` keeps the file as small as Spark's own
-    (no Arrow schema in the footer)."""
-    buf = pa.BufferOutputStream()
-    pq.write_table(table, buf, store_schema=False)
-    name = f"part-{uuid.uuid4()}.parquet"
-    fs, hdir = _hadoop_fs(spark, directory)
-    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    tmp, dst = Path(hdir, "." + name), Path(hdir, name)
-    out = fs.create(tmp, False)
-    try:
-        out.write(buf.getvalue().to_pybytes())
-    finally:
-        out.close()
-    if not fs.rename(tmp, dst):
-        raise IOError(f"could not rename {tmp} to {dst}")
-
-
-def _read_state(spark: SparkSession, path: str):
-    """The scan state at ``path``, read on the driver with no Spark job:
-    ``(rows, files)``, or None when the path does not exist.  ``rows``
-    are ``_ARROW_STATE`` tuples, one per key, the newest
-    ``effective_timestamp`` winning (two generations are visible when a
-    save stopped between its rename and its deletes, or when two saves
-    ran at once); ``files`` are the data files read, which a save
-    deletes once its own file is in place.
-
-    The files are listed by Spark's file index (:func:`_data_files`)
-    and each is fetched whole through the path's Hadoop ``FileSystem``.
-    A file gone between the listing and the read was deleted by a save
-    whose newer generation holds its rows, so it is skipped.  State that
-    Spark wrote stores ``effective_timestamp`` as INT96, which pyarrow
-    reads as a naive ``timestamp[ns]`` of the UTC instant; the cast to
-    ``_ARROW_STATE`` reads it as that instant."""
-    fs, hpath = _hadoop_fs(spark, path)
-    if not fs.exists(hpath):
-        return None
-    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    files = _data_files(spark, path)
-    newest: Dict[tuple, tuple] = {}
-    for p in files:
-        try:
-            stream = fs.open(Path(p))
-        except Py4JJavaError as e:
-            if (e.java_exception.getClass().getName()
-                    == "java.io.FileNotFoundException"):
-                continue
-            raise
-        try:
-            data = stream.readAllBytes()
-        finally:
-            stream.close()
-        table = pq.read_table(pa.BufferReader(data),
-                              columns=_ARROW_STATE.names).cast(_ARROW_STATE)
-        for row in zip(*(c.to_pylist() for c in table.columns)):
-            have = newest.get(row[:5])
-            if have is None or _stamp(row) >= _stamp(have):
-                newest[row[:5]] = row
-    return list(newest.values()), files
-
-
-def _stamp(row: tuple) -> datetime:
-    """A state row's ``effective_timestamp``, a NULL one oldest."""
-    return row[6] or datetime.min.replace(tzinfo=timezone.utc)
 
 
 def _sql_string(value: str) -> str:
@@ -422,33 +292,27 @@ class ScanResult:
         parquet: new rows replace matching keys, others are preserved with
         their ``effective_timestamp``; new rows get the save time.
 
-        Both sides are small, so no Spark job runs: the old state is read
-        on the driver (:func:`_read_state`), merged there, and written as
-        one new file (:func:`_write_parquet`); only once that file is in
-        place are the files that were read deleted.  A crash at any point
-        leaves the state readable and whole: before the rename the old
-        files stand alone, after it the reader keeps each key's newest
-        row.  Two saves at once each keep every key they read, so no key
-        is lost either."""
-        spark = self.df.sparkSession
+        Both sides are small, so no Spark job runs: the state is a
+        :mod:`state_store` store keyed on those five columns, and a save
+        is its :func:`state_store.compact` with the new rows, which reads
+        the old state on the driver, merges it there and writes one new
+        file; only once that file is in place are the files that were
+        read deleted.  A crash at any point leaves the state readable and
+        whole: before the rename the old files stand alone, after it the
+        reader keeps each key's newest row.  Two saves at once each keep
+        every key they read, so no key is lost either."""
         now = datetime.now(timezone.utc)
         # collect, not toArrow: toArrow runs a job even on a LocalRelation
-        new = [tuple(r[k] for k in SCAN_RESULT_SCHEMA.names) + (now,)
-               for r in self.df.collect()]
-        replaced = {r[:5] for r in new}
-        old, files = _read_state(spark, path) or ([], [])
-        kept = [row for row in old if row[:5] not in replaced]
-        _write_parquet(spark, path, _arrow_rows(kept + new, _ARROW_STATE))
-        fs, _ = _hadoop_fs(spark, path)
-        Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-        for p in files:
-            fs.delete(Path(p), False)
+        state_store.compact(
+            self.df.sparkSession, path, _ARROW_STATE, key=_KEY,
+            rows=[tuple(r[k] for k in SCAN_RESULT_SCHEMA.names) + (now,)
+                  for r in self.df.collect()])
 
     @staticmethod
     def load(spark: SparkSession, path: str) -> "ScanResult":
         """The saved state as a driver-local result, read on the driver
-        (:func:`_read_state`, one row per key) with no Spark job."""
-        state = _read_state(spark, path)
+        (:func:`state_store.read`, one row per key) with no Spark job."""
+        state = state_store.read(spark, path, _ARROW_STATE, key=_KEY)
         if state is None:
             raise FileNotFoundError(f"no scan state at {path}")
         return ScanResult(df=_local_frame(spark, [r[:6] for r in state[0]]))

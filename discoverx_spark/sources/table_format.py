@@ -13,7 +13,9 @@ second class, not a rewrite.
 Snapshot emulation: each mutating operation appends one row to a
 ``<location>._snapshots`` parquet log kept BESIDE the table directory
 (overwrites delete the table dir wholesale; Iceberg likewise keeps
-metadata apart from data files).  Snapshot ids are dense integers
+metadata apart from data files).  The log is a :mod:`state_store` store,
+read and appended on the driver, so recording a snapshot and asking for
+the current one run no Spark job.  Snapshot ids are dense integers
 assigned ``max + 1`` — the same monotonic-id contract Iceberg's metadata
 gives, which is what time-travel-shaped resume in
 ``lineage.ResumableRunner`` keys on.
@@ -21,14 +23,20 @@ gives, which is what time-travel-shaped resume in
 
 from __future__ import annotations
 
-import os
+from datetime import datetime, timezone
 from typing import List, Optional
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_SNAPSHOT_SCHEMA = ("snapshot_id long, operation string, "
-                    "effective_timestamp timestamp")
+from .. import state_store
+from ..scanner import _arrow_rows, _local_frame, _read_parquet_if_exists
+
+_SNAPSHOT_ARROW = pa.schema([("snapshot_id", pa.int64()),
+                             ("operation", pa.string()),
+                             ("effective_timestamp",
+                              pa.timestamp("us", tz="UTC"))])
 
 
 class TableFormat:
@@ -88,28 +96,35 @@ class ParquetTableFormat(TableFormat):
         # reason)
         return location.rstrip("/") + "._snapshots"
 
-    def _next_id(self, spark: SparkSession, location: str) -> int:
-        cur = self.current_snapshot_id(spark, location)
-        return 1 if cur is None else cur + 1
-
-    def _record(self, spark: SparkSession, location: str, op: str) -> int:
-        sid = self._next_id(spark, location)
-        (spark.createDataFrame([(sid, op)], "snapshot_id long, operation string")
-         .withColumn("effective_timestamp", F.current_timestamp())
-         .coalesce(1).write.mode("append").parquet(self._log_path(location)))
-        return sid
-
-    def snapshots(self, spark: SparkSession, location: str) -> DataFrame:
+    def _log(self, spark: SparkSession, location: str):
         # ONLY a genuinely missing log means "no snapshots yet" — any
         # other read error must propagate: swallowing it would restart
         # snapshot ids at 1 and break the monotonic-id contract pinned
         # resume depends on (same policy as lineage()/merge_upsert)
-        from ..scanner import _read_parquet_if_exists
+        got = state_store.read(spark, self._log_path(location),
+                               _SNAPSHOT_ARROW)
+        return got or ([], [])
 
-        log = _read_parquet_if_exists(spark, self._log_path(location))
-        if log is None:
-            return spark.createDataFrame([], _SNAPSHOT_SCHEMA)
-        return log
+    def _record(self, spark: SparkSession, location: str, op: str) -> int:
+        rows, files = self._log(spark, location)
+        sid = max((r[0] for r in rows if r[0] is not None), default=0) + 1
+        new = [(sid, op, datetime.now(timezone.utc))]
+        log = self._log_path(location)
+        # with this row's file the log would pass COMPACT_AFTER files
+        if len(files) >= state_store.COMPACT_AFTER:
+            state_store.compact(spark, log, _SNAPSHOT_ARROW, rows=new)
+        else:
+            state_store.append(spark, log, _arrow_rows(new, _SNAPSHOT_ARROW))
+        return sid
+
+    def snapshots(self, spark: SparkSession, location: str) -> DataFrame:
+        return _local_frame(spark, self._log(spark, location)[0],
+                            _SNAPSHOT_ARROW)
+
+    def current_snapshot_id(self, spark: SparkSession,
+                            location: str) -> Optional[int]:
+        return max((r[0] for r in self._log(spark, location)[0]
+                    if r[0] is not None), default=None)
 
     # -- data ---------------------------------------------------------------
     def read(self, spark: SparkSession, location: str) -> DataFrame:
@@ -129,8 +144,6 @@ class ParquetTableFormat(TableFormat):
 
     def merge(self, spark: SparkSession, new: DataFrame, location: str,
               key_cols: List[str]) -> None:
-        from ..scanner import _read_parquet_if_exists
-
         old = _read_parquet_if_exists(spark, location)
         if old is None:
             merged = new

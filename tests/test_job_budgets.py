@@ -28,6 +28,7 @@ from discoverx_spark.queries import (q_dedup_stack_documents,
                                      q_scan_documents, q_scrub_documents,
                                      q_stupid_backoff_documents,
                                      q_transcripts_pipeline)
+from discoverx_spark.sources.table_format import ParquetTableFormat
 from discoverx_spark.transcripts import generate_transcripts
 
 
@@ -101,23 +102,27 @@ def test_save_merge_and_load_run_no_job(spark, tables, tmp_path,
     assert n == 0
 
 
-def test_completed_partitions_is_one_job(spark, tmp_path, count_jobs):
+def test_completed_partitions_runs_no_job(spark, tmp_path, count_jobs):
+    """The lineage rows are read and filtered on the driver."""
     src = str(tmp_path / "src")
     write_bucketed(generate_transcripts(spark, 8, seed=3), src, n_buckets=2)
     runner = ResumableRunner(spark, str(tmp_path / "state"))
     n, done = count_jobs(runner.completed_partitions)
     assert n == 0 and done == set()  # no lineage yet: nothing to read
-    runner.run(src, str(tmp_path / "out"), PipelineConfig())
-    for snapshot_id in (None, 4):
-        n, _ = count_jobs(lambda: runner.completed_partitions(snapshot_id))
-        assert n == 1
+    runner.run(src, str(tmp_path / "out"), PipelineConfig(),
+               snapshot_id=4)
+    for snapshot_id, want in ((None, {"0", "1"}), (4, {"0", "1"}),
+                              (5, set())):
+        n, done = count_jobs(
+            lambda: runner.completed_partitions(snapshot_id))
+        assert n == 0 and done == want
 
 
 def test_resume_one_partition_in_budget(spark, tmp_path, count_jobs):
-    """Resuming one pending partition is the lineage read and the
-    decisions write: the input footer is read on the driver, and the
-    lineage and metrics appends (``_append``) are committed from the
-    driver, so neither starts a job."""
+    """Resuming one pending partition is its decisions write alone: the
+    lineage is read on the driver, the input footer too, and the lineage
+    and metrics appends (``_append``) are committed from the driver, so
+    none of them starts a job."""
     src = str(tmp_path / "src")
     write_bucketed(generate_transcripts(spark, 8, seed=3), src, n_buckets=2)
     runner = ResumableRunner(spark, str(tmp_path / "state"))
@@ -126,10 +131,27 @@ def test_resume_one_partition_in_budget(spark, tmp_path, count_jobs):
     n, rep = count_jobs(lambda: runner.run(src, out, PipelineConfig(),
                                            partitions=["0", "1"]))
     assert (rep.skipped, rep.processed) == (["0"], ["1"])
-    assert n == 2
+    assert n == 1
     n, _ = count_jobs(lambda: runner._append_lineage("2", "failed", 0, 0,
                                                      "boom"))
     assert n == 0
+
+
+def test_snapshot_log_runs_no_job(spark, tmp_path, count_jobs):
+    """The emulated snapshot log is read and appended on the driver: an
+    append to the table is its data write alone."""
+    fmt = ParquetTableFormat()
+    loc = str(tmp_path / "t")
+    df = spark.createDataFrame([(1, "a")], "id long, v string")
+    n, _ = count_jobs(lambda: fmt.append(df, loc))
+    assert n == 1                    # the data write
+    n, sid = count_jobs(lambda: fmt._record(spark, loc, "append"))
+    assert n == 0 and sid == 2
+    n, sid = count_jobs(lambda: fmt.current_snapshot_id(spark, loc))
+    assert n == 0 and sid == 2
+    n, ops = count_jobs(lambda: [r["operation"] for r in
+                                 fmt.snapshots(spark, loc).collect()])
+    assert n == 0 and ops == ["append", "append"]
 
 
 def test_delete_what_if_counts_in_one_job(spark, tables, count_jobs):

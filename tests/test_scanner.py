@@ -15,11 +15,11 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from discoverx_spark import state_store
 from discoverx_spark.rules import Rules
-from discoverx_spark.scanner import (_ARROW_STATE, SCAN_STATE_SCHEMA,
+from discoverx_spark.scanner import (_ARROW_STATE, _KEY, SCAN_STATE_SCHEMA,
                                      ScanResult, Scanner, TableRegistry,
-                                     _arrow_rows, _local_frame, _read_state,
-                                     _sql_literal, _write_parquet,
+                                     _arrow_rows, _local_frame, _sql_literal,
                                      classify_scores, string_columns)
 
 
@@ -289,6 +289,11 @@ def _loaded(spark, path):
             for r in ScanResult.load(spark, path).df.collect()}
 
 
+def _read_state(spark, path):
+    """The state's store as a save reads it: (newest row per key, files)."""
+    return state_store.read(spark, path, _ARROW_STATE, key=_KEY)
+
+
 def test_state_written_by_spark_loads_and_merges(spark, tmp_path):
     """A state directory that Spark wrote (INT96 timestamps, a
     ``_SUCCESS`` marker) reads as the same rows and instants, and a merge
@@ -343,7 +348,7 @@ def test_two_state_generations_load_newest_row_per_key(spark, tmp_path):
     a, b, c = (_key("t", "ip", k) for k in ("ip_v4", "email", "mac_address"))
     _result(spark, [(a, 1.0), (b, 1.0)]).save(path)
     saved = _spark_state(spark, path)[a][1]
-    _write_parquet(spark, path, _arrow_rows(
+    state_store.append(spark, path, _arrow_rows(
         [a + (0.25, saved + timedelta(seconds=1)),
          b + (0.5, saved - timedelta(seconds=1)),
          c + (0.75, saved)], _ARROW_STATE))
@@ -367,6 +372,27 @@ def test_concurrent_saves_keep_every_key(spark, tmp_path):
         list(pool.map(lambda r: r.save(path), results))
     assert _loaded(spark, path) == {_key(f"t{i}", "c", "email"): i / 8
                                     for i in range(8)}
+
+
+def test_stale_listing_reads_again(spark, tmp_path, monkeypatch):
+    """A listing taken before another save replaced the state names files
+    that save has deleted; the read lists again instead of returning what
+    is left of the stale listing (nothing, here)."""
+    path = str(tmp_path / "state")
+    a, b = _key("t", "ip", "ip_v4"), _key("t", "ip", "email")
+    _result(spark, [(a, 1.0)]).save(path)
+    stale = state_store._data_files(spark, path)
+    _result(spark, [(b, 0.5)]).save(path)
+    listings = []
+    fresh = state_store._data_files
+
+    def listing(spark, path):
+        listings.append(path)
+        return stale if len(listings) == 1 else fresh(spark, path)
+
+    monkeypatch.setattr(state_store, "_data_files", listing)
+    assert _loaded(spark, path) == {a: 1.0, b: 0.5}
+    assert len(listings) == 2
 
 
 _MISSING_PATH_SESSION = textwrap.dedent("""

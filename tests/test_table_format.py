@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from discoverx_spark import state_store
 from discoverx_spark.sources.table_format import (DEFAULT_FORMAT,
                                                   IcebergTableFormat,
                                                   ParquetTableFormat,
@@ -48,6 +49,42 @@ def test_snapshots_propagates_corrupt_log_errors(spark, fmt, tmp_path):
     (log_dir / "part-00000.parquet").write_text("this is not parquet")
     with pytest.raises(Exception):
         fmt.snapshots(spark, loc).collect()
+
+
+def test_spark_written_snapshot_log_reads_as_before(spark, fmt, tmp_path):
+    """A log that Spark appended (one file per record, INT96 timestamps,
+    ``_SUCCESS`` markers) reads as the same rows, and new records
+    continue its ids."""
+    loc = str(tmp_path / "t")
+    for sid, op in ((1, "overwrite"), (2, "append")):
+        (spark.createDataFrame([(sid, op)],
+                               "snapshot_id long, operation string")
+         .withColumn("effective_timestamp", F.current_timestamp())
+         .coalesce(1).write.mode("append").parquet(fmt._log_path(loc)))
+    legacy = sorted(map(tuple, spark.read.parquet(fmt._log_path(loc))
+                        .collect()))
+    assert fmt.current_snapshot_id(spark, loc) == 2
+    assert sorted(map(tuple, fmt.snapshots(spark, loc).collect())) == legacy
+    fmt.append(spark.createDataFrame([(1,)], "id long"), loc)
+    assert fmt.current_snapshot_id(spark, loc) == 3
+    assert [r["operation"] for r in fmt.snapshots(spark, loc)
+            .orderBy("snapshot_id").collect()] == [
+                "overwrite", "append", "append"]
+
+
+def test_snapshot_log_compacts_past_the_file_bound(spark, fmt, tmp_path):
+    """Each record appends one file until the log would pass
+    ``COMPACT_AFTER`` files; that record folds the log into one."""
+    loc = str(tmp_path / "t")
+    log = fmt._log_path(loc)
+    for i in range(state_store.COMPACT_AFTER):
+        assert fmt._record(spark, loc, "append") == i + 1
+    assert len(state_store._data_files(spark, log)) == state_store.COMPACT_AFTER
+    assert fmt._record(spark, loc, "merge") == state_store.COMPACT_AFTER + 1
+    assert len(state_store._data_files(spark, log)) == 1
+    assert [r["snapshot_id"] for r in fmt.snapshots(spark, loc)
+            .orderBy("snapshot_id").collect()] == list(
+                range(1, state_store.COMPACT_AFTER + 2))
 
 
 def test_merge_contract_and_idempotency(spark, fmt, tmp_path):
